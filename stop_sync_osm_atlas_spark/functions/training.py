@@ -99,6 +99,9 @@ def train_models_fused(
     # boundary — a round-robin shuffle of slim (text, label) rows costs
     # ~nothing next to the per-doc n-gram loop it parallelizes. Guarded:
     # an already-wide corpus scan (the 100 TB case) is never reshuffled.
+    # NOTE .rdd.getNumPartitions() is not a free probe under AQE: it
+    # builds the final plan, which runs any pre-final (shuffle) stages
+    # of ``df`` as jobs before the training pass.
     par = src.sparkSession.sparkContext.defaultParallelism
     if src.rdd.getNumPartitions() < par:
         src = src.repartition(par)

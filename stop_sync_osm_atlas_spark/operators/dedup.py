@@ -72,7 +72,7 @@ def shingle_rows(
     id_col: str = "doc_id",
     distinct: bool = True,
 ) -> DataFrame:
-    """Distinct (id, shingle) rows via posexplode + lead window.
+    """(id, shingle) rows via posexplode + lead window, distinct by default.
 
     ``distinct=False`` skips the per-doc dedup exchange and returns one
     row per gram OCCURRENCE — for consumers whose aggregation is
@@ -176,7 +176,10 @@ def ngram_jaccard_pairs(
     # window + distinct (+ df-cap window) chain would run once per
     # consumer. localCheckpoint(eager=False) — the repo-wide diamond
     # rule: one slim (id, shingle) RDD feeds all three, blocks freed by
-    # the ContextCleaner, laziness keeps construction job-free.
+    # the ContextCleaner. eager=False defers only the FINAL stage: under
+    # AQE building the checkpoint already runs the pre-final shuffle
+    # stages (window + distinct exchanges), so construction is not
+    # job-free.
     sh = sh.localCheckpoint(eager=False)
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
@@ -297,9 +300,12 @@ def minhash_lsh_pairs(
     # subtrees instead of reusing them — each consumer would re-run the
     # shingle explode + 16-min aggregate. localCheckpoint(eager=False),
     # the repo-wide diamond pattern: one slim (id, sig[16]) RDD feeds
-    # every consumer, blocks freed by the ContextCleaner, laziness
-    # keeps construction job-free. (Measured at sf0.1: q26 2.3 -> 2.0 s
-    # even WITH the hot-key guard below added.)
+    # every consumer, blocks freed by the ContextCleaner. eager=False
+    # defers only the FINAL stage: under AQE building the checkpoint
+    # already runs the pre-final shuffle stage (scan + explode into the
+    # lead window's exchange), so construction is not job-free.
+    # (Measured at sf0.1: q26 2.3 -> 2.0 s even WITH the hot-key guard
+    # below added.)
     sigs = minhash_signatures(
         docs, n=n, text_col=text_col, id_col=id_col
     ).localCheckpoint(eager=False)

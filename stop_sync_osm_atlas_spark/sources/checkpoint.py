@@ -20,7 +20,7 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -66,15 +66,20 @@ class CheckpointedWriter:
                 out.add(int(f[len("group=") : -len(".json")]))
         return out
 
+    def _commit(self, group: int, rows: int) -> None:
+        with open(self._marker(group) + ".tmp", "w") as fh:
+            json.dump({"group": group, "rows": rows}, fh)
+        os.rename(self._marker(group) + ".tmp", self._marker(group))
+
     def write_group(self, decisions: DataFrame, group: int) -> int:
         """Write one partition group atomically; returns row count.
 
-        The count comes from re-reading the written parquet (footer
-        metadata — no recompute of the decisions plan).
+        The count is observed on the write itself (no re-read job).
         """
+        obs = Observation()
         part = decisions.where(
             F.pmod(F.col("part_bucket"), F.lit(self.n_groups)) == group
-        )
+        ).observe(obs, F.count(F.lit(1)).alias("rows"))
         # tmp lives OUTSIDE root/decisions so a dir orphaned by a
         # mid-write crash can never leak into read_all's partition
         # discovery: the old in-place 'group=N.tmp' was discovered as
@@ -88,12 +93,10 @@ class CheckpointedWriter:
         os.makedirs(os.path.join(self.root, "decisions"), exist_ok=True)
         shutil.rmtree(tmp, ignore_errors=True)
         part.write.mode("overwrite").parquet(tmp)
-        n = part.sparkSession.read.parquet(tmp).count()
+        n = obs.get["rows"]
         shutil.rmtree(final, ignore_errors=True)
         os.rename(tmp, final)
-        with open(self._marker(group) + ".tmp", "w") as fh:
-            json.dump({"group": group, "rows": n}, fh)
-        os.rename(self._marker(group) + ".tmp", self._marker(group))
+        self._commit(group, n)
         return n
 
     def run(self, decisions: DataFrame) -> dict[int, int]:
@@ -106,26 +109,31 @@ class CheckpointedWriter:
         ``write_group``. Group-level atomicity is preserved (a crash
         mid-promotion leaves promoted groups committed and the rest
         recomputed on resume); the n-actions-over-a-persisted-frame
-        pattern this replaces cost one full pass per group.
+        pattern this replaces cost one full pass per group. Per-group
+        row counts are observed on that same write, so the job count
+        does not grow with ``n_groups``.
         """
         done = self.committed_groups()
         todo = [g for g in range(self.n_groups) if g not in done]
         counts: dict[int, int] = {}
         if not todo:
             return counts
-        spark = decisions.sparkSession
         tmp_root = os.path.join(self.root, "decisions.tmp")
         shutil.rmtree(tmp_root, ignore_errors=True)
+        obs = Observation()
+        grp = F.col("_commit_group")
         (
             decisions.withColumn(
                 "_commit_group",
                 F.pmod(F.col("part_bucket"), F.lit(self.n_groups)),
             )
-            .where(F.col("_commit_group").isin(todo))
+            .where(grp.isin(todo))
+            .observe(obs, *[F.count_if(grp == g).alias(str(g)) for g in todo])
             .write.mode("overwrite")
             .partitionBy("_commit_group")
             .parquet(tmp_root)
         )
+        rows = obs.get
         os.makedirs(os.path.join(self.root, "decisions"), exist_ok=True)
         for g in todo:
             src = os.path.join(tmp_root, f"_commit_group={g}")
@@ -133,16 +141,12 @@ class CheckpointedWriter:
             shutil.rmtree(final, ignore_errors=True)
             if os.path.isdir(src):
                 os.rename(src, final)
-                n = spark.read.parquet(final).count()
             else:
                 # the group matched no rows: commit it empty so a
                 # resume does not recompute the plan for nothing
                 os.makedirs(final, exist_ok=True)
-                n = 0
-            with open(self._marker(g) + ".tmp", "w") as fh:
-                json.dump({"group": g, "rows": n}, fh)
-            os.rename(self._marker(g) + ".tmp", self._marker(g))
-            counts[g] = n
+            counts[g] = rows[str(g)]
+            self._commit(g, counts[g])
         shutil.rmtree(tmp_root, ignore_errors=True)
         return counts
 

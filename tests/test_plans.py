@@ -296,3 +296,50 @@ def test_fused_training_single_scan_single_shuffle(spark, fixture_paths):
     scan = [seg for seg in plan.split("\n\n") if "Scan parquet" in seg][0]
     assert "phash" not in scan and "bytes" not in scan, scan
     assert "partial_sum" in plan, plan  # map-side combine before the shuffle
+
+
+def test_repeated_runs_compile_no_new_class(spark, fixture_paths, nd_kwargs):
+    """A steady-state re-run of a pipeline must reuse every generated
+    class: get_spark sizes Spark's generated-class LRU
+    (spark.sql.codegen.cache.maxEntries) above one run's catalogue. At
+    the default 100 entries a run of either plan below evicted its own
+    classes before their next use, so each second run re-compiled its
+    whole plan (run alone: 168 classes for prepare_corpus + bins.count,
+    80 for run_cascade)."""
+    from stop_sync_osm_atlas_spark.operators.cascade import run_cascade
+    from stop_sync_osm_atlas_spark.plans.corpus import prepare_corpus
+    from stop_sync_osm_atlas_spark.schemas import PAIRS_SCHEMA
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    pairs = spark.read.schema(PAIRS_SCHEMA).parquet(fixture_paths["pairs"])
+
+    def corpus():
+        decisions, bins = prepare_corpus(docs)
+        bins.count()
+        decisions.unpersist()
+
+    def cascade():
+        run_cascade(pairs, neardup_kwargs=nd_kwargs).write.format(
+            "noop"
+        ).mode("overwrite").save()
+
+    def second_run_compiles(run) -> int:
+        run()
+        before = compiles.getCount()
+        run()
+        return compiles.getCount() - before
+
+    assert second_run_compiles(corpus) == 0
+    # The near-dup bucket self-join reads one cached table on both
+    # sides, and AQE broadcasts whichever side's cache stage finishes
+    # first: a race that yields one of two plans (a few classes each)
+    # per run. Auto-broadcast off keeps the plan fixed, so the count
+    # measures the class cache and not that race.
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        assert second_run_compiles(cascade) == 0
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

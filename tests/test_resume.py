@@ -93,11 +93,13 @@ def test_run_executes_plan_once(spark, tmp_path):
     """The batch commit must execute the decisions plan ONCE — the old
     writer ran one action per group (4 full passes here). An
     accumulator inside the plan counts how many rows ever flow through
-    it; per-group footer counts must not touch the plan at all."""
+    it; per-group counts must not touch the plan at all, and must not
+    cost jobs per group either (the job count is flat in n_groups)."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    acc = spark.sparkContext.accumulator(0)
+    sc = spark.sparkContext
+    acc = sc.accumulator(0)
 
     @F.pandas_udf(T.LongType())
     def traced(col):
@@ -117,7 +119,20 @@ def test_run_executes_plan_once(spark, tmp_path):
             F.pmod(F.col("id"), F.lit(64)).cast("int").alias("part_bucket"),
         )
     )
-    w = CheckpointedWriter(str(tmp_path / "onejob"), n_groups=4)
-    counts = w.run(dec)
+
+    def run(n_groups: int) -> tuple[dict[int, int], int]:
+        group = f"checkpoint_run_jobs_{n_groups}"
+        w = CheckpointedWriter(str(tmp_path / f"onejob{n_groups}"), n_groups)
+        sc.setJobGroup(group, "CheckpointedWriter.run job count")
+        try:
+            counts = w.run(dec)
+        finally:
+            sc.setJobGroup(None, None)
+        return counts, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    counts, jobs4 = run(4)
     assert set(counts) == {0, 1, 2, 3} and sum(counts.values()) == 400
     assert acc.value == 400, f"plan executed {acc.value / 400:.1f}x, expected 1x"
+    counts8, jobs8 = run(8)
+    assert set(counts8) == set(range(8)) and sum(counts8.values()) == 400
+    assert jobs8 == jobs4, f"{jobs4} jobs at n_groups=4 but {jobs8} at 8"
