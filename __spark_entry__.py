@@ -1194,7 +1194,8 @@ def q48_model_cascade(spark, sf):
     correctly fires on ~half the rows (NB avg conf 0.94 on flags).
     Both models train in ONE fused corpus pass (one scan + one bounded
     collect — functions/training.py) instead of two sequential jobs.
-    Pipeline analog: plans/pipeline.run_pipeline(use_model_udfs=True)."""
+    Pipeline analog: operators/cascade.run_cascade(langid_udf=...,
+    perplexity_udf=...)."""
     from stop_sync_osm_atlas_spark.functions.langid import langid_hashed_ngram_udf
     from stop_sync_osm_atlas_spark.functions.perplexity import perplexity_udf
     from stop_sync_osm_atlas_spark.functions.training import train_models_fused
@@ -1232,10 +1233,8 @@ def q41_perplexity_model(spark, sf):
     """KenLM-style char-bigram perplexity (Arrow pandas UDF), model
     trained deterministically from the corpus itself. The DuckDB oracle
     re-derives the full train+score pipeline in SQL (_oracle_q41)."""
-    from stop_sync_osm_atlas_spark.functions.perplexity import (
-        perplexity_udf,
-        train_char_bigram_distributed,
-    )
+    from stop_sync_osm_atlas_spark.functions.perplexity import perplexity_udf
+    from stop_sync_osm_atlas_spark.functions.training import train_char_bigram_distributed
 
     d = _t(spark, sf, "documents")
     udf = perplexity_udf(train_char_bigram_distributed(d))
@@ -1247,10 +1246,8 @@ def q42_langid_nb(spark, sf):
     trained from the corpus's own (text, lang) pairs. The DuckDB oracle
     re-derives FNV-1a hashing, NB training and softmax in SQL
     (_oracle_q42)."""
-    from stop_sync_osm_atlas_spark.functions.langid import (
-        langid_hashed_ngram_udf,
-        train_langid_model_distributed,
-    )
+    from stop_sync_osm_atlas_spark.functions.langid import langid_hashed_ngram_udf
+    from stop_sync_osm_atlas_spark.functions.training import train_langid_model_distributed
 
     d = _t(spark, sf, "documents")
     model = train_langid_model_distributed(d)

@@ -13,7 +13,9 @@ Two implementations with identical output contract (lang, lang_conf):
    mandated "vectorized pandas/Arrow UDFs, no per-row Python").
    At 100 TB this is the scale path: the model is a single (dim x n_lang)
    float64 matrix broadcast once per executor; scoring is two numpy
-   matmuls per Arrow batch.
+   matmuls per Arrow batch. Training over a DataFrame runs in
+   ``functions/training.py``; this module supplies its batch counter
+   (``nb_batch_counts``) and counts -> model rebuild (``nb_model``).
 """
 
 from __future__ import annotations
@@ -174,49 +176,42 @@ def train_langid_model(texts: list[str], labels: list[str]) -> dict:
     return {"log_prob": log_prob, "log_prior": log_prior, "langs": langs}
 
 
-def train_langid_model_distributed(df, text_col: str = "text", label_col: str = "lang") -> dict:
-    """Distributed counterpart of ``train_langid_model``.
-
-    Per Arrow batch: featurize + per-class feature sums reduced to a
-    long-form (label, dim, n) frame; one shuffle aggregates, the driver
-    receives <= n_lang x HASH_DIM rows. Counts equal the local trainer.
-    """
-    import pandas as _pd
-    from pyspark.sql import functions as SF
-
-    def _feat_counts(it):
-        for pdf in it:
-            X = featurize(pdf[text_col])
-            out = []
-            for lbl, idx in pdf.groupby(label_col).groups.items():
-                sums = X[pdf.index.get_indexer(idx)].sum(axis=0)
-                dims = np.nonzero(sums)[0]
-                out.append(
-                    _pd.DataFrame(
-                        {"label": str(lbl), "dim": dims, "n": sums[dims], "rows": 0}
-                    )
-                )
-                out[-1].loc[len(dims)] = [str(lbl), -1, 0.0, len(idx)]
-            yield _pd.concat(out, ignore_index=True) if out else _pd.DataFrame(
-                {"label": [], "dim": [], "n": [], "rows": []}
-            )
-
-    agg = (
-        df.select(SF.col(text_col), SF.col(label_col))
-        .mapInPandas(_feat_counts, schema="label string, dim int, n double, rows long")
-        .groupBy("label", "dim")
-        .agg(SF.sum("n").alias("n"), SF.sum("rows").alias("rows"))
-        .collect()
+def nb_batch_counts(texts: pd.Series, labels: pd.Series) -> pd.DataFrame:
+    """One batch's NB counts in ``training.py``'s long form: a row
+    (label, a=dim, b=0, n) per nonzero per-class feature sum, plus one
+    (label, a=-1, rows=#docs) prior row per class. Null labels count
+    nowhere."""
+    X = featurize(texts)
+    codes, langs = pd.factorize(labels)
+    sums = np.zeros((len(langs), HASH_DIM), dtype=np.float64)
+    for k in range(len(langs)):
+        sums[k] = X[codes == k].sum(axis=0)
+    k, dims = np.nonzero(sums)
+    docs = np.bincount(codes[codes >= 0], minlength=len(langs))
+    names = np.array([str(lang) for lang in langs], dtype=object)
+    return pd.DataFrame(
+        {
+            "label": names[np.concatenate([k, np.arange(len(langs))])],
+            "a": np.concatenate([dims, np.full(len(langs), -1)]),
+            "b": 0,
+            "n": np.concatenate([sums[k, dims], np.zeros(len(langs))]),
+            "rows": np.concatenate([np.zeros(len(k), dtype=np.int64), docs]),
+        }
     )
-    langs = sorted({r["label"] for r in agg})
+
+
+def nb_model(rows) -> dict:
+    """Aggregated ``nb_batch_counts`` rows -> the model dict
+    ``train_langid_model`` returns (same +1 smoothing)."""
+    langs = sorted({r["label"] for r in rows})
+    col = {lang: k for k, lang in enumerate(langs)}
     counts = np.ones((HASH_DIM, len(langs)), dtype=np.float64)
     prior = np.ones(len(langs), dtype=np.float64)
-    for r in agg:
-        k = langs.index(r["label"])
-        if r["dim"] == -1:
-            prior[k] += r["rows"]
+    for r in rows:
+        if r["a"] == -1:
+            prior[col[r["label"]]] += r["rows"]
         else:
-            counts[r["dim"], k] += r["n"]
+            counts[r["a"], col[r["label"]]] += r["n"]
     log_prob = np.log(counts / counts.sum(axis=0, keepdims=True))
     log_prior = np.log(prior / prior.sum())
     return {"log_prob": log_prob, "log_prior": log_prior, "langs": langs}

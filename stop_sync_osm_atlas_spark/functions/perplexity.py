@@ -9,6 +9,10 @@ beyond the O(len) codepoint mapping, no model re-load per batch.
 This is the engine's analog of the reference's distance score: a
 continuous quality signal fed into a threshold ladder
 (reference matching_process/problem_detection.py:36-64).
+
+Training over a DataFrame runs in ``functions/training.py``; this
+module supplies its batch counter (``bigram_batch_counts``) and counts
+-> model rebuild (``bigram_model``).
 """
 
 from __future__ import annotations
@@ -50,43 +54,32 @@ def train_char_bigram(texts: list[str]) -> np.ndarray:
     return np.log(counts / counts.sum(axis=1, keepdims=True))
 
 
-def train_char_bigram_distributed(df, text_col: str = "text") -> np.ndarray:
-    """Distributed counterpart of ``train_char_bigram``.
-
-    At corpus scale the model must be trained without collecting text:
-    each Arrow batch reduces to a local (V, V) count matrix; a tiny
-    (prev, cur, n) long-form frame shuffles once and the driver only
-    receives <= V^2 = 9409 aggregated rows. Exactly equal counts to the
-    single-threaded trainer (integer adds commute).
-    """
-    from pyspark.sql import functions as F
-
-    def _count_batches(it):
-        for pdf in it:
-            counts = np.zeros((_V, _V), dtype=np.int64)
-            for t in pdf[text_col]:
-                if not isinstance(t, str) or not t:
-                    continue
-                enc = _encode(t)
-                if len(enc) == 0:
-                    continue
-                prev = np.concatenate(([_BOS], enc[:-1]))
-                np.add.at(counts, (prev, enc), 1)
-            prev_i, cur_i = np.nonzero(counts)
-            yield pd.DataFrame(
-                {"prev": prev_i, "cur": cur_i, "n": counts[prev_i, cur_i]}
-            )
-
-    agg = (
-        df.select(text_col)
-        .mapInPandas(_count_batches, schema="prev int, cur int, n long")
-        .groupBy("prev", "cur")
-        .agg(F.sum("n").alias("n"))
-        .collect()
+def bigram_batch_counts(texts: pd.Series) -> pd.DataFrame:
+    """One batch's transition counts in ``training.py``'s long form: a
+    row (label='', a=prev, b=cur, n) per nonzero cell."""
+    cells = [
+        np.concatenate(([_BOS], enc[:-1])) * _V + enc
+        for enc in (_encode(t) for t in texts if isinstance(t, str) and t)
+    ]
+    counts = np.bincount(np.concatenate([np.empty(0, np.int64), *cells]), minlength=_V * _V)
+    cell = np.nonzero(counts)[0]
+    return pd.DataFrame(
+        {
+            "label": "",
+            "a": cell // _V,
+            "b": cell % _V,
+            "n": counts[cell].astype(np.float64),
+            "rows": 0,
+        }
     )
-    counts = np.ones((_V, _V), dtype=np.float64)  # +1 smooth, as local
-    for r in agg:
-        counts[r["prev"], r["cur"]] += r["n"]
+
+
+def bigram_model(rows) -> np.ndarray:
+    """Aggregated ``bigram_batch_counts`` rows -> the table
+    ``train_char_bigram`` returns (same +1 smoothing)."""
+    counts = np.ones((_V, _V), dtype=np.float64)
+    for r in rows:
+        counts[r["a"], r["b"]] += r["n"]
     return np.log(counts / counts.sum(axis=1, keepdims=True))
 
 

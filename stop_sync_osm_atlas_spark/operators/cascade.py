@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.langid import langid_marker_cols
-from . import scrub as SCRUB
 from .neardup import attach_clusters, neardup_phash_map
 from .rules import RuleConfig, metadata_rule_hits, signal_rule_hits, with_rule_resolution
 
@@ -58,15 +57,13 @@ def run_cascade(
     langid_udf=None,
     perplexity_udf=None,
     neardup_kwargs: dict | None = None,
-    part_buckets: int = 64,
-    use_decode: bool = True,
     overrides_broadcast: bool = True,
 ) -> DataFrame:
     """Full decision engine: pairs -> DECISIONS_SCHEMA rows.
 
-    ``use_decode``: validate the byte streams via the Arrow-batched
-    decoder (functions.image.decode_validate_inline) — catches truncated/garbage
-    streams and metadata/pixel dimension mismatches that the
+    The byte streams are validated by the Arrow-batched decoder
+    (functions.image.decode_validate_inline) — it catches truncated/
+    garbage streams and metadata/pixel dimension mismatches that the
     metadata-only rules cannot see (the coordinate-validation analog,
     reference import_data_db.py:60-100).
 
@@ -85,14 +82,11 @@ def run_cascade(
     # join on the phash column the rows already carry — no image_id
     # shuffle of the wide decoded rows.
     ph_map, n_map = neardup_phash_map(pairs, **(neardup_kwargs or {}))
-    if use_decode:
-        # fused prepare: bytes read exactly once; all text signals
-        # computed in the same Arrow pass (see functions/image.py for
-        # why Python set-membership beats Catalyst here)
-        base = decode_validate_inline(pairs)
-    else:
-        base = pairs.drop("bytes").withColumn("dec_ok", F.lit(True))
-    scored = score_signals(base, langid_udf, perplexity_udf)
+    # fused prepare: bytes read exactly once; all text signals (incl.
+    # caption_scrubbed_pre and pii_only_py) computed in the same Arrow
+    # pass (see functions/image.py for why Python set-membership beats
+    # Catalyst here)
+    scored = score_signals(decode_validate_inline(pairs), langid_udf, perplexity_udf)
 
     # ---- hit bitmask, computed BEFORE the cluster join -----------------
     # The resolution ladder + reasons array + severity reference every
@@ -102,28 +96,16 @@ def run_cascade(
     # them). Packing all pre-join hits into ONE integer column that the
     # cluster-join shuffle then materializes makes every downstream
     # reference a cheap bit test.
-    if "caption_scrubbed_pre" not in scored.columns:
-        scored = scored.withColumn(
-            "caption_scrubbed_pre", SCRUB.scrubbed_caption(F.col("caption"))
-        )
     pre_hits = metadata_rule_hits(scored, cfg)
-    if use_decode:
-        pre_hits["corrupt_image"] = pre_hits["corrupt_image"] | ~F.coalesce(
-            F.col("dec_ok"), F.lit(False)
-        )
+    pre_hits["corrupt_image"] = pre_hits["corrupt_image"] | ~F.coalesce(
+        F.col("dec_ok"), F.lit(False)
+    )
     pre_hits.update(signal_rule_hits(cfg))
     del pre_hits["near_duplicate"]  # post-join signal
     pre_hits["scrub"] = F.col("caption").isNotNull() & (
         F.col("caption_scrubbed_pre") != F.col("caption")
     )
-    if "pii_only_py" in scored.columns:
-        pre_hits["pii_only_after_scrub"] = F.coalesce(
-            F.col("pii_only_py"), F.lit(False)
-        )
-    else:
-        pre_hits["pii_only_after_scrub"] = SCRUB.pii_only_from_scrubbed(
-            F.col("caption"), F.col("caption_scrubbed_pre")
-        )
+    pre_hits["pii_only_after_scrub"] = F.coalesce(F.col("pii_only_py"), F.lit(False))
     # Per-rule enable switches (reference problem_detection.py:20-23
     # ENABLE_* analog): a disabled rule's hit is constant-folded false —
     # Catalyst then prunes its entire predicate subtree from the plan.
@@ -164,10 +146,11 @@ def run_cascade(
         ),
     )
     resolved = apply_overrides(resolved, overrides, broadcast=overrides_broadcast)
-    # lineage partition: stable hash bucket of image_id (cross-run stable,
-    # NOT Spark's task partition — survives repartitioning)
+    # lineage partition: one of 64 stable hash buckets of image_id
+    # (cross-run stable, NOT Spark's task partition — survives
+    # repartitioning)
     resolved = resolved.withColumn(
-        "part_bucket", F.pmod(F.xxhash64("image_id"), F.lit(part_buckets)).cast("int")
+        "part_bucket", F.pmod(F.xxhash64("image_id"), F.lit(64)).cast("int")
     )
     return resolved.select(
         "image_id",

@@ -8,7 +8,6 @@ partitioned writes + metrics rollup).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.cascade import metrics_rollup, run_cascade
@@ -37,38 +36,17 @@ def run_pipeline(
     neardup_kwargs: dict | None = None,
     run_id: str = "run0",
     n_groups: int = 8,
-    use_model_udfs: bool = False,
-    model_corpus: "pd.DataFrame | None" = None,
 ) -> dict:
     """Run the full decision engine with checkpointed writes.
 
-    ``use_model_udfs``: switch langid/perplexity from the pure-Catalyst
-    marker scorer to the Arrow-vectorized NB / char-bigram models
-    (trained deterministically from ``model_corpus``:
-    columns text, lang).
+    Scores with the marker-based langid signal; the model-based NB /
+    char-bigram signals are ``run_cascade(langid_udf=...,
+    perplexity_udf=...)``.
     """
     pairs = load_pairs(spark, pairs_path)
     overrides = load_overrides(spark, overrides_path)
-
-    langid_udf = perplexity_udf = None
-    if use_model_udfs:
-        from ..functions.langid import langid_hashed_ngram_udf, train_langid_model
-        from ..functions.perplexity import perplexity_udf as make_ppl, train_char_bigram
-
-        assert model_corpus is not None, "model_corpus required for model UDFs"
-        model = train_langid_model(
-            list(model_corpus["text"]), list(model_corpus["lang"])
-        )
-        langid_udf = langid_hashed_ngram_udf(model)
-        perplexity_udf = make_ppl(train_char_bigram(list(model_corpus["text"])))
-
     decisions = run_cascade(
-        pairs,
-        cfg=cfg,
-        overrides=overrides,
-        langid_udf=langid_udf,
-        perplexity_udf=perplexity_udf,
-        neardup_kwargs=neardup_kwargs,
+        pairs, cfg=cfg, overrides=overrides, neardup_kwargs=neardup_kwargs
     )
 
     writer = CheckpointedWriter(out_root, n_groups=n_groups)

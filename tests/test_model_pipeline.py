@@ -73,34 +73,79 @@ def test_model_pipeline_f1(spark, fixture_1k, fixture_paths, nd_kwargs, models):
 
 def test_distributed_trainers_match_local(spark):
     """Distributed (mapInPandas + shuffle-reduce) training must produce
-    byte-identical models to the single-threaded trainers."""
+    byte-identical models to the single-threaded trainers — across
+    Arrow batch edges (7-row batches), blank, multi-byte and over-long
+    (> 512-char) texts, and on a one-partition input, where the NB
+    pass widens and the bigram-only pass must not (the bigram counter
+    is too cheap to pay for a round-robin shuffle)."""
+    import pyspark.sql.classic.dataframe as cdf
+
     from stop_sync_osm_atlas_spark.fixtures.generator import _CONTENT, _caption
-    from stop_sync_osm_atlas_spark.functions.langid import (
-        train_langid_model,
-        train_langid_model_distributed,
-    )
-    from stop_sync_osm_atlas_spark.functions.perplexity import (
-        train_char_bigram,
+    from stop_sync_osm_atlas_spark.functions.langid import train_langid_model
+    from stop_sync_osm_atlas_spark.functions.perplexity import train_char_bigram
+    from stop_sync_osm_atlas_spark.functions.training import (
         train_char_bigram_distributed,
+        train_langid_model_distributed,
+        train_models_fused,
     )
 
     rng = np.random.default_rng(3)
+    langs = sorted(_CONTENT)
     texts, labels = [], []
-    for lang in sorted(_CONTENT):
+    for lang in langs:
         for _ in range(100):
             texts.append(_caption(rng, lang, int(rng.integers(5, 20))))
             labels.append(lang)
-    df = spark.createDataFrame(pd.DataFrame({"text": texts, "lang": labels})).repartition(8)
-
+    # 14 consecutive blanks hold at least one whole all-blank batch
+    edge = ["", None, "   ", "\t\n", " \r ", None, ""] * 2 + [
+        "café déjà vu é",
+        "漢字のテキスト",
+        "emoji 😀🚀 ok",
+        "x" * 600,
+        "é漢😀 " * 150,
+    ]
+    texts[150:150] = edge
+    labels[150:150] = [langs[i % len(langs)] for i in range(len(edge))]
+    pdf = pd.DataFrame({"text": texts, "lang": labels})
     lp_local = train_char_bigram(texts)
-    lp_dist = train_char_bigram_distributed(df)
-    assert np.array_equal(lp_local, lp_dist)
-
     m_local = train_langid_model(texts, labels)
-    m_dist = train_langid_model_distributed(df)
-    assert m_local["langs"] == m_dist["langs"]
-    assert np.array_equal(m_local["log_prob"], m_dist["log_prob"])
-    assert np.array_equal(m_local["log_prior"], m_dist["log_prior"])
+
+    plans = []
+    orig = cdf.DataFrame.collect
+
+    def _recording(self):
+        plans.append(
+            self._sc._jvm.PythonSQLUtils.explainString(self._jdf.queryExecution(), "formatted")
+        )
+        return orig(self)
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    cdf.DataFrame.collect = _recording
+    try:
+        for df in (
+            spark.createDataFrame(pdf).repartition(8),
+            spark.createDataFrame(pdf).coalesce(1),
+        ):
+            plans.clear()
+            lp_dist = train_char_bigram_distributed(df)
+            m_dist = train_langid_model_distributed(df)
+            m_fused, lp_fused = train_models_fused(df)
+            for lp in (lp_dist, lp_fused):
+                assert np.array_equal(lp_local, lp)
+            for m in (m_dist, m_fused):
+                assert m_local["langs"] == m["langs"]
+                assert np.array_equal(m_local["log_prob"], m["log_prob"])
+                assert np.array_equal(m_local["log_prior"], m["log_prior"])
+    finally:
+        cdf.DataFrame.collect = orig
+        spark.conf.set(key, prev)
+
+    bigram_plan, nb_plan, fused_plan = plans  # the one-partition input
+    assert "RoundRobinPartitioning" not in bigram_plan, bigram_plan
+    assert "RoundRobinPartitioning" in nb_plan, nb_plan
+    assert "RoundRobinPartitioning" in fused_plan, fused_plan
 
 
 def test_fused_trainer_matches_individual(spark):
@@ -108,9 +153,11 @@ def test_fused_trainer_matches_individual(spark):
     two individual distributed trainers — fusing commuting count adds
     cannot change either model."""
     from stop_sync_osm_atlas_spark.fixtures.generator import _CONTENT, _caption
-    from stop_sync_osm_atlas_spark.functions.langid import train_langid_model_distributed
-    from stop_sync_osm_atlas_spark.functions.perplexity import train_char_bigram_distributed
-    from stop_sync_osm_atlas_spark.functions.training import train_models_fused
+    from stop_sync_osm_atlas_spark.functions.training import (
+        train_char_bigram_distributed,
+        train_langid_model_distributed,
+        train_models_fused,
+    )
 
     rng = np.random.default_rng(7)
     texts, labels = [], []
