@@ -199,10 +199,6 @@ class _BitWriter:
         return bytes(self.buf)
 
 
-def _category(v: int) -> int:
-    return int(v).bit_length() if v >= 0 else int(-v).bit_length()
-
-
 def _seg(marker: int, payload: bytes) -> bytes:
     return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
 

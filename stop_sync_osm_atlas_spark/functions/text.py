@@ -79,10 +79,6 @@ def n_words(c: Column) -> Column:
     return F.size(words(c))
 
 
-def n_chars(c: Column) -> Column:
-    return F.length(F.coalesce(c, F.lit("")))
-
-
 def distinct_word_ratio(c: Column) -> Column:
     """|distinct words| / |words|; 1.0 for empty (no repetition evidence).
 

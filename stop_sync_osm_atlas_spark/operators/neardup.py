@@ -92,6 +92,7 @@ from ..functions.phash import (
     DEFAULT_BUCKET_BITS,
     DEFAULT_HAMMING_RADIUS,
     hamming,
+    phash_bucket,
     phash_bucket_probes,
 )
 
@@ -408,7 +409,6 @@ def neardup_phash_map(
     contract when a key exceeds band_salt_rows * band_max_salt nodes.
     Defaults: module constants BAND_SALT_ROWS / BAND_MAX_SALT.
     """
-    mask = (1 << bits) - 1
     sub_mask = (1 << sub_bits) - 1
     spark = pairs.sparkSession
 
@@ -418,9 +418,7 @@ def neardup_phash_map(
     pc = (
         slim0.groupBy("phash")
         .agg(F.count("*").alias("cnt"), F.min("image_id").alias("rep"))
-        .withColumn(
-            "bucket", F.col("phash").bitwiseAND(F.lit(mask)).cast("int")
-        )
+        .withColumn("bucket", phash_bucket(F.col("phash"), bits))
         .persist()
     )
 

@@ -22,17 +22,6 @@ PAIRS_SCHEMA = T.StructType(
     ]
 )
 
-# Override table — analog of the reference's persistent_data
-# (reference backend/models.py:123-141): survives re-runs, wins over rules.
-OVERRIDES_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("forced_decision", T.StringType(), False),
-        T.StructField("reason", T.StringType(), True),
-        T.StructField("created_at", T.TimestampType(), True),
-    ]
-)
-
 # Per-image decision record — analog of the reference's match record
 # (reference matching_process/exact_matching.py:74-101: identity + attrs +
 # match_type + notes + candidate_pool_size) plus the problems ladder
@@ -54,34 +43,3 @@ DECISIONS_SCHEMA = T.StructType(
         T.StructField("part_bucket", T.IntegerType(), True),  # lineage partition
     ]
 )
-
-# Per-partition metrics — analog of the reference's summary counts
-# (reference matching_script.py:614-653, import_data_db.py:958-976).
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("part_bucket", T.IntegerType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("n_keep", T.LongType(), False),
-        T.StructField("n_drop", T.LongType(), False),
-        T.StructField("n_scrub", T.LongType(), False),
-        T.StructField("n_neardup_clusters", T.LongType(), False),
-        T.StructField("n_overridden", T.LongType(), False),
-        T.StructField("run_id", T.StringType(), False),
-    ]
-)
-
-# Hidden generator labels (never read by the engine; oracle/pytest only).
-PAIRS_LABELS_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("true_decision", T.StringType(), False),
-        T.StructField("true_rule", T.StringType(), True),
-        T.StructField("true_scrubbed_caption", T.StringType(), True),
-        T.StructField("true_cluster_id", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
-
-DECISION_KEEP = "keep"
-DECISION_DROP = "drop"
-DECISION_SCRUB = "scrub"

@@ -307,80 +307,6 @@ def test_real_png_through_spark_operators(spark):
     assert not feats.loc["crc", "ok"]
 
 
-def test_video_frame_sampling(spark):
-    """Multimodal frame-sample plumbing: stride explode, corrupt guard,
-    deterministic frames (functions/video.py)."""
-    import pandas as pd
-
-    from stop_sync_osm_atlas_spark.functions.video import (
-        decode_video_header,
-        encode_video,
-        sample_frames,
-    )
-
-    rows = [
-        ("v1", encode_video(seed=7, w=16, h=8, n_frames=25)),
-        ("v2", encode_video(seed=9, w=8, h=8, n_frames=3)),
-        ("bad", b"\x00\x01garbage"),
-    ]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["video_id", "bytes"]))
-    out = sample_frames(df, stride=10).toPandas()
-    v1 = out[out.video_id == "v1"].sort_values("frame_idx")
-    assert list(v1.frame_idx) == [0, 10, 20] and v1.ok.all()
-    v2 = out[out.video_id == "v2"]
-    assert list(v2.frame_idx) == [0]
-    bad = out[out.video_id == "bad"]
-    assert len(bad) == 1 and not bad.ok.iloc[0]
-    # determinism: same container decodes to the same frame statistic
-    out2 = sample_frames(df, stride=10).toPandas()
-    m1 = out.sort_values(["video_id", "frame_idx"]).mean_gray.fillna(-1).tolist()
-    m2 = out2.sort_values(["video_id", "frame_idx"]).mean_gray.fillna(-1).tolist()
-    assert m1 == m2
-    assert decode_video_header(rows[0][1])[0] == 25
-
-    # decode-bomb guard: a corrupt header claiming 2^32-1 frames of
-    # 65535x65535 must be REJECTED before any allocation (it would
-    # otherwise loop ~4e8 times allocating ~12 GB per frame inside the
-    # mapInPandas worker — the image.MAX_DECODE_PIXELS attack via the
-    # video header), surfacing as one ok=false row
-    import struct as _st
-
-    bomb = _st.pack("<4sIIIQ", b"SGV1", 2**32 - 1, 65535, 65535, 7)
-    assert decode_video_header(bomb) is None
-    many = _st.pack("<4sIIIQ", b"SGV1", 2_000_000, 4, 4, 7)
-    assert decode_video_header(many) is None  # frame-count budget
-    bdf = spark.createDataFrame(
-        pd.DataFrame([("bomb", bomb)], columns=["video_id", "bytes"])
-    )
-    bout = sample_frames(bdf).toPandas()
-    assert len(bout) == 1 and not bout.ok.iloc[0]
-
-
-def test_audio_features(spark):
-    """Multimodal audio plumbing: windowed features, corrupt guard
-    (functions/audio.py)."""
-    import pandas as pd
-
-    from stop_sync_osm_atlas_spark.functions.audio import (
-        audio_features,
-        encode_audio,
-    )
-
-    rows = [
-        ("a1", encode_audio(seed=3, sample_rate=8000, n_samples=16000)),
-        ("a2", encode_audio(seed=5, sample_rate=4000, n_samples=2000)),
-        ("bad", b"RIFFnope"),
-    ]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["audio_id", "bytes"]))
-    out = audio_features(df, window_s=0.5).toPandas().set_index("audio_id")
-    assert out.loc["a1", "ok"] and out.loc["a1", "duration_s"] == 2.0
-    assert out.loc["a1", "n_windows"] == 4
-    assert 0.1 < out.loc["a1", "rms"] < 0.9  # tone+noise, not silence/clipping
-    assert 0 < out.loc["a1", "zero_cross_rate"] < 1
-    assert out.loc["a2", "n_windows"] == 1
-    assert not out.loc["bad", "ok"]
-
-
 def test_png_multi_idat_chunks_decode():
     """IDAT split across many chunks must decode identically to the
     single-chunk stream (the spec allows any split). The accumulator is

@@ -75,6 +75,8 @@ def test_fixed_width_malformed_lines_yield_nulls(spark, tmp_path):
 def test_semicolon_csv_explicit_schema(spark, tmp_path):
     """S1: ';'-separated CSV with explicit StructType, no inference
     (reference matching_script.py:183 pd.read_csv(sep=';'))."""
+    from stop_sync_osm_atlas_spark.sources.text_formats import read_semicolon_csv
+
     p = tmp_path / "atlas.csv"
     p.write_text("sloid;number;designation\nch:1:sloid:1;8503000;Gleis 1\nch:1:sloid:2;8507000;Kante A\n")
     schema = T.StructType(
@@ -84,7 +86,7 @@ def test_semicolon_csv_explicit_schema(spark, tmp_path):
             T.StructField("designation", T.StringType()),
         ]
     )
-    df = spark.read.csv(str(p), sep=";", header=True, schema=schema)
+    df = read_semicolon_csv(spark, str(p), schema)
     assert df.schema == schema
     out = {r["sloid"]: r["number"] for r in df.collect()}
     assert out == {"ch:1:sloid:1": 8503000, "ch:1:sloid:2": 8507000}
