@@ -29,6 +29,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from ..session import widen_if_narrow
 from .langid import nb_batch_counts, nb_model
 from .perplexity import bigram_batch_counts, bigram_model
 
@@ -51,22 +52,10 @@ def _count_pass(
 
     src = df.select(text_col, *([label_col] if lid else []))
     if lid:
-        # A small corpus file (or one unsplittable gzip/row-group) scans
-        # as a HANDFUL of tasks, serializing the per-doc n-gram
-        # featurizer on one core (measured: 1 task -> featurize alone
-        # 2.8 s single-thread at sf0.1). Widen to the session's
-        # parallelism BEFORE the Python boundary — a round-robin shuffle
-        # of slim (text, label) rows costs ~nothing next to that loop.
-        # The bigram counter alone is cheaper than that shuffle plus the
-        # extra Python tasks, so a bigram-only pass stays narrow
-        # (CLAUDE.md guarded-widen rule has the numbers). Guarded: an
-        # already-wide corpus scan (the 100 TB case) is never reshuffled.
-        # NOTE .rdd.getNumPartitions() is not a free probe under AQE: it
-        # builds the final plan, which runs any pre-final (shuffle)
-        # stages of ``df`` as jobs before the training pass.
-        par = src.sparkSession.sparkContext.defaultParallelism
-        if src.rdd.getNumPartitions() < par:
-            src = src.repartition(par)
+        # the per-doc n-gram featurizer is the expensive pass (1 task ->
+        # featurize alone 2.8 s single-thread at sf0.1); the bigram
+        # counter alone is cheaper than the widen, so it stays narrow
+        src = widen_if_narrow(src)
     schema = "m string, label string, a int, b int, n double, rows long"
     rows = (
         src.mapInPandas(_counts, schema=schema)

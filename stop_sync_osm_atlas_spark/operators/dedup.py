@@ -242,13 +242,70 @@ def minhash_signatures(
     )
 
 
-# LSH hot-band-key guard defaults: a band key held by more than
-# LSH_SALT_ROWS docs has its candidate self-join striped across
-# ceil(k/rows) salts (capped at LSH_MAX_SALT) so one viral
-# near-identical template family (identical in all band hashes but not
-# byte-identical, so exact dedup upstream cannot remove it) can never
-# pin a single quadratic task. Total candidate volume is unchanged —
-# it is inherent to banded LSH — only its distribution over tasks.
+def striped_self_join(
+    kn: DataFrame, keys: list[str], salt_of: str, salt_rows: int, max_salt: int
+) -> DataFrame:
+    """Self-join ``kn`` on ``keys`` with hot keys salt-striped.
+
+    A key holding k rows inherently emits ~k^2 joined rows; AQE
+    skew-split can balance the join's *input* partitions but cannot
+    shrink the quadratic *output* a single hot key funnels through one
+    task. Keys are pre-counted (map-side combined, slim (key, count)
+    rows; AQE picks the join for them) and a key of k rows is striped
+    across ``ns = min(ceil(k / salt_rows), max_salt)`` slices: the a
+    side is sliced by pmod(xxhash64(salt_of), ns), the b side is
+    replicated ns ways. Cold keys get ns = 1 (a constant 0 salt and a
+    one-row explode), so the guard is a near-no-op on unskewed input.
+    ``salt_rows`` and ``max_salt`` must be >= 1 (pmod by 0 throws under
+    ANSI). ``kn`` stays a plain frame: both sides re-derive it, which
+    avoids a second serial materialization job.
+
+    Returns one row per (a row, b row) pair sharing every key, the
+    identity pair and both orders included, with each non-key column
+    ``c`` of ``kn`` as ``c_a`` and ``c_b``. Callers filter the pairs
+    they want (e.g. ``c_a < c_b``).
+
+    EXACTNESS CONTRACT: every pair surfaces exactly once per key (each
+    a row sits in one slice and every slice holds a copy of each b row),
+    so the output equals the unstriped self-join's, while no task
+    builds more than ~salt_rows rows of one key.
+
+    RESIDUAL-SKEW CONTRACT: a key holding more than salt_rows *
+    max_salt rows hits the cap: each of its max_salt slices holds
+    ~k / max_salt rows, so per-slice work grows again (quadratic
+    overall, spread over max_salt tasks). Correctness is unaffected.
+    """
+    sizes = kn.groupBy(*keys).agg(F.count("*").alias("_kn"))
+    n_salt = F.least(
+        F.ceil(F.col("_kn") / F.lit(salt_rows)), F.lit(max_salt)
+    ).cast("int")
+    cols = kn.columns
+    kn = kn.join(sizes, keys).select(*cols, n_salt.alias("_ns"))
+    a = kn.select(
+        *[F.col(c).alias(f"{c}_a") for c in cols],
+        F.pmod(F.xxhash64(salt_of), F.col("_ns")).cast("int").alias("_salt_a"),
+    )
+    b = kn.select(
+        *[F.col(c).alias(f"{c}_b") for c in cols],
+        F.explode(F.sequence(F.lit(0), F.col("_ns") - F.lit(1))).alias(
+            "_salt_b"
+        ),
+    )
+    on = [F.col(f"{k}_a") == F.col(f"{k}_b") for k in keys]
+    on.append(F.col("_salt_a") == F.col("_salt_b"))
+    vals = [c for c in cols if c not in keys]
+    return a.join(b, on).select(*[f"{c}_{s}" for s in "ab" for c in vals])
+
+
+# LSH hot-band-key guard: a band key held by more than LSH_SALT_ROWS
+# docs has its candidate self-join striped (striped_self_join), so one
+# viral near-identical template family (identical in all band hashes
+# but not byte-identical, so exact dedup upstream cannot remove it) can
+# never pin a single quadratic task. Total candidate volume is
+# unchanged — it is inherent to banded LSH — only its distribution
+# over tasks. The cap binds past 4096 * 64 = 262k docs per key: a
+# family identical in all 16 hashes that large is a dup cluster exact
+# dedup should have removed upstream.
 LSH_SALT_ROWS = 4_096
 LSH_MAX_SALT = 64
 
@@ -259,42 +316,18 @@ def minhash_lsh_pairs(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    salt_rows: int = LSH_SALT_ROWS,
-    max_salt: int = LSH_MAX_SALT,
 ) -> DataFrame:
     """MinHash + banded LSH candidate generation + estimated Jaccard.
 
     16-hash signature, 4 bands x 4 rows: candidate pairs collide on at
     least one full band; estimate = fraction of agreeing hash positions.
     At scale this replaces the O(pairs-sharing-a-shingle) blow-up of
-    ``ngram_jaccard_pairs`` with O(4 x docs) band keys.
-
-    HOT-KEY GUARD (``salt_rows``/``max_salt``): a band key holding k
-    docs inherently emits ~k^2/2 candidate rows; AQE skew-split can
-    balance the join's *input* partitions but cannot shrink the
-    quadratic *output* a single hot key funnels through one task. Band
-    keys are pre-counted and keys above ``salt_rows`` stripe their
-    self-join deterministically — one side sliced by
-    pmod(xxhash64(id), s), the other replicated s ways — the
-    neardup._band_bucket_pairs pattern: every pair still surfaces
-    exactly once per band (then dropDuplicates across bands, as
-    before), so the output is BIT-IDENTICAL to the unguarded plan
-    while no task builds more than ~salt_rows rows for one key.
-
-    RESIDUAL-SKEW CONTRACT: when one key holds more than salt_rows *
-    max_salt docs the cap binds and per-slice work grows again
-    (quadratic overall, spread over max_salt tasks); correctness is
-    unaffected. Callers expecting such keys should raise the knobs —
-    or accept that a >260k-doc family identical in all 16 hashes is a
-    dup cluster exact dedup should have removed upstream.
+    ``ngram_jaccard_pairs`` with O(4 x docs) band keys. The candidate
+    self-join on band keys is hot-key guarded by ``striped_self_join``
+    with LSH_SALT_ROWS / LSH_MAX_SALT: every pair still surfaces once
+    per band (then dropDuplicates across bands), so the output is
+    bit-identical to the unguarded plan.
     """
-    if salt_rows < 1 or max_salt < 1:
-        # pmod(x, 0) is a job-killing REMAINDER_BY_ZERO under ANSI and
-        # sequence(0, -1) is [0, -1], not empty — fail at plan build
-        raise ValueError(
-            f"salt_rows={salt_rows} and max_salt={max_salt} must both "
-            f"be >= 1 (salt striping degenerates to pmod-by-zero)"
-        )
     # sigs is a FOUR-way diamond (bands -> {sizes, a, b} plus the
     # sa/sb signature re-attach) and Catalyst specializes shared
     # subtrees instead of reusing them — each consumer would re-run the
@@ -333,44 +366,10 @@ def minhash_lsh_pairs(
             )
         ).alias("bk"),
     )
-    # per-key pre-count (map-side combined, slim (bk, count) rows; AQE
-    # broadcasts it while small). _ns = stripes for this key: 1 for the
-    # overwhelmingly common cold keys — there salt_a is constantly 0 and
-    # the b-side explode yields exactly one row, so the guard is a
-    # near-no-op on an unskewed corpus.
-    sizes = bands.groupBy("bk").agg(F.count("*").alias("_kn"))
-    n_salt = F.least(
-        F.ceil(F.col("_kn") / F.lit(salt_rows)), F.lit(max_salt)
-    ).cast("int")
-    # kn stays a plain frame: both join sides re-derive it from the
-    # checkpointed sigs RDD (explode + a tiny sizes join — cheap), and
-    # NOT checkpointing it avoids a second serial materialization job
-    # (cold wall ~ #sequential jobs, CLAUDE.md).
-    kn = (
-        bands.join(sizes, "bk")
-        .withColumn("_ns", n_salt)
-        .select("id", "bk", "_ns")
-    )
-    a = kn.select(
-        F.col("id").alias("a_id"),
-        F.col("bk").alias("bk_a"),
-        F.pmod(F.xxhash64("id"), F.col("_ns")).cast("int").alias("_salt_a"),
-    )
-    b = kn.select(
-        F.col("id").alias("b_id"),
-        F.col("bk").alias("bk_b"),
-        F.explode(F.sequence(F.lit(0), F.col("_ns") - F.lit(1))).alias(
-            "_salt_b"
-        ),
-    )
     cands = (
-        a.join(
-            b,
-            (F.col("bk_a") == F.col("bk_b"))
-            & (F.col("_salt_a") == F.col("_salt_b"))
-            & (F.col("a_id") < F.col("b_id")),
-        )
-        .select("a_id", "b_id")
+        striped_self_join(bands, ["bk"], "id", LSH_SALT_ROWS, LSH_MAX_SALT)
+        .where(F.col("id_a") < F.col("id_b"))
+        .select(F.col("id_a").alias("a_id"), F.col("id_b").alias("b_id"))
         .dropDuplicates(["a_id", "b_id"])
     )
     sa = sigs.select(F.col("id").alias("a_id"), F.col("sig").alias("sig_a"))

@@ -95,6 +95,7 @@ from ..functions.phash import (
     phash_bucket,
     phash_bucket_probes,
 )
+from .dedup import striped_self_join
 
 DEFAULT_SUB_BITS = 8
 DEFAULT_HOT_THRESHOLD = 4096
@@ -390,8 +391,6 @@ def neardup_phash_map(
     hot_threshold: int = DEFAULT_HOT_THRESHOLD,
     bridge: str = "multiprobe",
     band_bits: int | None = None,
-    band_salt_rows: int | None = None,
-    band_max_salt: int | None = None,
 ) -> tuple[DataFrame, int]:
     """pairs -> (phash -> cluster map, map row count).
 
@@ -401,13 +400,6 @@ def neardup_phash_map(
     localCheckpoint-ed (materialized, lineage cut) and all caches built
     along the way are released before returning — repeated calls in a
     long-lived session leak no executor storage.
-
-    ``band_salt_rows`` / ``band_max_salt`` (bands bridge only): the
-    skew-guard dial for the upper-band self-join — a (band, key) group
-    is striped across ceil(n / band_salt_rows) salt slices, capped at
-    band_max_salt. See ``_band_bucket_pairs`` for the residual-skew
-    contract when a key exceeds band_salt_rows * band_max_salt nodes.
-    Defaults: module constants BAND_SALT_ROWS / BAND_MAX_SALT.
     """
     sub_mask = (1 << sub_bits) - 1
     spark = pairs.sparkSession
@@ -427,14 +419,7 @@ def neardup_phash_map(
     # pair. Lazy; the bounded collect below is eager job 1 and populates
     # pc's cache as a side effect.
     if bridge == "bands":
-        bpairs = _band_bucket_pairs(
-            pc,
-            bits,
-            radius,
-            band_bits=band_bits,
-            salt_rows=band_salt_rows if band_salt_rows is not None else BAND_SALT_ROWS,
-            max_salt=band_max_salt if band_max_salt is not None else BAND_MAX_SALT,
-        )
+        bpairs = _band_bucket_pairs(pc, bits, radius, band_bits=band_bits)
     else:
         probes = (
             pc.select(
@@ -615,8 +600,6 @@ def neardup_clusters(
     hot_threshold: int = DEFAULT_HOT_THRESHOLD,
     bridge: str = "multiprobe",
     band_bits: int | None = None,
-    band_salt_rows: int | None = None,
-    band_max_salt: int | None = None,
 ) -> DataFrame:
     """pairs -> (image_id, cluster_id, cluster_size, is_cluster_rep).
 
@@ -624,8 +607,7 @@ def neardup_clusters(
     any shuffle. The full-table work is one left join against the
     materialized dup-cluster map (usually broadcast — see
     neardup_phash_map); rows with NULL phash are dropped, matching the
-    row-level contract. ``band_salt_rows``/``band_max_salt`` tune the
-    bands-bridge skew guard (threaded to ``_band_bucket_pairs``).
+    row-level contract.
     """
     ph_map, n_map = neardup_phash_map(
         pairs,
@@ -635,8 +617,6 @@ def neardup_clusters(
         hot_threshold=hot_threshold,
         bridge=bridge,
         band_bits=band_bits,
-        band_salt_rows=band_salt_rows,
-        band_max_salt=band_max_salt,
     )
     slim0 = pairs.select("image_id", "phash").where(F.col("phash").isNotNull())
     return attach_clusters(slim0, ph_map, n_map).select(
@@ -644,12 +624,13 @@ def neardup_clusters(
     )
 
 
-# Bands-bridge skew guard defaults: a band key holding more than
-# BAND_SALT_ROWS nodes has its self-join striped across ceil(n/rows)
-# salts (capped at BAND_MAX_SALT) so one pathological key can never pin
-# a single quadratic task; total candidate volume is unchanged (it is
-# inherent to the algorithm — the docstring's "use multiprobe instead"
-# advice applies when even distributed quadratic work is too much).
+# Bands-bridge skew guard: a band key holding more than BAND_SALT_ROWS
+# distinct-phash nodes has its self-join striped (striped_self_join) so
+# one pathological key can never pin a single quadratic task; total
+# candidate volume is unchanged (it is inherent to the algorithm — the
+# docstring's "use multiprobe instead" advice applies when even
+# distributed quadratic work is too much). These bound nodes per band
+# key, not docs per LSH key, so they are not dedup's LSH_* pair.
 BAND_SALT_ROWS = 65_536
 BAND_MAX_SALT = 64
 
@@ -659,8 +640,6 @@ def _band_bucket_pairs(
     bits: int,
     radius: int,
     band_bits: int | None = None,
-    salt_rows: int = BAND_SALT_ROWS,
-    max_salt: int = BAND_MAX_SALT,
 ) -> DataFrame:
     """Full-recall bucket-pair discovery via upper-band blocking.
 
@@ -676,24 +655,11 @@ def _band_bucket_pairs(
     narrower bands -> more bands -> higher provable radius but fewer
     distinct key values (more nodes per key); wider bands -> the
     reverse. Per-key quadratic candidate volume is bounded per TASK by
-    the salting guard (``salt_rows``/``max_salt`` above): key sizes are
-    pre-counted with a bounded per-band aggregate (<= 2^band_bits rows,
-    broadcast when narrow) and oversized keys stripe the join
-    deterministically — one side sliced by pmod(xxhash64(phash), s),
-    the other replicated s ways — so every pair is still discovered
-    exactly once per band while no task sees more than ~salt_rows
-    build-side rows for a key.
-
-    RESIDUAL-SKEW CONTRACT: when one key holds MORE than salt_rows *
-    max_salt nodes, the cap binds and each of the max_salt slices sees
-    ~n/max_salt build rows — per-slice work grows again (quadratic in n
-    overall, spread over max_salt tasks), though correctness is
-    unaffected: every pair still surfaces exactly once. Callers
-    expecting such keys should raise the knobs (threaded through
-    ``neardup_clusters``/``neardup_phash_map`` as band_salt_rows /
-    band_max_salt), narrow band_bits, or fall back to
-    bridge='multiprobe'. Covered by
-    tests/test_neardup.py::test_bands_salt_cap_residual_behavior.
+    ``dedup.striped_self_join`` with BAND_SALT_ROWS / BAND_MAX_SALT
+    (its docstring holds the exactness and residual-skew contracts):
+    every pair is still discovered exactly once per band. Inputs with
+    keys past BAND_SALT_ROWS * BAND_MAX_SALT nodes should narrow
+    band_bits or fall back to bridge='multiprobe'.
     """
     band_bits = bits if band_bits is None else band_bits
     span = 64 - bits
@@ -701,15 +667,6 @@ def _band_bucket_pairs(
         raise ValueError(
             f"band_bits={band_bits} must evenly split the {span} bits "
             f"above the {bits}-bit bucket window"
-        )
-    # eager knob validation: max_salt < 1 would reach pmod(x, 0) deep in
-    # the executed plan — a job-killing REMAINDER_BY_ZERO under ANSI
-    # (and sequence(0, -1) yields [0, -1], not empty) — so fail at plan
-    # build time with the actual knob name
-    if salt_rows < 1 or max_salt < 1:
-        raise ValueError(
-            f"salt_rows={salt_rows} and max_salt={max_salt} must both "
-            f"be >= 1 (salt striping degenerates to pmod-by-zero)"
         )
     n_upper = span // band_bits
     if radius > n_upper:
@@ -742,42 +699,13 @@ def _band_bucket_pairs(
     ).select(
         "phash", "bucket", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
-    # skew guard: per-(band, key) node pre-count (the same pattern as
-    # the supergroup salting pass). Bounded by n_upper * 2^band_bits
-    # rows after the map-side combine; broadcast while that stays small.
-    sizes = kn.groupBy("band", "key").agg(F.count("*").alias("_kn"))
-    if band_bits <= 18:
-        sizes = F.broadcast(sizes)
-    n_salt = F.least(
-        F.ceil(F.col("_kn") / F.lit(salt_rows)), F.lit(max_salt)
-    ).cast("int")
-    kn = kn.join(sizes, ["band", "key"]).withColumn("_ns", n_salt)
-    a = kn.select(
-        F.col("phash").alias("ph_a"),
-        F.col("bucket").alias("bucket_a"),
-        F.col("band").alias("band_a"),
-        F.col("key").alias("key_a"),
-        F.pmod(F.xxhash64("phash"), F.col("_ns")).cast("int").alias("salt_a"),
-    )
-    b = kn.select(
-        F.col("phash").alias("ph_b"),
-        F.col("bucket").alias("bucket_b"),
-        F.col("band").alias("band_b"),
-        F.col("key").alias("key_b"),
-        F.explode(F.sequence(F.lit(0), F.col("_ns") - F.lit(1))).alias(
-            "salt_b"
-        ),
-    )
     return (
-        a.join(
-            b,
-            (F.col("band_a") == F.col("band_b"))
-            & (F.col("key_a") == F.col("key_b"))
-            & (F.col("salt_a") == F.col("salt_b")),
+        striped_self_join(
+            kn, ["band", "key"], "phash", BAND_SALT_ROWS, BAND_MAX_SALT
         )
         .where(
             (F.col("bucket_a") < F.col("bucket_b"))
-            & (hamming(F.col("ph_a"), F.col("ph_b")) <= F.lit(radius))
+            & (hamming(F.col("phash_a"), F.col("phash_b")) <= F.lit(radius))
         )
         .select(F.col("bucket_a").alias("a"), F.col("bucket_b").alias("b"))
         .distinct()

@@ -71,47 +71,23 @@ class CheckpointedWriter:
             json.dump({"group": group, "rows": rows}, fh)
         os.rename(self._marker(group) + ".tmp", self._marker(group))
 
-    def write_group(self, decisions: DataFrame, group: int) -> int:
-        """Write one partition group atomically; returns row count.
-
-        The count is observed on the write itself (no re-read job).
-        """
-        obs = Observation()
-        part = decisions.where(
-            F.pmod(F.col("part_bucket"), F.lit(self.n_groups)) == group
-        ).observe(obs, F.count(F.lit(1)).alias("rows"))
-        # tmp lives OUTSIDE root/decisions so a dir orphaned by a
-        # mid-write crash can never leak into read_all's partition
-        # discovery: the old in-place 'group=N.tmp' was discovered as
-        # partition value 'N.tmp' and duplicated the group's rows after
-        # resume. (An underscore prefix does NOT hide it — Spark keeps
-        # _-prefixed names that contain '=' precisely so partition
-        # columns may start with underscore, e.g. run()'s
-        # _commit_group=; pinned by test_resume_guards.)
-        tmp = os.path.join(self.root, f"group_tmp_{group}")
-        final = self._group_dir(group)
-        os.makedirs(os.path.join(self.root, "decisions"), exist_ok=True)
-        shutil.rmtree(tmp, ignore_errors=True)
-        part.write.mode("overwrite").parquet(tmp)
-        n = obs.get["rows"]
-        shutil.rmtree(final, ignore_errors=True)
-        os.rename(tmp, final)
-        self._commit(group, n)
-        return n
-
     def run(self, decisions: DataFrame) -> dict[int, int]:
         """Write all uncommitted groups in ONE Spark job. Returns counts.
 
         The decisions plan runs exactly once: a single
         ``partitionBy(_commit_group)`` write fans every uncommitted
         group into its own directory, then the driver promotes each
-        directory with the same atomic rename + marker protocol as
-        ``write_group``. Group-level atomicity is preserved (a crash
-        mid-promotion leaves promoted groups committed and the rest
-        recomputed on resume); the n-actions-over-a-persisted-frame
-        pattern this replaces cost one full pass per group. Per-group
-        row counts are observed on that same write, so the job count
-        does not grow with ``n_groups``.
+        directory by an atomic rename, then commits it with a marker.
+        Group-level atomicity is preserved (a crash mid-promotion leaves
+        marked groups committed and the rest, including a promoted dir
+        whose marker was never written, recomputed on resume). The
+        tmp root sits outside root/decisions, so a dir orphaned by a
+        crash mid-write never joins read_all's partition discovery
+        (Spark keeps _-prefixed names that contain '=' as partitions).
+        The n-actions-over-a-persisted-frame pattern this replaces cost
+        one full pass per group. Per-group row counts are observed on
+        that same write, so the job count does not grow with
+        ``n_groups``.
         """
         done = self.committed_groups()
         todo = [g for g in range(self.n_groups) if g not in done]

@@ -22,6 +22,7 @@ from ..operators import scrub as SCRUB
 from ..operators.cascade import score_signals
 from ..operators.rules import RuleConfig, metadata_rule_hits, signal_rule_hits, with_rule_resolution
 from ..schemas import PAIRS_SCHEMA
+from ..session import widen_if_narrow
 
 
 def _resolve_stream(scored: DataFrame, cfg: RuleConfig) -> DataFrame:
@@ -94,26 +95,6 @@ def stream_metrics(
     )
 
 
-def run_stream_to_memory(
-    spark: SparkSession, input_dir: str, query_name: str = "stream_decisions"
-) -> DataFrame:
-    """Drive the stream synchronously to completion (local smoke path)."""
-    q = (
-        stream_decisions(spark, input_dir)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    # same exception-safe shape as stage_and_drain_many: an interrupted
-    # drain must not leave the query running against input_dir
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
 def stage_and_drain(
     spark: SparkSession,
     df: DataFrame,
@@ -124,7 +105,8 @@ def stage_and_drain(
 ) -> DataFrame:
     """Replay a batch frame through a streaming transform, synchronously.
 
-    Stages ``df`` to a per-process /tmp parquet dir, runs
+    Stages ``df`` to a per-process parquet dir under the first
+    ``SPARK_LOCAL_DIRS`` entry (the system temp dir when unset), runs
     ``make_stream(spark, staging_dir)`` (a readStream-over-directory
     builder like ``stream_exact_dedup``/``stream_sessionize``) into a
     memory sink named ``query_name``, drains it to completion, and
@@ -168,24 +150,23 @@ def stage_and_drain_many(
     import hashlib
     import os
     import shutil
+    import tempfile
 
     names = "_".join(name for _, name, _ in specs)
-    tmp = (
-        f"/tmp/spark_graft_{hashlib.md5(names.encode()).hexdigest()[:8]}_"
-        f"{hashlib.md5(tag.encode()).hexdigest()[:10]}_p{os.getpid()}"
+    root = os.environ.get("SPARK_LOCAL_DIRS", "").split(",")[0]
+    tmp = os.path.join(
+        root or tempfile.gettempdir(),
+        f"spark_graft_{hashlib.md5(names.encode()).hexdigest()[:8]}_"
+        f"{hashlib.md5(tag.encode()).hexdigest()[:10]}_p{os.getpid()}",
     )
     out: dict[str, DataFrame] = {}
     # A staged frame derived from one small file writes ONE parquet
     # file, and the replay streams then scan it as ONE partition —
     # serializing each arm's whole per-row work (the q53 rule ladder is
-    # ~1 ms/row) on a single core. Widen narrow frames to the session's
-    # parallelism before staging so the micro-batches fan out; an
-    # already-wide frame (the 100 TB case) is never reshuffled. Row
-    # placement does not affect any drain contract (per-key state,
-    # sets, watermarked counts).
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
+    # ~1 ms/row) on a single core, so narrow frames are widened before
+    # staging. Row placement does not affect any drain contract
+    # (per-key state, sets, watermarked counts).
+    df = widen_if_narrow(df)
     # the staging write sits INSIDE the try so a mid-write failure
     # (disk full, serialization error) still hits the finally rmtree
     try:

@@ -86,10 +86,10 @@ def test_minhash_estimates_jaccard(spark):
     assert (m["est_jaccard"] - m["jaccard"]).abs().mean() < 0.25
 
 
-def test_minhash_hot_band_key_guard(spark):
+def test_minhash_hot_band_key_guard(spark, monkeypatch):
     """Planted hot band key: a viral family identical in every band must
     produce the IDENTICAL pair set under aggressive salt striping
-    (including the max_salt residual cap binding) as under the
+    (including the LSH_MAX_SALT residual cap binding) as under the
     effectively-unguarded plan — the guard redistributes the quadratic
     enumeration, it never changes the output."""
     rng = np.random.default_rng(7)
@@ -99,21 +99,23 @@ def test_minhash_hot_band_key_guard(spark):
     for i in range(60, 90):  # cold background docs
         rows.append((i, " ".join(rng.choice(vocab, 30, replace=False))))
     docs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    # salt_rows=8 -> ceil(60/8)=8 stripes, capped at max_salt=4 (the
-    # residual-skew contract binds); unguarded = salt_rows past k
-    guarded = DD.minhash_lsh_pairs(docs, threshold=0.2, salt_rows=8, max_salt=4)
-    unguarded = DD.minhash_lsh_pairs(docs, threshold=0.2, salt_rows=10**6)
-    g = sorted(map(tuple, guarded.toPandas().values.tolist()))
-    u = sorted(map(tuple, unguarded.toPandas().values.tolist()))
+    default_max_salt = DD.LSH_MAX_SALT
+
+    def pairs(salt_rows, max_salt):
+        monkeypatch.setattr(DD, "LSH_SALT_ROWS", salt_rows)
+        monkeypatch.setattr(DD, "LSH_MAX_SALT", max_salt)
+        out = DD.minhash_lsh_pairs(docs, threshold=0.2).toPandas()
+        return sorted(map(tuple, out.values.tolist()))
+
+    # LSH_SALT_ROWS=8 -> ceil(60/8)=8 stripes, capped at LSH_MAX_SALT=4
+    # (the residual-skew contract binds); unguarded = salt rows past k
+    g = pairs(8, 4)
+    u = pairs(10**6, default_max_salt)
     assert g == u
     # the family alone contributes C(60,2) est=1.0 pairs, each exactly once
     fam = [t for t in g if t[0] < 60 and t[1] < 60]
     assert len(fam) == 60 * 59 // 2
     assert all(t[2] == 1.0 for t in fam)
-    with pytest.raises(ValueError, match="salt_rows"):
-        DD.minhash_lsh_pairs(docs, salt_rows=0)
-    with pytest.raises(ValueError, match="max_salt"):
-        DD.minhash_lsh_pairs(docs, max_salt=0)
 
 
 def test_simhash_neardups_close(docs):

@@ -220,43 +220,6 @@ def test_bands_narrow_bands_extend_radius(spark):
     assert (out["cluster_size"] == 2).all()
 
 
-def test_bands_skewed_key_salting_is_exact(spark):
-    """The per-band-key salting guard must not change discovered pairs:
-    a pathological key (many nodes sharing ALL upper bands, differing
-    only in the bucket window) striped across salts yields the same
-    bucket-pair set as the unsalted join."""
-    from pyspark.sql import functions as F
-
-    from stop_sync_osm_atlas_spark.operators.neardup import _band_bucket_pairs
-
-    base = 0x7777AAAA0000
-    # 24 nodes in ONE band-key group (identical upper 48 bits), buckets
-    # 1 window bit apart pairwise-near in a chain, plus unrelated nodes
-    rows = [(base ^ (1 << (i % 3)), f"i{i:02d}") for i in range(24)]
-    rows += [(0x1111BBBB0000 ^ i, f"j{i:02d}") for i in range(4)]
-    pc = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["phash", "rep"])
-    ).select(
-        "phash",
-        F.lit(1).cast("long").alias("cnt"),
-        "rep",
-        F.col("phash").bitwiseAND(F.lit((1 << 16) - 1)).cast("int").alias(
-            "bucket"
-        ),
-    )
-    plain = {
-        (r["a"], r["b"])
-        for r in _band_bucket_pairs(pc, 16, 3, salt_rows=10**9).collect()
-    }
-    salted = {
-        (r["a"], r["b"])
-        for r in _band_bucket_pairs(
-            pc, 16, 3, salt_rows=4, max_salt=8
-        ).collect()
-    }
-    assert salted == plain and plain  # same pairs, and some were found
-
-
 @pytest.mark.parametrize("radius", [1, 3, 6, 7])
 @pytest.mark.parametrize("seed", [0, 7])
 def test_components_banded_equals_direct(radius, seed):
@@ -307,25 +270,32 @@ def test_components_banded_equals_direct(radius, seed):
     assert sorted(map(tuple, pa.values())) == sorted(map(tuple, pb.values()))
 
 
-def test_bands_salt_cap_residual_behavior(spark):
-    """A key above salt_rows * max_salt nodes: the cap binds (slices
-    grow past salt_rows — the documented residual-skew contract) but
-    pair discovery stays EXACT, and the knobs thread end-to-end through
-    neardup_clusters/neardup_phash_map as band_salt_rows/band_max_salt."""
+@pytest.mark.parametrize(
+    "salt_rows, max_salt",
+    [(4, 8), (2, 3)],
+    ids=["uncapped", "cap_binding"],
+)
+def test_bands_salt_striping_is_exact(spark, monkeypatch, salt_rows, max_salt):
+    """The per-band-key salting guard must not change discovered pairs:
+    a pathological key (24 nodes sharing ALL upper bands, differing
+    only in the bucket window) striped across salts yields the same
+    bucket-pair set as the unsalted join — both when the key fits in
+    salt_rows * max_salt (4 * 8) and when the cap binds (2 * 3: slices
+    grow past salt_rows, the documented residual-skew contract) — and
+    neardup_clusters gives the same clusters with the constants patched
+    below the key size."""
     from pyspark.sql import functions as F
 
-    from stop_sync_osm_atlas_spark.operators.neardup import (
-        _band_bucket_pairs,
-        neardup_clusters,
-    )
+    from stop_sync_osm_atlas_spark.operators import neardup as ND
 
     base = 0x7777AAAA0000
-    # 24 nodes share ALL upper bands (one band-key group of 24 >
-    # salt_rows*max_salt = 2*3): window-bit chain means every pair is
-    # within radius
+    # 24 nodes in ONE band-key group (identical upper 48 bits): the
+    # window-bit chain means every pair is within radius; plus
+    # unrelated nodes
     rows = [(base ^ (1 << (i % 3)), f"i{i:02d}") for i in range(24)]
+    other = [(0x1111BBBB0000 ^ i, f"j{i:02d}") for i in range(4)]
     pc = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["phash", "rep"])
+        pd.DataFrame(rows + other, columns=["phash", "rep"])
     ).select(
         "phash",
         F.lit(1).cast("long").alias("cnt"),
@@ -334,20 +304,11 @@ def test_bands_salt_cap_residual_behavior(spark):
             "bucket"
         ),
     )
-    plain = {
-        (r["a"], r["b"])
-        for r in _band_bucket_pairs(pc, 16, 3, salt_rows=10**9).collect()
-    }
-    capped = {
-        (r["a"], r["b"])
-        for r in _band_bucket_pairs(
-            pc, 16, 3, salt_rows=2, max_salt=3
-        ).collect()
-    }
-    assert capped == plain and plain
 
-    # end-to-end knob threading: tuned knobs produce the same clusters
-    # as the defaults on the same input
+    def bucket_pairs():
+        got = ND._band_bucket_pairs(pc, 16, 3).collect()
+        return {(r["a"], r["b"]) for r in got}
+
     prs = [(f"i{k:02d}", int(h)) for k, (h, _) in enumerate(rows)]
     pdf = pd.DataFrame(
         [dict(image_id=i, bytes=None, w=8, h=8, fmt="png", caption="x",
@@ -356,17 +317,24 @@ def test_bands_salt_cap_residual_behavior(spark):
     from stop_sync_osm_atlas_spark.schemas import PAIRS_SCHEMA
 
     pairs = spark.createDataFrame(pdf, PAIRS_SCHEMA)
-    default_out = (
-        neardup_clusters(pairs, bridge="bands")
-        .toPandas().set_index("image_id").sort_index()
-    )
-    tuned_out = (
-        neardup_clusters(
-            pairs, bridge="bands", band_salt_rows=2, band_max_salt=3
+
+    def clusters():
+        return (
+            ND.neardup_clusters(pairs, bridge="bands")
+            .toPandas().set_index("image_id").sort_index()
         )
-        .toPandas().set_index("image_id").sort_index()
-    )
-    pd.testing.assert_frame_equal(default_out, tuned_out)
+
+    default_out = clusters()
+    monkeypatch.setattr(ND, "BAND_SALT_ROWS", 10**9)
+    plain = bucket_pairs()
+    monkeypatch.setattr(ND, "BAND_SALT_ROWS", salt_rows)
+    monkeypatch.setattr(ND, "BAND_MAX_SALT", max_salt)
+    salted = bucket_pairs()
+    assert salted == plain and plain  # same pairs, and some were found
+
+    # end to end: the patched constants reach the bands bridge and
+    # produce the same clusters as the defaults
+    pd.testing.assert_frame_equal(default_out, clusters())
     assert (default_out["cluster_size"] == 24).all()
 
 
@@ -438,18 +406,6 @@ def test_propagation_rep_drops_members(spark, fixture_1k, fixture_paths, nd_kwar
     assert len(nd) > 0
     assert (~nd["is_cluster_rep"]).all()
     assert (nd["decision"] == "drop").all()
-
-
-def test_bands_salt_knob_validation_is_eager():
-    """max_salt/salt_rows < 1 must fail at plan-build time with the
-    knob name — not as a REMAINDER_BY_ZERO (pmod by 0 under ANSI) deep
-    inside the executed bands self-join."""
-    from stop_sync_osm_atlas_spark.operators.neardup import _band_bucket_pairs
-
-    with pytest.raises(ValueError, match="max_salt"):
-        _band_bucket_pairs(None, bits=16, radius=2, max_salt=0)
-    with pytest.raises(ValueError, match="salt_rows"):
-        _band_bucket_pairs(None, bits=16, radius=2, salt_rows=0)
 
 
 def test_components_banded_radius_at_or_above_64():

@@ -4,6 +4,9 @@ to a clean run (the persistent_data/snapshot-checkpoint analog)."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pandas as pd
 
 from stop_sync_osm_atlas_spark.operators.cascade import run_cascade
@@ -24,6 +27,13 @@ def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+def _snapshot(group_dir: str) -> dict[str, tuple[int, int]]:
+    """{file: (inode, mtime_ns)}: unchanged iff no file of the group was
+    rewritten or replaced."""
+    stats = {f: os.stat(os.path.join(group_dir, f)) for f in os.listdir(group_dir)}
+    return {f: (st.st_ino, st.st_mtime_ns) for f, st in stats.items()}
+
+
 def test_resume_identical_to_clean_run(spark, fixture_paths, nd_kwargs, tmp_path):
     dec = _decisions(spark, fixture_paths, nd_kwargs)
 
@@ -32,17 +42,23 @@ def test_resume_identical_to_clean_run(spark, fixture_paths, nd_kwargs, tmp_path
     counts1 = w1.run(dec)
     assert set(counts1) == {0, 1, 2, 3}
 
-    # interrupted run: commit only groups 0 and 1, then "crash"
+    # interrupted run: groups 0 and 1 committed, group 2 promoted but
+    # never marked, group 3 never promoted, then "crash"
     resume_root = str(tmp_path / "resumed")
     w2 = CheckpointedWriter(resume_root, n_groups=4)
-    w2.write_group(dec, 0)
-    w2.write_group(dec, 1)
+    w2.run(dec)
+    for g in (2, 3):
+        os.remove(w2._marker(g))
+    shutil.rmtree(w2._group_dir(3))
     assert w2.committed_groups() == {0, 1}
+    kept = {g: _snapshot(w2._group_dir(g)) for g in (0, 1)}
 
     # resume: only remaining groups are written
     w3 = CheckpointedWriter(resume_root, n_groups=4)
     counts3 = w3.run(dec)
     assert set(counts3) == {2, 3}
+    assert {g: _snapshot(w3._group_dir(g)) for g in (0, 1)} == kept
+    assert w3.committed_groups() == {0, 1, 2, 3}
 
     a = _canon(w1.read_all(spark).toPandas())
     b = _canon(w3.read_all(spark).toPandas())
@@ -59,8 +75,6 @@ def test_resume_guards(spark, fixture_paths, nd_kwargs, tmp_path):
     NOTE an underscore prefix does NOT hide it — Spark keeps
     _-prefixed names containing '=' as partition dirs — hence the tmp
     now lives outside root/decisions entirely)."""
-    import os
-
     import pytest
 
     dec = _decisions(spark, fixture_paths, nd_kwargs)
@@ -72,7 +86,7 @@ def test_resume_guards(spark, fixture_paths, nd_kwargs, tmp_path):
 
     # plant an orphaned tmp dir (the writer's actual tmp path) with
     # REAL parquet rows in it
-    orphan = os.path.join(root, "group_tmp_0")
+    orphan = os.path.join(root, "decisions.tmp", "_commit_group=0")
     w.read_all(spark).limit(5).write.parquet(orphan)
     n_before = w.read_all(spark).count()
     clean = CheckpointedWriter(str(tmp_path / "guards_ref"), n_groups=2)

@@ -157,17 +157,54 @@ def test_decode_stats_operator(spark, fixture_paths):
     assert (good["psnr"] >= 40).all()
 
 
-def test_streaming_rule_cascade(spark, fixture_paths, fixture_1k, tmp_path):
-    from stop_sync_osm_atlas_spark.streaming.stream import run_stream_to_memory
-    import shutil
+def test_streaming_rule_cascade(spark, fixture_paths, fixture_1k):
+    from stop_sync_osm_atlas_spark.streaming.stream import (
+        stage_and_drain,
+        stream_decisions,
+    )
 
-    # readStream needs a directory of files
-    d = tmp_path / "stream_in"
-    d.mkdir()
-    shutil.copy(fixture_paths["pairs"], d / "part-000.parquet")
-    out = run_stream_to_memory(spark, str(d)).toPandas()
+    pairs = spark.read.schema(PAIRS_SCHEMA).parquet(fixture_paths["pairs"])
+    out = stage_and_drain(
+        spark, pairs, stream_decisions, "stream_decisions", tag="rule_cascade"
+    ).toPandas()
     assert len(out) == len(fixture_1k.pairs)
     assert set(out["decision"].unique()) <= {"keep", "drop", "scrub"}
+
+
+def test_stage_and_drain_staging_dir_cleanup(spark, tmp_path, monkeypatch):
+    """The staging copy lives under the first SPARK_LOCAL_DIRS entry and
+    is removed after a drain; when a stream fails to start, the dir is
+    removed too and no started query is left running."""
+    import os
+
+    from stop_sync_osm_atlas_spark.streaming.stream import stage_and_drain_many
+
+    local = tmp_path / "local"
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", f"{local},{tmp_path / 'other'}")
+    staged: list[str] = []
+
+    def ids(spark, d):
+        staged.append(d)
+        assert os.path.isdir(d)
+        return spark.readStream.schema("id long").parquet(d)
+
+    def broken(spark, d):
+        staged.append(d)
+        raise RuntimeError("stream build failed")
+
+    df = spark.range(10)
+    out = stage_and_drain_many(spark, df, [(ids, "staged_ids", "append")], "t1")
+    assert out["staged_ids"].count() == 10
+    assert os.path.dirname(staged[0]) == str(local)
+    assert not os.path.exists(staged[0])
+
+    staged.clear()
+    specs = [(ids, "staged_ok", "append"), (broken, "staged_broken", "append")]
+    with pytest.raises(RuntimeError, match="stream build failed"):
+        stage_and_drain_many(spark, df, specs, "t2")
+    assert staged[0] == staged[1] and os.path.dirname(staged[0]) == str(local)
+    assert not os.path.exists(staged[0])
+    assert spark.streams.active == []
 
 
 def test_streaming_windowed_metrics(spark, fixture_paths, fixture_1k, tmp_path):

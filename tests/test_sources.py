@@ -111,6 +111,9 @@ def test_sloid_split_extraction(spark):
 def test_checkpoint_group_pruning(spark, fixture_paths, tmp_path):
     """The resume path must not rewrite committed groups (partition-level
     pruning, not row-level anti-join)."""
+    import os
+    import shutil
+
     from stop_sync_osm_atlas_spark.schemas import PAIRS_SCHEMA
     from stop_sync_osm_atlas_spark.sources.checkpoint import CheckpointedWriter
 
@@ -121,10 +124,22 @@ def test_checkpoint_group_pruning(spark, fixture_paths, tmp_path):
         F.pmod(F.xxhash64("image_id"), F.lit(64)).cast("int").alias("part_bucket"),
     )
     w = CheckpointedWriter(str(tmp_path / "ckpt"), n_groups=4)
-    w.write_group(dec, 2)
+    w.run(dec)
+    # "crash": groups 0, 1 and 3 never got their markers, and group 1
+    # was not promoted either
+    for g in (0, 1, 3):
+        os.remove(w._marker(g))
+    shutil.rmtree(w._group_dir(1))
     assert w.committed_groups() == {2}
+    g2 = w._group_dir(2)
+
+    def mtimes():
+        return {f: os.stat(os.path.join(g2, f)).st_mtime_ns for f in os.listdir(g2)}
+
+    kept = mtimes()
     counts = w.run(dec)
     assert set(counts) == {0, 1, 3}
+    assert mtimes() == kept  # the committed group was not rewritten
     total = w.read_all(spark).count()
     assert total == pairs.count()
 
@@ -196,3 +211,46 @@ def test_read_zip_csv(spark, tmp_path):
     assert set(out.stop_name) == {"Bern", "Basel"}
     assert out.stop_lat.dtype == "float64"
     assert sorted(out.stop_id)[0] == "851:0:1"
+
+
+def test_local_writes_set_permissions_in_process(spark, tmp_path):
+    """get_spark installs NioLocalFileSystem for local masters. Hadoop's
+    own local filesystem, lacking its native library, started a chmod
+    process for every file and directory a write created; the mode
+    bits set in-process must be the ones chmod would set."""
+    import os
+    import stat
+
+    from stop_sync_osm_atlas_spark.session import NIO_LOCAL_FS
+
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
+        jvm.java.net.URI("file:///"), spark._jsc.hadoopConfiguration()
+    )
+    assert fs.getClass().getName() == NIO_LOCAL_FS
+    f = tmp_path / "f"
+    f.write_text("x")
+    for mode in ("751", "640", "000", "777", "644"):
+        fs.setPermission(
+            jvm.org.apache.hadoop.fs.Path(str(f)),
+            jvm.org.apache.hadoop.fs.permission.FsPermission(mode),
+        )
+        assert oct(stat.S_IMODE(os.stat(f).st_mode)) == oct(int(mode, 8))
+
+    out = tmp_path / "t"
+    spark.range(10).repartition(3).write.parquet(str(out))
+    hadoop_umask = 0o022  # fs.permissions.umask-mode default
+    written = [os.path.join(r, n) for r, ds, fs_ in os.walk(out) for n in ds + fs_]
+    assert written and spark.read.parquet(str(out)).count() == 10
+    for p in written:
+        want = 0o777 if os.path.isdir(p) else 0o666
+        assert stat.S_IMODE(os.stat(p).st_mode) == want & ~hadoop_umask, p
+
+
+def test_nio_local_fs_falls_back_without_javac(tmp_path, monkeypatch):
+    """No javac: no build, and get_spark keeps Hadoop's default."""
+    from stop_sync_osm_atlas_spark.session import nio_local_fs_classes
+
+    monkeypatch.setenv("JAVA_HOME", str(tmp_path / "no-jdk"))
+    assert nio_local_fs_classes(str(tmp_path / "build")) is None
+    assert not (tmp_path / "build").exists()

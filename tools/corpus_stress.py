@@ -137,7 +137,7 @@ def run_skewed(cpus: int, tiles: int, family: int) -> dict:
     band through one task)."""
     from pyspark.sql import functions as F
 
-    from stop_sync_osm_atlas_spark.operators.dedup import minhash_lsh_pairs
+    from stop_sync_osm_atlas_spark.operators import dedup
     from stop_sync_osm_atlas_spark.session import get_spark
 
     path = ensure_skewed_corpus(tiles, family)
@@ -147,14 +147,16 @@ def run_skewed(cpus: int, tiles: int, family: int) -> dict:
     out: dict = {"cpus": cpus, "tiles": tiles, "family": family,
                  "docs_in": n_docs}
     # warm the session (codegen + Python forks) on the unplanted slice
-    minhash_lsh_pairs(docs.where(F.col("doc_id") < 5000)).count()
-    for label, kw in (
-        ("guarded", {}),
-        ("unguarded", {"salt_rows": 10**9}),
-    ):
+    dedup.minhash_lsh_pairs(docs.where(F.col("doc_id") < 5000)).count()
+    guarded_rows = dedup.LSH_SALT_ROWS
+    for label, salt_rows in (("guarded", guarded_rows), ("unguarded", 10**9)):
         spark.sparkContext.setJobDescription(f"lsh_skew_{label}")
-        t0 = time.time()
-        n_pairs = minhash_lsh_pairs(docs, **kw).count()
+        dedup.LSH_SALT_ROWS = salt_rows
+        try:
+            t0 = time.time()
+            n_pairs = dedup.minhash_lsh_pairs(docs).count()
+        finally:
+            dedup.LSH_SALT_ROWS = guarded_rows
         out[f"wall_{label}"] = round(time.time() - t0, 2)
         out[f"pairs_{label}"] = n_pairs
         spark.sparkContext.setJobDescription(None)

@@ -2,12 +2,18 @@
 
 Usage: python tools/dump_plan.py <out_dir> <suffix> <query> [query ...]
 Writes <out_dir>/<query>_<suffix>.txt for each query (the round's
-plan-evidence deliverable: plans/rNN/<query>_{before,after}.txt).
+plan-evidence deliverable: plans/rNN/<query>_{before,after}.txt), and
+<out_dir>/<query>_<suffix>.optimized.txt: the optimized logical plan
+with expression ids (``#123``, ``#123L``) normalized to ``#``, so two
+checkouts' files compare with ``diff``. Its md5 is printed; equal md5s
+mean the two sides optimize to the same plan.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -26,7 +32,8 @@ def main() -> None:
     qs = entry.queries()
     for name in names:
         df = qs[name](spark, SF_DIR)
-        plan = df._jdf.queryExecution().explainString(
+        qe = df._jdf.queryExecution()
+        plan = qe.explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"
             )
@@ -35,6 +42,12 @@ def main() -> None:
         with open(path, "w") as fh:
             fh.write(plan)
         print(f"wrote {path} ({len(plan)} chars)", flush=True)
+        opt = re.sub(r"#\d+L?", "#", qe.optimizedPlan().toString())
+        path = os.path.join(out_dir, f"{name}_{suffix}.optimized.txt")
+        with open(path, "w") as fh:
+            fh.write(opt)
+        md5 = hashlib.md5(opt.encode()).hexdigest()
+        print(f"wrote {path} (optimized, md5 {md5})", flush=True)
 
 
 if __name__ == "__main__":
