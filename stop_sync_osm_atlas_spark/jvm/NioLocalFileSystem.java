@@ -1,14 +1,23 @@
 package stop_sync_osm_atlas_spark.jvm;
 
 import java.io.IOException;
+import java.net.URI;
+import java.net.URISyntaxException;
 import java.nio.file.Files;
 import java.nio.file.attribute.PosixFilePermission;
 import java.util.EnumSet;
 import java.util.Set;
 
+import org.apache.hadoop.conf.Configuration;
+import org.apache.hadoop.fs.ChecksumFs;
+import org.apache.hadoop.fs.DelegateToFileSystem;
+import org.apache.hadoop.fs.FileStatus;
+import org.apache.hadoop.fs.FsConstants;
+import org.apache.hadoop.fs.FsServerDefaults;
 import org.apache.hadoop.fs.LocalFileSystem;
 import org.apache.hadoop.fs.Path;
 import org.apache.hadoop.fs.RawLocalFileSystem;
+import org.apache.hadoop.fs.local.LocalConfigKeys;
 import org.apache.hadoop.fs.permission.FsPermission;
 
 /**
@@ -18,9 +27,13 @@ import org.apache.hadoop.fs.permission.FsPermission;
  * runs a {@code chmod} child process, and it is called for every file
  * and directory a write creates. This subclass sets the nine rwx bits
  * through java.nio instead (the sticky bit, which no Spark write asks
- * for, is not set); everything else is RawLocalFileSystem.
- * session.get_spark compiles it and installs it as {@code fs.file.impl}
- * for local masters.
+ * for, is not set), and getFileLinkStatus of a path that is not a
+ * symlink skips the {@code readlink} child; everything else is
+ * RawLocalFileSystem. session.get_spark compiles it and installs it as
+ * {@code fs.file.impl} for local masters, and {@link Fs} as
+ * {@code fs.AbstractFileSystem.file.impl}: Hadoop's FileContext (used by
+ * Structured Streaming checkpoints) builds its local filesystem from
+ * that key and would otherwise bypass this class.
  */
 public class NioLocalFileSystem extends LocalFileSystem {
   public NioLocalFileSystem() {
@@ -48,6 +61,49 @@ public class NioLocalFileSystem extends LocalFileSystem {
         }
       }
       Files.setPosixFilePermissions(pathToFile(p).toPath(), bits);
+    }
+
+    @Override
+    public FileStatus getFileLinkStatus(Path f) throws IOException {
+      if (!Files.isSymbolicLink(pathToFile(f).toPath())) {
+        return getFileStatus(f);
+      }
+      return super.getFileLinkStatus(f);
+    }
+  }
+
+  /** FileContext's checksummed local filesystem (Hadoop's LocalFs) over Raw. */
+  public static class Fs extends ChecksumFs {
+    public Fs(URI uri, Configuration conf) throws IOException, URISyntaxException {
+      super(new RawFs(conf));
+    }
+  }
+
+  /** Hadoop's RawLocalFs with Raw as the delegate. */
+  public static class RawFs extends DelegateToFileSystem {
+    RawFs(Configuration conf) throws IOException, URISyntaxException {
+      super(FsConstants.LOCAL_FS_URI, new Raw(), conf, FsConstants.LOCAL_FS_URI.getScheme(), false);
+    }
+
+    @Override
+    public int getUriDefaultPort() {
+      return -1;
+    }
+
+    @Override
+    public FsServerDefaults getServerDefaults(Path f) throws IOException {
+      return LocalConfigKeys.getServerDefaults();
+    }
+
+    @Override
+    @Deprecated
+    public FsServerDefaults getServerDefaults() throws IOException {
+      return LocalConfigKeys.getServerDefaults();
+    }
+
+    @Override
+    public boolean isValidName(String src) {
+      return true;
     }
   }
 }

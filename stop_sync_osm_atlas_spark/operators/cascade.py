@@ -57,7 +57,6 @@ def run_cascade(
     langid_udf=None,
     perplexity_udf=None,
     neardup_kwargs: dict | None = None,
-    overrides_broadcast: bool = True,
 ) -> DataFrame:
     """Full decision engine: pairs -> DECISIONS_SCHEMA rows.
 
@@ -67,10 +66,9 @@ def run_cascade(
     metadata-only rules cannot see (the coordinate-validation analog,
     reference import_data_db.py:60-100).
 
-    ``overrides_broadcast``: forwarded to apply_overrides. Default True
-    (curated override tables are tiny); pass False for a huge override
-    table so the documented shuffled-join fallback is reachable from
-    the cascade API and AQE co-partitions on image_id.
+    ``overrides`` are applied last (operators/overrides.py): size-based
+    planning broadcasts a small override table and shuffles a huge one
+    co-partitioned on image_id.
     """
     from ..functions.image import decode_validate_inline
     from .overrides import apply_overrides
@@ -145,7 +143,7 @@ def run_cascade(
             F.col("caption")
         ),
     )
-    resolved = apply_overrides(resolved, overrides, broadcast=overrides_broadcast)
+    resolved = apply_overrides(resolved, overrides)
     # lineage partition: one of 64 stable hash buckets of image_id
     # (cross-run stable, NOT Spark's task partition — survives
     # repartitioning)

@@ -6,11 +6,13 @@ matching_script.py:469-517 pre-applied manual matches;
 backend/services/import_persistence.py:4-101 replay of saved solutions
 keyed by stable ids, unique on (sloid, osm_node_id, problem_type)).
 
-Spark shape: a left join against a (small) override table, keyed by the
-stable image_id — broadcast-hinted by default (curated override tables
-are tiny). At 10^12 x 0.1% the override table is 10^9 rows: pass
-broadcast=False and AQE plans a shuffled hash join co-partitioned on
-image_id.
+Spark shape: a left join against the override table, keyed by the
+stable image_id, with no join hint. Size-based planning broadcasts a
+curated (small) table; at 10^12 x 0.1% the table is 10^9 rows, over
+the broadcast threshold, and the join is planned shuffled and
+co-partitioned on image_id. A left join can build only its right side,
+so the decisions side (an Arrow-stage output) is never the broadcast
+build.
 """
 
 from __future__ import annotations
@@ -18,17 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-def apply_overrides(
-    decisions: DataFrame,
-    overrides: DataFrame | None,
-    broadcast: bool = True,
-) -> DataFrame:
+def apply_overrides(decisions: DataFrame, overrides: DataFrame | None) -> DataFrame:
     """Override forced_decision wins; rule becomes 'override', severity 1.
 
-    ``broadcast=True`` (default — override tables are curated and small)
-    hints the override side; pass False for a huge override table and
-    AQE plans a shuffled join co-partitioned on image_id. Plan building
-    is side-effect free: no eager count, no hidden jobs.
+    Plan building is side-effect free: no eager count, no hidden jobs.
     """
     if overrides is None:
         return decisions.withColumn("overridden", F.lit(False))
@@ -42,8 +37,6 @@ def apply_overrides(
     ov = overrides.groupBy(
         F.col("image_id").alias("_ov_image_id")
     ).agg(F.max("forced_decision").alias("_ov_decision"))
-    if broadcast:
-        ov = F.broadcast(ov)
     joined = decisions.join(
         ov, decisions["image_id"] == ov["_ov_image_id"], "left"
     )

@@ -19,10 +19,12 @@ the same tuned session.  Scale notes (100 TB design, local[32] test):
   Janino, then interpretation and JIT of the fresh classes). Class
   names carry no stage id, so a re-run's classes match whatever order
   AQE numbers its stages in.
-- Local masters write through ``jvm/NioLocalFileSystem.java``: Hadoop's
+- Local masters write through ``jvm/NioLocalFileSystem.java``, both
+  as ``FileSystem`` and as FileContext's ``AbstractFileSystem``: Hadoop's
   local filesystem, lacking its native library, started a ``chmod``
   process for every file and directory it wrote (~850 per run_pipeline
-  iteration at 4k pairs in 16 shards).
+  iteration at 4k pairs in 16 shards), and a ``readlink`` per status
+  lookup of a streaming checkpoint.
 """
 
 from __future__ import annotations
@@ -37,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 _JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
 NIO_LOCAL_FS = "stop_sync_osm_atlas_spark.jvm.NioLocalFileSystem"
+NIO_LOCAL_AFS = NIO_LOCAL_FS + "$Fs"
 
 
 def nio_local_fs_classes(build_root: str = os.path.join(_JVM_DIR, "build")) -> str | None:
@@ -172,7 +175,9 @@ def get_spark(
         builder = builder.config(
             "spark.driver.extraClassPath",
             classes if cp is None else cp + os.pathsep + classes,
-        ).config("spark.hadoop.fs.file.impl", NIO_LOCAL_FS)
+        ).config("spark.hadoop.fs.file.impl", NIO_LOCAL_FS).config(
+            "spark.hadoop.fs.AbstractFileSystem.file.impl", NIO_LOCAL_AFS
+        )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -146,7 +146,9 @@ def stage_and_drain_many(
     drain results are identical to the sequential order. Returns
     {query_name: batch frame}. Same per-process staging-path and
     exception-safe-cleanup contract as ``stage_and_drain``: every
-    started query is stopped even when a start or drain throws."""
+    started query is stopped even when a start or drain throws. Each
+    query checkpoints under a ``_ckpt`` dir beside the staging dir
+    (not Spark's default under ``java.io.tmpdir``), removed with it."""
     import hashlib
     import os
     import shutil
@@ -159,6 +161,7 @@ def stage_and_drain_many(
         f"spark_graft_{hashlib.md5(names.encode()).hexdigest()[:8]}_"
         f"{hashlib.md5(tag.encode()).hexdigest()[:10]}_p{os.getpid()}",
     )
+    ckpt = tmp + "_ckpt"
     out: dict[str, DataFrame] = {}
     # A staged frame derived from one small file writes ONE parquet
     # file, and the replay streams then scan it as ONE partition —
@@ -171,6 +174,9 @@ def stage_and_drain_many(
     # (disk full, serialization error) still hits the finally rmtree
     try:
         df.write.mode("overwrite").parquet(tmp)
+        # a stale checkpoint (a killed run of a reused pid) would make
+        # a memory-sink query refuse to start
+        shutil.rmtree(ckpt, ignore_errors=True)
         started: list = []
         try:
             for make_stream, query_name, output_mode in specs:
@@ -179,6 +185,7 @@ def stage_and_drain_many(
                     .writeStream.outputMode(output_mode)
                     .format("memory")
                     .queryName(query_name)
+                    .option("checkpointLocation", os.path.join(ckpt, query_name))
                     .start()
                 )
             for (_, query_name, _), q in zip(specs, started):
@@ -192,6 +199,7 @@ def stage_and_drain_many(
         return out
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 EVENTS_SCHEMA = (

@@ -118,6 +118,46 @@ def test_minhash_hot_band_key_guard(spark, monkeypatch):
     assert all(t[2] == 1.0 for t in fam)
 
 
+@pytest.mark.parametrize(
+    "salt_rows, max_salt", [(3, 8), (2, 3)], ids=["uncapped", "cap_binding"]
+)
+def test_striped_self_join_equals_plain_self_join(spark, salt_rows, max_salt):
+    """Every (a, b) row pair sharing a key comes out exactly once,
+    identity pairs and both orders included — the plain self-join's
+    multiset — for a hot key of 20 rows with distinct salt_of values
+    (7 slices at (3, 8); the cap binds at (2, 3)), a mid key and a
+    cold key. A dropped slice loses the pairs of every a row hashed to
+    it."""
+    from collections import Counter
+
+    sizes = {"hot": 20, "mid": 5, "cold": 1}
+    rows = [(k, f"{k}{i}") for k, n in sizes.items() for i in range(n)]
+    kn = spark.createDataFrame(pd.DataFrame(rows, columns=["k", "v"]))
+    got = Counter(
+        (r["v_a"], r["v_b"])
+        for r in DD.striped_self_join(kn, ["k"], "v", salt_rows, max_salt).collect()
+    )
+    want = Counter((a, b) for ka, a in rows for kb, b in rows if ka == kb)
+    assert got == want
+
+
+def test_lsh_pairs_pass_the_lsh_salt_constants(spark, docs, monkeypatch):
+    """minhash_lsh_pairs reads LSH_SALT_ROWS / LSH_MAX_SALT at call
+    time and hands them to striped_self_join."""
+    calls = []
+    orig = DD.striped_self_join
+
+    def spy(kn, keys, salt_of, salt_rows, max_salt):
+        calls.append((keys, salt_of, salt_rows, max_salt))
+        return orig(kn, keys, salt_of, salt_rows, max_salt)
+
+    monkeypatch.setattr(DD, "striped_self_join", spy)
+    monkeypatch.setattr(DD, "LSH_SALT_ROWS", 5)
+    monkeypatch.setattr(DD, "LSH_MAX_SALT", 7)
+    DD.minhash_lsh_pairs(docs)
+    assert calls == [(["bk"], "id", 5, 7)]
+
+
 def test_simhash_neardups_close(docs):
     out = docs.select("doc_id", DD.simhash64(F.col("text")).alias("sh")).toPandas()
     sh = dict(zip(out["doc_id"], out["simhash" if "simhash" in out else "sh"]))

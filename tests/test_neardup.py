@@ -338,6 +338,30 @@ def test_bands_salt_striping_is_exact(spark, monkeypatch, salt_rows, max_salt):
     assert (default_out["cluster_size"] == 24).all()
 
 
+def test_bands_bridge_passes_the_band_salt_constants(spark, monkeypatch):
+    """_band_bucket_pairs reads BAND_SALT_ROWS / BAND_MAX_SALT at call
+    time and hands them to striped_self_join."""
+    from pyspark.sql import functions as F
+
+    from stop_sync_osm_atlas_spark.operators import neardup as ND
+
+    calls = []
+    orig = ND.striped_self_join
+
+    def spy(kn, keys, salt_of, salt_rows, max_salt):
+        calls.append((keys, salt_of, salt_rows, max_salt))
+        return orig(kn, keys, salt_of, salt_rows, max_salt)
+
+    monkeypatch.setattr(ND, "striped_self_join", spy)
+    monkeypatch.setattr(ND, "BAND_SALT_ROWS", 5)
+    monkeypatch.setattr(ND, "BAND_MAX_SALT", 7)
+    pc = spark.range(4).select(
+        F.col("id").alias("phash"), F.col("id").cast("int").alias("bucket")
+    )
+    ND._band_bucket_pairs(pc, 16, 3)
+    assert calls == [(["band", "key"], "phash", 5, 7)]
+
+
 @pytest.mark.parametrize("seed", [0, 1, 2])
 @pytest.mark.parametrize("bridge", ["multiprobe", "bands"])
 def test_random_corpus_matches_oracle(spark, seed, bridge):

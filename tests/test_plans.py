@@ -117,9 +117,7 @@ def test_cascade_main_job_has_no_shuffle(spark, fixture_paths):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_small_override_table_broadcasts(spark):
-    """apply_overrides must broadcast a small override table
-    (BROADCAST_MAX_ROWS contract in operators/overrides.py)."""
+def _override_join_plan(spark) -> str:
     import pandas as pd
 
     from stop_sync_osm_atlas_spark.operators.overrides import apply_overrides
@@ -137,8 +135,29 @@ def test_small_override_table_broadcasts(spark):
     ov = spark.createDataFrame(
         pd.DataFrame({"image_id": ["img:1", "img:2"], "forced_decision": ["drop", "keep"]})
     )
-    plan = _plan(apply_overrides(decisions, ov))
+    return _plan(apply_overrides(decisions, ov))
+
+
+def test_small_override_table_broadcasts(spark):
+    """apply_overrides carries no join hint, and size-based planning
+    broadcasts a small override table (a left join can build only the
+    override side, so the decisions side never becomes the build)."""
+    plan = _override_join_plan(spark)
     assert "BroadcastHashJoin" in plan, plan
+
+
+def test_override_join_shuffles_without_auto_broadcast(spark):
+    """With auto-broadcast off (what planning sees for an override
+    table over the threshold) the override join is shuffled: nothing
+    forces a broadcast of a table too big to ship."""
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = _override_join_plan(spark)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "BroadcastHashJoin" not in plan, plan
+    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
 
 
 def test_tfidf_no_vocabulary_broadcast(spark):

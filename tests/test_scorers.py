@@ -207,6 +207,45 @@ def test_stage_and_drain_staging_dir_cleanup(spark, tmp_path, monkeypatch):
     assert spark.streams.active == []
 
 
+def test_stage_and_drain_checkpoints_beside_staging(spark, tmp_path, monkeypatch):
+    """Each query checkpoints next to the staging dir under
+    SPARK_LOCAL_DIRS — not in a temporary-* dir under java.io.tmpdir,
+    Spark's default for a memory sink — and both go after the drain.
+    The second spec is built after the first query started, so it sees
+    that query's checkpoint."""
+    import glob
+    import os
+
+    from stop_sync_osm_atlas_spark.streaming.stream import stage_and_drain_many
+
+    local = tmp_path / "local"
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", str(local))
+    jtmp = spark._jvm.java.lang.System.getProperty("java.io.tmpdir")
+
+    def spark_temps():
+        return set(glob.glob(os.path.join(jtmp, "temporary-*")))
+
+    before = spark_temps()
+    seen: dict = {}
+
+    def ids(spark, d):
+        return spark.readStream.schema("id long").parquet(d)
+
+    def probe(spark, d):
+        seen["temps"] = spark_temps() - before
+        seen["local"] = sorted(os.listdir(local))
+        return ids(spark, d)
+
+    specs = [(ids, "ckpt_a", "append"), (probe, "ckpt_b", "append")]
+    out = stage_and_drain_many(spark, spark.range(10), specs, "ckpt")
+    assert out["ckpt_a"].count() == 10 and out["ckpt_b"].count() == 10
+    assert seen["temps"] == set()
+    staging = [n for n in seen["local"] if not n.endswith("_ckpt")]
+    assert seen["local"] == [staging[0], staging[0] + "_ckpt"]
+    assert os.listdir(local) == []
+    assert spark_temps() - before == set()
+
+
 def test_streaming_windowed_metrics(spark, fixture_paths, fixture_1k, tmp_path):
     """Watermarked tumbling-window metrics over the decision stream."""
     import shutil

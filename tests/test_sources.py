@@ -247,6 +247,34 @@ def test_local_writes_set_permissions_in_process(spark, tmp_path):
         assert stat.S_IMODE(os.stat(p).st_mode) == want & ~hadoop_umask, p
 
 
+def test_file_context_uses_nio_local_fs(spark, tmp_path):
+    """FileContext (Structured Streaming checkpoints) builds its local
+    filesystem from fs.AbstractFileSystem.file.impl, not fs.file.impl:
+    get_spark points that key at the engine class too, whose delegate
+    sets permissions and reads link status without a child process."""
+    import os
+    import stat
+
+    from stop_sync_osm_atlas_spark.session import NIO_LOCAL_AFS, NIO_LOCAL_FS
+
+    jvm = spark._jvm
+    fc = jvm.org.apache.hadoop.fs.FileContext.getLocalFSFileContext(
+        spark._jsc.hadoopConfiguration()
+    )
+    afs = fc.getDefaultFileSystem()
+    assert afs.getClass().getName() == NIO_LOCAL_AFS
+    assert afs.getRawFs().getClass().getName() == NIO_LOCAL_FS + "$RawFs"
+
+    d = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "d"))
+    fc.mkdir(d, jvm.org.apache.hadoop.fs.permission.FsPermission("750"), False)
+    assert oct(stat.S_IMODE(os.stat(tmp_path / "d").st_mode)) == oct(0o750 & ~0o022)
+    assert fc.getFileLinkStatus(d).isDirectory()
+    os.symlink(tmp_path / "d", tmp_path / "ln")
+    link = fc.getFileLinkStatus(jvm.org.apache.hadoop.fs.Path(str(tmp_path / "ln")))
+    assert link.isSymlink()
+    assert link.getSymlink().toUri().getPath() == str(tmp_path / "d")
+
+
 def test_nio_local_fs_falls_back_without_javac(tmp_path, monkeypatch):
     """No javac: no build, and get_spark keeps Hadoop's default."""
     from stop_sync_osm_atlas_spark.session import nio_local_fs_classes

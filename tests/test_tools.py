@@ -1,0 +1,77 @@
+"""The scale-stress tools' shared harness (tools/scaling.py), and that each
+tool still starts. No Spark: the children here are tiny fake scripts."""
+
+from __future__ import annotations
+
+import importlib.util
+import os
+import subprocess
+import sys
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+_spec = importlib.util.spec_from_file_location("scaling", os.path.join(TOOLS, "scaling.py"))
+scaling = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(scaling)
+
+
+def test_child_parses_last_json_line(tmp_path):
+    script = tmp_path / "fake.py"
+    script.write_text(
+        "import json, sys\n"
+        "print('warming up')\n"
+        "print(json.dumps({'stale': True}))\n"
+        "print(json.dumps({'argv': sys.argv[1:]}))\n"
+        "print('done')\n"
+    )
+    assert scaling.child(str(script), 2, "--rows", "64") == {
+        "argv": ["--cpus", "2", "--rows", "64"]
+    }
+
+
+def test_failing_child_raises_and_forwards_stderr(tmp_path, capsys):
+    script = tmp_path / "boom.py"
+    script.write_text("import sys\nsys.stderr.write('Py4JJavaError: boom\\n')\nsys.exit(3)\n")
+    with pytest.raises(subprocess.CalledProcessError):
+        scaling.child(str(script), 8)
+    assert "Py4JJavaError: boom" in capsys.readouterr().err
+
+
+def test_efficiency_is_n_vs_4n():
+    assert scaling.WIDTHS == (2, 8)
+    assert scaling.efficiency(100.0, 400.0) == 1.0
+    assert scaling.efficiency(100.0, 300.0) == 0.75
+
+
+def test_append_baseline_writes_titled_section(tmp_path, monkeypatch):
+    md = tmp_path / "BASELINE.md"
+    md.write_text("# log\n")
+    monkeypatch.setattr(scaling, "BASELINE", str(md))
+    scaling.append_baseline("Probe stress", ["- a: 1\n", "- b: 2\n"])
+    lines = md.read_text().splitlines()
+    assert lines[:2] == ["# log", ""]
+    assert lines[2].startswith("## Probe stress 20")
+    assert lines[3:] == ["- a: 1", "- b: 2"]
+
+
+def test_write_shards_slices_and_marks_done(tmp_path):
+    tbl = pa.table({"i": list(range(10))})
+    out = tmp_path / "shards"
+    scaling.write_shards(tbl, str(out), 4)
+    parts = sorted(p for p in os.listdir(out) if p.endswith(".parquet"))
+    assert parts == [f"part-{s:03d}.parquet" for s in range(4)]
+    assert (out / "_done").exists()
+    got = pa.concat_tables(pq.read_table(out / p) for p in parts)
+    assert got.column("i").to_pylist() == list(range(10))
+
+
+@pytest.mark.parametrize("tool", ["corpus_stress", "pack_mix_stress", "shuffle_envelope"])
+def test_tool_help_exits_zero(tool):
+    out = subprocess.run(
+        [sys.executable, os.path.join(TOOLS, f"{tool}.py"), "--help"],
+        capture_output=True, text=True,
+    )
+    assert out.returncode == 0, out.stderr

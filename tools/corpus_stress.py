@@ -13,6 +13,8 @@ input doc exactly once in `decisions`.
 Usage:
     python tools/corpus_stress.py [--cpus 8] [--tiles 20]
     python tools/corpus_stress.py --scaling     # local[2] vs local[8]
+    python tools/corpus_stress.py --substr [--stats-only] [--scaling]
+    python tools/corpus_stress.py --skewed [--family 10000]
 
 Prints one JSON line per run; --scaling appends a section to
 BENCH/BASELINE.md. Run nothing else Spark-side while timing.
@@ -23,90 +25,43 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
 import sys
 import time
+
+import scaling
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def ensure_corpus(tiles: int, n_shards: int = 32) -> str:
-    import duckdb
-    import pyarrow.parquet as pq
+def ensure_corpus(tiles: int, family: int = 0, n_shards: int = 32) -> str:
+    """The fixture's documents tiled ``tiles`` times (unique doc_id per
+    tile + a tile-unique leading token), plus, for ``family`` > 0, a
+    planted VIRAL FAMILY of ``family`` docs with byte-identical text
+    (distinct doc_ids). Identical text -> identical minhash signature ->
+    every one of the 4 LSH band keys is a hot key of size ``family`` —
+    the 100 TB failure mode minhash_lsh_pairs' salt-stripe guard exists
+    for (a near-identical template family that exact dedup upstream
+    cannot assume removed at the operator level); tiles differ in their
+    leading token, so the background's band keys stay small.
 
-    # cache key includes the SOURCE fixture (dir + parquet mtime): a
-    # tiles-only key silently reused a corpus tiled from a DIFFERENT
-    # SF_DIR, attributing every timing in the appended evidence log to
-    # the wrong fixture
+    The cache key includes the SOURCE fixture (dir + parquet mtime): a
+    tiles-only key silently reused a corpus tiled from a DIFFERENT
+    SF_DIR, attributing every timing in the appended evidence log to
+    the wrong fixture. Tiling runs in DuckDB (no Spark session)."""
     import hashlib
+
+    import duckdb
 
     src = os.path.join(SF_DIR, "documents.parquet")
     src_key = hashlib.md5(
         f"{SF_DIR}:{os.path.getmtime(src)}".encode()
     ).hexdigest()[:10]
-    path = f"/tmp/spark_graft_bench/docs_x{tiles}_{src_key}"
-    marker = os.path.join(path, "_done")
-    if os.path.exists(marker):
+    path = f"/tmp/spark_graft_bench/docs_x{tiles}_f{family}_{src_key}"
+    if os.path.exists(os.path.join(path, "_done")):
         return path
-    os.makedirs(path, exist_ok=True)
-    # deterministic tiling in DuckDB (no Spark session needed): unique
-    # doc_id per tile + a tile-unique leading token. Written as MANY
-    # files — a single file under the session's 16 MB split size would
-    # give every scan stage one partition and measure input layout, not
-    # the pipeline.
-    tbl = duckdb.sql(
-        f"""
-        SELECT d.doc_id + t.t * 1000000 AS doc_id,
-               'tile' || CAST(t.t AS VARCHAR) || ' ' || d.text AS text,
-               d.lang
-        FROM read_parquet('{SF_DIR}/documents.parquet') d,
-             (SELECT unnest(range({tiles})) AS t) t
-        ORDER BY doc_id
-        """
-    ).arrow()
-    n = tbl.num_rows
-    step = (n + n_shards - 1) // n_shards
-    for s in range(n_shards):
-        chunk = tbl.slice(s * step, step)
-        if chunk.num_rows:
-            pq.write_table(chunk, os.path.join(path, f"part-{s:03d}.parquet"))
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return path
-
-
-def ensure_skewed_corpus(tiles: int, family: int, n_shards: int = 32) -> str:
-    """Tiled corpus + a planted VIRAL FAMILY: ``family`` docs with
-    byte-identical text (distinct doc_ids). Identical text -> identical
-    minhash signature -> every one of the 4 LSH band keys is a hot key
-    of size ``family`` — the 100 TB failure mode minhash_lsh_pairs'
-    salt-stripe guard exists for (a near-identical template family that
-    exact dedup upstream cannot assume removed at the operator level).
-    The 20x-tiled background keeps band keys otherwise small (tiles
-    differ in their leading token)."""
-    import hashlib
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    src = os.path.join(SF_DIR, "documents.parquet")
-    src_key = hashlib.md5(
-        f"{SF_DIR}:{os.path.getmtime(src)}:skew{family}".encode()
-    ).hexdigest()[:10]
-    path = f"/tmp/spark_graft_bench/docs_skew_x{tiles}_f{family}_{src_key}"
-    marker = os.path.join(path, "_done")
-    if os.path.exists(marker):
-        return path
-    os.makedirs(path, exist_ok=True)
-    tbl = duckdb.sql(
-        f"""
-        SELECT d.doc_id + t.t * 1000000 AS doc_id,
-               'tile' || CAST(t.t AS VARCHAR) || ' ' || d.text AS text,
-               d.lang
-        FROM read_parquet('{SF_DIR}/documents.parquet') d,
-             (SELECT unnest(range({tiles})) AS t) t
+    viral = f"""
         UNION ALL
         SELECT 90000000 + f.f AS doc_id,
                'viral boilerplate template shared verbatim across the '
@@ -114,18 +69,18 @@ def ensure_skewed_corpus(tiles: int, family: int, n_shards: int = 32) -> str:
                || 'window stays stable and the sixteen minhash values '
                || 'agree exactly for each copy of this document' AS text,
                'en' AS lang
-        FROM (SELECT unnest(range({family})) AS f) f
+        FROM (SELECT unnest(range({family})) AS f) f""" if family else ""
+    tbl = duckdb.sql(
+        f"""
+        SELECT d.doc_id + t.t * 1000000 AS doc_id,
+               'tile' || CAST(t.t AS VARCHAR) || ' ' || d.text AS text,
+               d.lang
+        FROM read_parquet('{src}') d,
+             (SELECT unnest(range({tiles})) AS t) t{viral}
         ORDER BY doc_id
         """
     ).arrow()
-    n = tbl.num_rows
-    step = (n + n_shards - 1) // n_shards
-    for s in range(n_shards):
-        chunk = tbl.slice(s * step, step)
-        if chunk.num_rows:
-            pq.write_table(chunk, os.path.join(path, f"part-{s:03d}.parquet"))
-    with open(marker, "w") as fh:
-        fh.write("ok")
+    scaling.write_shards(tbl, path, n_shards)
     return path
 
 
@@ -140,7 +95,7 @@ def run_skewed(cpus: int, tiles: int, family: int) -> dict:
     from stop_sync_osm_atlas_spark.operators import dedup
     from stop_sync_osm_atlas_spark.session import get_spark
 
-    path = ensure_skewed_corpus(tiles, family)
+    path = ensure_corpus(tiles, family)
     spark = get_spark(master=f"local[{cpus}]")
     docs = spark.read.parquet(path)
     n_docs = docs.count()
@@ -265,72 +220,11 @@ def run_substr(cpus: int, tiles: int, include_text: bool = True) -> dict:
     return out
 
 
-def run_phases(cpus: int, tiles: int) -> dict:
-    """Stage-level wall times for the efficiency-gap attribution (r5):
-    which prepare_corpus stage loses parallel time at low widths?
-    Mirrors the pipeline's composition, materializing each stage
-    boundary once (the extra materializations make the SUM exceed the
-    fused pipeline's wall — only the per-stage local[2]/local[8] RATIOS
-    are meaningful)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import Window as W
-
-    from stop_sync_osm_atlas_spark.functions.training import train_models_fused
-    from stop_sync_osm_atlas_spark.operators.dedup import minhash_lsh_pairs
-    from stop_sync_osm_atlas_spark.operators.lines import clean_lines
-    from stop_sync_osm_atlas_spark.plans.corpus import prepare_corpus
-    from stop_sync_osm_atlas_spark.session import get_spark
-
-    path = ensure_corpus(tiles)
-    spark = get_spark(master=f"local[{cpus}]")
-    docs = spark.read.parquet(path)
-    # warm-up
-    dec_w, bins_w = prepare_corpus(
-        spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    )
-    bins_w.count()
-    dec_w.unpersist()
-
-    out: dict = {"cpus": cpus, "tiles": tiles}
-
-    t0 = time.time()
-    cleaned = clean_lines(docs, max_line_df=2, with_stats=True)
-    base = docs.select("doc_id", "lang").join(cleaned, "doc_id")
-    fp_w = W.partitionBy(F.md5(F.col("text_clean"))).orderBy("doc_id")
-    base = base.withColumn("_fp_rk", F.row_number().over(fp_w)).persist()
-    base.count()
-    out["clean_fp_sec"] = round(time.time() - t0, 2)
-
-    survivors = base.where(F.col("_fp_rk") == 1).select(
-        "doc_id", F.col("text_clean").alias("text")
-    )
-    t0 = time.time()
-    minhash_lsh_pairs(survivors).select("b_id").distinct().count()
-    out["lsh_sec"] = round(time.time() - t0, 2)
-
-    t0 = time.time()
-    train_models_fused(
-        base.where(F.col("_fp_rk") == 1).select(
-            F.col("text_clean").alias("text"), "lang"
-        )
-    )
-    out["train_sec"] = round(time.time() - t0, 2)
-    base.unpersist()
-
-    t0 = time.time()
-    decisions, bins = prepare_corpus(docs)
-    bins.count()
-    out["full_sec"] = round(time.time() - t0, 2)
-    decisions.unpersist()
-    return out
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--cpus", type=int, default=8)
     ap.add_argument("--tiles", type=int, default=20)
     ap.add_argument("--scaling", action="store_true")
-    ap.add_argument("--phases", action="store_true")
     ap.add_argument("--substr", action="store_true")
     ap.add_argument(
         "--skewed",
@@ -355,128 +249,57 @@ def main() -> None:
         print(json.dumps(run_skewed(args.cpus, args.tiles, args.family)))
         return
 
-    if args.substr and not args.scaling:
-        print(
-            json.dumps(
-                run_substr(
-                    args.cpus, args.tiles, include_text=not args.stats_only
-                )
-            )
-        )
-        return
-
-    if args.substr:  # --substr --scaling: local[2] vs local[8]
-        results = {}
-        extra = ["--stats-only"] if args.stats_only else []
-        for c in (2, 8):
-            out = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--cpus", str(c),
-                 "--tiles", str(args.tiles), "--substr", *extra],
-                capture_output=True, text=True, check=True,
-            )
-            line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-            results[c] = json.loads(line)
-        lo, hi = results[2], results[8]
-        eff = (hi["docs_per_sec"] / lo["docs_per_sec"]) / 4.0
-        report = {
-            "metric": "substring_dedup_scaling_local2_vs_local8",
-            "mode": lo.get("mode", "text"),
-            "value": round(eff, 4),
-            "docs": lo["docs_in"],
-            "wall_local2": lo["wall_sec"],
-            "wall_local8": hi["wall_sec"],
-            "docs_per_sec_local2": lo["docs_per_sec"],
-            "docs_per_sec_local8": hi["docs_per_sec"],
-            "conserved": lo["conserved"] and hi["conserved"],
-            "avg_dup_span_frac": hi["avg_dup_span_frac"],
-        }
-        md = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "BENCH", "BASELINE.md",
-        )
-        stamp = time.strftime("%Y-%m-%d %H:%M:%S")
-        with open(md, "a") as fh:
-            fh.write(
-                f"\n## Substring-dedup scale stress {stamp}\n"
-                f"- input: {lo['docs_in']} docs ({args.tiles}x-tiled sf0.1 documents;\n"
-                f"  full duplication density — nearly every 8-gram recurs in every tile)\n"
-                f"- operator: substring_duplication(k=8, "
-                f"include_dedup_text={not args.stats_only})\n"
-                f"- local[2]: {lo['wall_sec']} s -> {lo['docs_per_sec']} docs/sec; "
-                f"local[8]: {hi['wall_sec']} s -> {hi['docs_per_sec']} docs/sec\n"
-                f"- scaling efficiency (N vs 4N cores): **{round(eff, 4)}**\n"
-                f"- avg dup_span_frac {hi['avg_dup_span_frac']}, "
-                f"conserved = {report['conserved']}\n"
-            )
-        print(json.dumps(report))
-        return
-
-    if args.phases and not args.scaling:
-        print(json.dumps(run_phases(args.cpus, args.tiles)))
-        return
-
-    if args.phases:  # --phases --scaling: per-stage local[2] vs local[8]
-        results = {}
-        for c in (2, 8):
-            out = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--cpus", str(c),
-                 "--tiles", str(args.tiles), "--phases"],
-                capture_output=True, text=True, check=True,
-            )
-            line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-            results[c] = json.loads(line)
-        lo, hi = results[2], results[8]
-        report = {"metric": "corpus_prep_phase_scaling", "tiles": args.tiles}
-        for k in ("clean_fp_sec", "lsh_sec", "train_sec", "full_sec"):
-            report[k] = {
-                "local2": lo[k], "local8": hi[k],
-                "efficiency": round((lo[k] / hi[k]) / 4.0, 3),
-            }
-        print(json.dumps(report))
-        return
-
     if not args.scaling:
-        print(json.dumps(run_once(args.cpus, args.tiles)))
+        if args.substr:
+            out = run_substr(args.cpus, args.tiles, include_text=not args.stats_only)
+        else:
+            out = run_once(args.cpus, args.tiles)
+        print(json.dumps(out))
         return
 
-    results = {}
-    for c in (2, 8):
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--cpus", str(c),
-             "--tiles", str(args.tiles)],
-            capture_output=True, text=True, check=True,
-        )
-        line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-        results[c] = json.loads(line)
-    lo, hi = results[2], results[8]
-    eff = (hi["docs_per_sec"] / lo["docs_per_sec"]) / 4.0
-    report = {
-        "metric": "corpus_prep_scaling_local2_vs_local8",
-        "value": round(eff, 4),
+    extra = ["--tiles", str(args.tiles)]
+    if args.substr:
+        extra += ["--substr"] + (["--stats-only"] if args.stats_only else [])
+    lo, hi = (scaling.child(__file__, c, *extra) for c in scaling.WIDTHS)
+    eff = scaling.efficiency(lo["docs_per_sec"], hi["docs_per_sec"])
+    name = "substring_dedup" if args.substr else "corpus_prep"
+    report = {"metric": f"{name}_scaling_local2_vs_local8"}
+    if args.substr:
+        report["mode"] = lo["mode"]
+    report.update({
+        "value": eff,
         "docs": lo["docs_in"],
         "wall_local2": lo["wall_sec"],
         "wall_local8": hi["wall_sec"],
         "docs_per_sec_local2": lo["docs_per_sec"],
         "docs_per_sec_local8": hi["docs_per_sec"],
         "conserved": lo["conserved"] and hi["conserved"],
-        "reasons": hi["reasons"],
-    }
-    md = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BENCH", "BASELINE.md",
+    })
+    speeds = (
+        f"- local[2]: {lo['wall_sec']} s -> {lo['docs_per_sec']} docs/sec; "
+        f"local[8]: {hi['wall_sec']} s -> {hi['docs_per_sec']} docs/sec\n"
+        f"- scaling efficiency (N vs 4N cores): **{eff}**\n"
     )
-    stamp = time.strftime("%Y-%m-%d %H:%M:%S")
-    with open(md, "a") as fh:
-        fh.write(
-            f"\n## Corpus-pipeline scale stress {stamp}\n"
+    if args.substr:
+        report["avg_dup_span_frac"] = hi["avg_dup_span_frac"]
+        scaling.append_baseline("Substring-dedup scale stress", [
+            f"- input: {lo['docs_in']} docs ({args.tiles}x-tiled sf0.1 documents;\n"
+            f"  full duplication density — nearly every 8-gram recurs in every tile)\n",
+            f"- operator: substring_duplication(k=8, "
+            f"include_dedup_text={not args.stats_only})\n",
+            speeds,
+            f"- avg dup_span_frac {hi['avg_dup_span_frac']}, "
+            f"conserved = {report['conserved']}\n",
+        ])
+    else:
+        report["reasons"] = hi["reasons"]
+        scaling.append_baseline("Corpus-pipeline scale stress", [
             f"- input: {lo['docs_in']} docs (20x-tiled sf0.1 documents; tiles are\n"
-            f"  mutual MinHash near-duplicates — dup-heavy web-crawl structure)\n"
-            f"- local[2]: {lo['wall_sec']} s -> {lo['docs_per_sec']} docs/sec; "
-            f"local[8]: {hi['wall_sec']} s -> {hi['docs_per_sec']} docs/sec\n"
-            f"- scaling efficiency (N vs 4N cores): **{round(eff, 4)}**\n"
+            f"  mutual MinHash near-duplicates — dup-heavy web-crawl structure)\n",
+            speeds,
             f"- conservation: every input doc decided exactly once = "
-            f"{report['conserved']}; reason mix {hi['reasons']}\n"
-        )
+            f"{report['conserved']}; reason mix {hi['reasons']}\n",
+        ])
     print(json.dumps(report))
 
 

@@ -26,9 +26,10 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
 import sys
 import time
+
+import scaling
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -39,13 +40,10 @@ N_LANGS = 30
 
 def ensure_rows(n: int, n_shards: int = 64) -> str:
     import duckdb
-    import pyarrow.parquet as pq
 
     path = f"/tmp/spark_graft_bench/packmix_n{n}"
-    marker = os.path.join(path, "_done")
-    if os.path.exists(marker):
+    if os.path.exists(os.path.join(path, "_done")):
         return path
-    os.makedirs(path, exist_ok=True)
     # Zipf CDF over N_LANGS ranks; u in [0,1) from md5 -> rank via the
     # inverse CDF (harmonic weights). n_tok in [50, 1000).
     hn = sum(1.0 / (k + 1) for k in range(N_LANGS))
@@ -69,13 +67,7 @@ def ensure_rows(n: int, n_shards: int = 64) -> str:
         ORDER BY doc_id
         """
     ).arrow()
-    step = (n + n_shards - 1) // n_shards
-    for s in range(n_shards):
-        chunk = tbl.slice(s * step, step)
-        if chunk.num_rows:
-            pq.write_table(chunk, os.path.join(path, f"part-{s:03d}.parquet"))
-    with open(marker, "w") as fh:
-        fh.write("ok")
+    scaling.write_shards(tbl, path, n_shards)
     return path
 
 
@@ -138,25 +130,6 @@ def run_once(cpus: int, rows: int) -> dict:
     return out
 
 
-def _append_md(lines: list[str]) -> None:
-    md = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BENCH", "BASELINE.md",
-    )
-    with open(md, "a") as fh:
-        fh.writelines(lines)
-
-
-def _child(cpus: int, rows: int) -> dict:
-    out = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--cpus", str(cpus),
-         "--rows", str(rows)],
-        capture_output=True, text=True, check=True,
-    )
-    line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-    return json.loads(line)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--cpus", type=int, default=8)
@@ -166,44 +139,42 @@ def main() -> None:
     args = ap.parse_args()
 
     if args.scaling:
-        lo, hi = _child(2, args.rows), _child(8, args.rows)
-        eff_pack = (hi["docs_per_sec_pack"] / lo["docs_per_sec_pack"]) / 4.0
-        eff_mix = (hi["docs_per_sec_mix"] / lo["docs_per_sec_mix"]) / 4.0
-        stamp = time.strftime("%Y-%m-%d %H:%M:%S")
-        _append_md([
-            f"\n## Pack/mixture scale stress {stamp}\n",
+        lo, hi = (scaling.child(__file__, c, "--rows", str(args.rows))
+                  for c in scaling.WIDTHS)
+        eff_pack = scaling.efficiency(lo["docs_per_sec_pack"], hi["docs_per_sec_pack"])
+        eff_mix = scaling.efficiency(lo["docs_per_sec_mix"], hi["docs_per_sec_mix"])
+        scaling.append_baseline("Pack/mixture scale stress", [
             f"- input: {lo['rows']} (doc_id, lang, n_tok) rows, Zipfian lang"
             f" over {N_LANGS} langs (top lang ~23%)\n",
             f"- pack_bins sharded(64): local[2] {lo['pack_sharded_sec']} s,"
             f" local[8] {hi['pack_sharded_sec']} s -> N-vs-4N efficiency"
-            f" **{round(eff_pack, 4)}**\n",
+            f" **{eff_pack}**\n",
             f"- pack_bins GLOBAL (contract straggler baseline): local[2]"
             f" {lo['pack_global_sec']} s, local[8] {hi['pack_global_sec']} s"
             f" (gain bounded by the one-task top-lang window)\n",
             f"- mixture_sample (10 domains, max_epochs=4,"
             f" {hi['mixture_rows_out']} rows out): local[2]"
             f" {lo['mixture_sec']} s, local[8] {hi['mixture_sec']} s ->"
-            f" efficiency **{round(eff_mix, 4)}**\n",
+            f" efficiency **{eff_mix}**\n",
         ])
         print(json.dumps({
             "metric": "pack_mix_scaling_local2_vs_local8",
-            "pack_sharded_eff": round(eff_pack, 4),
-            "mixture_eff": round(eff_mix, 4),
+            "pack_sharded_eff": eff_pack,
+            "mixture_eff": eff_mix,
             "lo": lo, "hi": hi,
         }))
         return
 
     if args.linearity:
-        small, big = _child(8, args.rows // 4), _child(8, args.rows)
+        small, big = (scaling.child(__file__, 8, "--rows", str(n))
+                      for n in (args.rows // 4, args.rows))
         ratio_pack = (
             big["pack_sharded_sec"] / small["pack_sharded_sec"]
         ) / (big["rows"] / small["rows"])
         ratio_mix = (
             big["mixture_sec"] / small["mixture_sec"]
         ) / (big["rows"] / small["rows"])
-        stamp = time.strftime("%Y-%m-%d %H:%M:%S")
-        _append_md([
-            f"\n## Pack/mixture data-size linearity {stamp}\n",
+        scaling.append_baseline("Pack/mixture data-size linearity", [
             f"- local[8], {small['rows']} vs {big['rows']} rows\n",
             f"- pack_bins sharded(64): {small['pack_sharded_sec']} ->"
             f" {big['pack_sharded_sec']} s; per-row time ratio"

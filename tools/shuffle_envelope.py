@@ -24,7 +24,6 @@ defect (serial task, skewed key, driver loop).
 Usage:
     python tools/shuffle_envelope.py                  # local[2] vs local[8]
     python tools/shuffle_envelope.py --cpus 8         # one width, JSON line
-    SPARK_GRAFT_SCALING_CPUS=2,8 ...                  # width pair override
 
 Prints one JSON line; the pair mode appends a section to
 BENCH/BASELINE.md. Run nothing else Spark-side while timing.
@@ -35,9 +34,10 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
 import sys
 import time
+
+import scaling
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -118,76 +118,39 @@ def main() -> None:
         print(json.dumps(run_once(args.cpus)))
         return
 
-    widths = [
-        int(x)
-        for x in os.environ.get("SPARK_GRAFT_SCALING_CPUS", "2,8").split(",")
-    ]
-    # exactly two ASCENDING widths, or the lo/hi reads below would
-    # crash (one entry) or silently log an inverted efficiency into
-    # BENCH/BASELINE.md (descending order)
-    if len(widths) != 2 or widths[0] >= widths[1]:
-        raise SystemExit(
-            "SPARK_GRAFT_SCALING_CPUS must be two ascending widths, "
-            f"e.g. '2,8' (got {widths!r})"
-        )
-    results = {}
-    for c in widths:
-        try:
-            out = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--cpus", str(c)],
-                capture_output=True, text=True, check=True,
-            )
-        except subprocess.CalledProcessError as e:
-            # surface the child's Spark traceback — check=True alone
-            # reports only an opaque exit status
-            sys.stderr.write(e.stderr or "")
-            raise
-        line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-        results[c] = json.loads(line)
-    lo, hi = results[widths[0]], results[widths[1]]
-    factor = widths[1] / widths[0]
+    lo, hi = (scaling.child(__file__, c) for c in scaling.WIDTHS)
+    # wall times are inverse rates: (hi, lo) order
     effs = {
-        shape: round((lo[f"{shape}_sec"] / hi[f"{shape}_sec"]) / factor, 4)
+        shape: scaling.efficiency(hi[f"{shape}_sec"], lo[f"{shape}_sec"])
         for shape in ("agg", "win")
     }
     # determinism cross-check: the same survivors must count at both widths
     consistent = all(
         lo[f"{s}_survivors"] == hi[f"{s}_survivors"] for s in ("agg", "win")
     )
+    n, m = scaling.WIDTHS
     report = {
-        "metric": f"host_shuffle_envelope_local{widths[0]}_vs_local{widths[1]}",
+        "metric": f"host_shuffle_envelope_local{n}_vs_local{m}",
         "agg_efficiency": effs["agg"],
         "win_efficiency": effs["win"],
-        "agg_sec": {widths[0]: lo["agg_sec"], widths[1]: hi["agg_sec"]},
-        "win_sec": {widths[0]: lo["win_sec"], widths[1]: hi["win_sec"]},
+        "agg_sec": {n: lo["agg_sec"], m: hi["agg_sec"]},
+        "win_sec": {n: lo["win_sec"], m: hi["win_sec"]},
         "consistent": consistent,
         "agg_rows": AGG_ROWS,
         "win_rows": WIN_ROWS,
     }
-    md = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BENCH", "BASELINE.md",
-    )
-    stamp = time.strftime("%Y-%m-%d %H:%M:%S")
-    with open(md, "a") as fh:
-        fh.write(
-            f"\n## Host shuffle envelope {stamp} "
-            f"(local[{widths[0]}] vs local[{widths[1]}])\n"
-            f"- pure-JVM probe (tools/shuffle_envelope.py): no Python "
-            f"workers, no IO —\n  just exchange + hash-agg / sort-window "
-            f"over spark.range\n"
-            f"- hash-aggregate ({AGG_ROWS} rows, {AGG_KEYS} keys): "
-            f"{lo['agg_sec']} s vs {hi['agg_sec']} s -> efficiency "
-            f"**{effs['agg']}**\n"
-            f"- sort-window ({WIN_ROWS} rows, {WIN_KEYS} keys): "
-            f"{lo['win_sec']} s vs {hi['win_sec']} s -> efficiency "
-            f"**{effs['win']}**\n"
-            f"- survivors identical at both widths = {consistent}\n"
-            f"- READING: this is the HOST's ceiling for pure shuffle "
-            f"work. An isolated\n  operator matching this band "
-            f"(dedup/LSH ~0.55-0.66) is at the envelope;\n  only ratios "
-            f"clearly below it indicate an operator defect.\n"
-        )
+    scaling.append_baseline(f"Host shuffle envelope (local[{n}] vs local[{m}])", [
+        "- pure-JVM probe (tools/shuffle_envelope.py): no Python workers, no IO —\n"
+        "  just exchange + hash-agg / sort-window over spark.range\n",
+        f"- hash-aggregate ({AGG_ROWS} rows, {AGG_KEYS} keys): "
+        f"{lo['agg_sec']} s vs {hi['agg_sec']} s -> efficiency **{effs['agg']}**\n",
+        f"- sort-window ({WIN_ROWS} rows, {WIN_KEYS} keys): "
+        f"{lo['win_sec']} s vs {hi['win_sec']} s -> efficiency **{effs['win']}**\n",
+        f"- survivors identical at both widths = {consistent}\n",
+        "- READING: this is the HOST's ceiling for pure shuffle work. An isolated\n"
+        "  operator matching this band (dedup/LSH ~0.55-0.66) is at the envelope;\n"
+        "  only ratios clearly below it indicate an operator defect.\n",
+    ])
     print(json.dumps(report))
 
 
