@@ -25,6 +25,12 @@ the same tuned session.  Scale notes (100 TB design, local[32] test):
   process for every file and directory it wrote (~850 per run_pipeline
   iteration at 4k pairs in 16 shards), and a ``readlink`` per status
   lookup of a streaming checkpoint.
+- Python workers fork from ``worker_daemon``, not ``pyspark.daemon``:
+  each task's ``importlib.invalidate_caches()`` re-read the directories
+  of ``pyspark.zip`` and the spark-core jar on the worker's launch path
+  (~0.2 CPU-s per task on 4 vCPUs, whatever the rows). The package root
+  goes on the workers' ``PYTHONPATH``, so the daemon (and the engine's
+  UDF modules) import whatever the JVM's working directory.
 """
 
 from __future__ import annotations
@@ -37,7 +43,10 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-_JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+from . import worker_daemon
+
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+_JVM_DIR = os.path.join(_PKG_DIR, "jvm")
 NIO_LOCAL_FS = "stop_sync_osm_atlas_spark.jvm.NioLocalFileSystem"
 NIO_LOCAL_AFS = NIO_LOCAL_FS + "$Fs"
 
@@ -166,6 +175,9 @@ def get_spark(
         # the class name varies with AQE's stage order: without this an
         # identical pipeline numbered differently compiles again.
         .config("spark.sql.codegen.useIdInClassName", "false")
+        .config("spark.python.daemon.module", worker_daemon.__name__)
+        # PythonWorkerFactory merges this into the workers' PYTHONPATH
+        .config("spark.executorEnv.PYTHONPATH", os.path.dirname(_PKG_DIR))
     )
     extra_conf = dict(extra_conf or {})
     classes = nio_local_fs_classes() if master.startswith("local") else None
@@ -194,8 +206,9 @@ def widen_if_narrow(df: DataFrame) -> DataFrame:
     (or one unsplittable gzip / row group) scans as a handful of tasks
     and serializes that pass on one core, and a round-robin shuffle of
     the slim rows costs little next to it. Cheap consumers should stay
-    narrow: a bigram-only training pass ran 0.45 s narrow vs 0.60 s
-    widened at sf0.1 on 4 cores, an NB pass 1.44 s vs 0.94 s.
+    narrow: at sf0.1 on 4 cores (medians of 8 alternating reps), a
+    bigram-only training pass ran 0.29 s narrow vs 0.37 s widened, an
+    NB pass 1.35 s vs 0.60 s.
     NOTE ``.rdd.getNumPartitions()`` is not a free probe under AQE: it
     builds the final plan, which runs any pre-final (shuffle) stages of
     ``df`` as jobs.

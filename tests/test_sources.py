@@ -282,3 +282,114 @@ def test_nio_local_fs_falls_back_without_javac(tmp_path, monkeypatch):
     monkeypatch.setenv("JAVA_HOME", str(tmp_path / "no-jdk"))
     assert nio_local_fs_classes(str(tmp_path / "build")) is None
     assert not (tmp_path / "build").exists()
+
+
+def test_worker_daemon_keeps_launch_archive_caches(spark):
+    """Workers fork from the engine's daemon, whose patch leaves the
+    zipimporters over the launch-time archives (pyspark.zip, py4j, the
+    spark-core jar) cached across each task's invalidate_caches();
+    importing the module in the driver patches nothing."""
+    import zipimport
+
+    from stop_sync_osm_atlas_spark import worker_daemon
+
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+
+    def _import_state(it):
+        # one row per task: the daemon the worker forked from, and whether
+        # invalidate_caches() kept the directory each launch-time
+        # archive's zipimporter had cached (3.11 replaces the dict when
+        # it re-reads)
+        import importlib
+        import os
+        import sys
+        import zipimport
+
+        launch = {p for p in os.environ["PYTHONPATH"].split(os.pathsep) if os.path.isfile(p)}
+        zis = [v for v in sys.path_importer_cache.values() if isinstance(v, zipimport.zipimporter)]
+        before = [(zi, zi._files) for zi in zis if zi.archive in launch]
+        importlib.invalidate_caches()
+        for _ in it:
+            pass
+        yield pd.DataFrame({
+            "daemon": [sys.modules["__main__"].__spec__.name],
+            "launch_importers": [len(before)],
+            "kept": [sum(zi._files is files for zi, files in before)],
+        })
+
+    out = (
+        spark.range(0, 64, numPartitions=8)
+        .mapInPandas(_import_state, "daemon string, launch_importers long, kept long")
+        .toPandas()
+    )
+    assert set(out.daemon) == {worker_daemon.__name__}
+    assert (out.launch_importers > 0).all()
+    assert (out.kept == out.launch_importers).all(), out
+
+
+def test_worker_daemon_still_sees_py_files_added_mid_session(spark, tmp_path):
+    """A zip and a .py that addPyFile ships once the daemon's workers are
+    warm still import in a task, and the added zip's own importer is
+    re-read by invalidate_caches like any archive not on the launch
+    path."""
+    import uuid
+    import zipfile
+
+    spark.range(0, 8, numPartitions=4).mapInPandas(lambda it: it, "id long").collect()
+    tag = uuid.uuid4().hex[:12]
+    zmod, pmod = f"late_zip_{tag}", f"late_py_{tag}"
+    with zipfile.ZipFile(tmp_path / f"{zmod}.zip", "w") as zf:
+        zf.writestr(f"{zmod}.py", "VALUE = 17\n")
+    (tmp_path / f"{pmod}.py").write_text("VALUE = 25\n")
+    spark.sparkContext.addPyFile(str(tmp_path / f"{zmod}.zip"))
+    spark.sparkContext.addPyFile(str(tmp_path / f"{pmod}.py"))
+
+    def _imports(it):
+        import importlib
+        import sys
+        import zipimport
+
+        zm, pm = importlib.import_module(zmod), importlib.import_module(pmod)
+        zi = next(
+            v for k, v in sys.path_importer_cache.items()
+            if isinstance(v, zipimport.zipimporter) and k.endswith(f"{zmod}.zip")
+        )
+        files = zi._files
+        importlib.invalidate_caches()
+        for _ in it:
+            pass
+        yield pd.DataFrame({"v": [zm.VALUE + pm.VALUE], "reread": [zi._files is not files]})
+
+    out = (
+        spark.range(0, 16, numPartitions=4)
+        .mapInPandas(_imports, "v long, reread boolean")
+        .toPandas()
+    )
+    assert list(out.v) == [42] * 4
+    assert out.reread.all()
+
+
+def test_unimportable_daemon_module_fails_the_task(tmp_path):
+    """A session whose spark.python.daemon.module cannot be imported
+    fails its first Python task with the import error; it does not fall
+    back to pyspark's stock daemon."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "from stop_sync_osm_atlas_spark.session import get_spark\n"
+        "spark = get_spark(master='local[1]', extra_conf={"
+        "'spark.python.daemon.module': 'no_such_daemon_module'})\n"
+        "spark.range(4).mapInPandas(lambda it: it, 'id long').collect()\n"
+        "print('TASK RAN')\n"
+    )
+    env = dict(os.environ, PYTHONPATH=root, SPARK_DRIVER_MEMORY="512m")
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=240,
+    )
+    assert proc.returncode != 0
+    assert "TASK RAN" not in proc.stdout
+    assert "No module named no_such_daemon_module" in proc.stderr

@@ -50,11 +50,41 @@ def test_append_baseline_writes_titled_section(tmp_path, monkeypatch):
     md = tmp_path / "BASELINE.md"
     md.write_text("# log\n")
     monkeypatch.setattr(scaling, "BASELINE", str(md))
+    monkeypatch.setattr(scaling.os, "cpu_count", lambda: 32)
     scaling.append_baseline("Probe stress", ["- a: 1\n", "- b: 2\n"])
     lines = md.read_text().splitlines()
     assert lines[:2] == ["# log", ""]
     assert lines[2].startswith("## Probe stress 20")
-    assert lines[3:] == ["- a: 1", "- b: 2"]
+    assert "oversubscribed" not in lines[2]
+    assert lines[3:] == ["- host: 32 CPUs, width pair local[2]/local[8]", "- a: 1", "- b: 2"]
+
+
+def test_append_baseline_flags_an_oversubscribed_host(tmp_path, monkeypatch):
+    """A host with fewer CPUs than the pair's wide side cannot show the
+    code's N-vs-4N scaling; its section says so."""
+    md = tmp_path / "BASELINE.md"
+    monkeypatch.setattr(scaling, "BASELINE", str(md))
+    monkeypatch.setattr(scaling.os, "cpu_count", lambda: 4)
+    scaling.append_baseline("Probe stress", ["- a: 1\n"])
+    lines = md.read_text().splitlines()
+    assert lines[1].startswith("## Probe stress 20")
+    assert lines[1].endswith(" (oversubscribed)")
+    assert lines[2] == "- host: 4 CPUs, width pair local[2]/local[8] (oversubscribed)"
+
+
+@pytest.mark.parametrize("mode", [[], ["--substr"]])
+def test_corpus_stress_section_names_its_tiles(tmp_path, monkeypatch, capsys, mode):
+    monkeypatch.syspath_prepend(TOOLS)
+    import corpus_stress
+
+    run = {"docs_in": 300, "wall_sec": 1.0, "docs_per_sec": 300.0, "conserved": True,
+           "reasons": {}, "mode": "full", "avg_dup_span_frac": 0.5}
+    monkeypatch.setattr(corpus_stress.scaling, "child", lambda *a: dict(run))
+    monkeypatch.setattr(corpus_stress.scaling, "BASELINE", str(tmp_path / "BASELINE.md"))
+    monkeypatch.setattr(sys, "argv", ["corpus_stress.py", "--scaling", "--tiles", "3", *mode])
+    corpus_stress.main()
+    assert "- input: 300 docs (3x-tiled sf0.1 documents;" in (tmp_path / "BASELINE.md").read_text()
+    assert capsys.readouterr().out.startswith("{")
 
 
 def test_write_shards_slices_and_marks_done(tmp_path):

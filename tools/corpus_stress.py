@@ -294,7 +294,7 @@ def main() -> None:
     else:
         report["reasons"] = hi["reasons"]
         scaling.append_baseline("Corpus-pipeline scale stress", [
-            f"- input: {lo['docs_in']} docs (20x-tiled sf0.1 documents; tiles are\n"
+            f"- input: {lo['docs_in']} docs ({args.tiles}x-tiled sf0.1 documents; tiles are\n"
             f"  mutual MinHash near-duplicates — dup-heavy web-crawl structure)\n",
             speeds,
             f"- conservation: every input doc decided exactly once = "

@@ -44,11 +44,17 @@ def efficiency(rate_lo: float, rate_hi: float) -> float:
 
 
 def append_baseline(title: str, lines: list[str]) -> None:
-    """Append ``## <title> <timestamp>`` and ``lines`` (each ending in
-    a newline) to BENCH/BASELINE.md."""
+    """Append ``## <title> <timestamp>``, a host line and ``lines``
+    (each ending in a newline) to BENCH/BASELINE.md. The host line
+    stamps ``os.cpu_count()``; a host with fewer CPUs than ``WIDTHS[1]``
+    flags the section oversubscribed, as its local[WIDTHS[1]] figures
+    measure the host's CPU count rather than the code's scaling."""
     stamp = time.strftime("%Y-%m-%d %H:%M:%S")
+    cpus = os.cpu_count()
+    flag = " (oversubscribed)" if WIDTHS[1] > (cpus or 0) else ""
     with open(BASELINE, "a") as fh:
-        fh.write(f"\n## {title} {stamp}\n")
+        fh.write(f"\n## {title} {stamp}{flag}\n")
+        fh.write(f"- host: {cpus} CPUs, width pair local[{WIDTHS[0]}]/local[{WIDTHS[1]}]{flag}\n")
         fh.writelines(lines)
 
 
