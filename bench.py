@@ -26,6 +26,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from tools import scaling  # noqa: E402
+
 PAIRS_N = int(os.environ.get("SPARK_GRAFT_BENCH_PAIRS", "200000"))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -188,7 +190,17 @@ def main() -> None:
             f"cold_sec_local{n_hi}": round(results[n_hi].get("pipeline_sec_cold", 0), 2),
             "widths": list(widths),
         }
-        _append_baseline_md(report)
+        scaling.append_baseline("Scaling run", [
+            f"- input rows: {n} (deterministic pairs fixture, seed 42)\n",
+            f"- local[{n_lo}]: {report[f'pipeline_sec_local{n_lo}']} s -> "
+            f"{report[f'images_per_sec_local{n_lo}']} images/sec\n",
+            f"- local[{n_hi}]: {report[f'pipeline_sec_local{n_hi}']} s -> "
+            f"{report[f'images_per_sec_local{n_hi}']} images/sec\n",
+            f"- scaling efficiency (N vs 4N cores): **{report['value']}** (target >= 0.8)\n",
+            "- methodology: steady-state (per-child warm-up pipeline run), "
+            f"production-weight image dims {SCALING_DIMS} so decode dominates "
+            "compute as in a real corpus\n",
+        ], widths=widths)
         print(json.dumps(report))
         return
 
@@ -322,34 +334,6 @@ def main() -> None:
             }
         )
     )
-
-
-def _append_baseline_md(report: dict) -> None:
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH", "BASELINE.md")
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    stamp = time.strftime("%Y-%m-%d %H:%M:%S")
-    lo, hi = report.get("widths", [8, 32])
-    lines = [
-        f"\n## Scaling run {stamp}\n",
-        f"- input rows: {report['rows']} (deterministic pairs fixture, seed 42)\n",
-        f"- local[{lo}]:  {report[f'pipeline_sec_local{lo}']} s  -> {report[f'images_per_sec_local{lo}']} images/sec\n",
-        f"- local[{hi}]: {report[f'pipeline_sec_local{hi}']} s -> {report[f'images_per_sec_local{hi}']} images/sec\n",
-        f"- scaling efficiency (N vs 4N cores): **{report['value']}** (target >= 0.8)\n",
-        "- methodology: steady-state (per-child warm-up pipeline run), "
-        "production-weight image dims "
-        f"{SCALING_DIMS} so decode dominates compute as in a real corpus\n",
-    ]
-    header = (
-        "# BENCH/BASELINE — measured engine numbers\n\n"
-        "Sandbox proxy for the north_rule's N-vs-4N-executor criterion: the\n"
-        "same keep-drop-scrub pipeline job on identical input at local[8]\n"
-        "and local[32] (fresh JVM each), throughput at both + efficiency.\n"
-    )
-    exists = os.path.exists(path)
-    with open(path, "a") as fh:
-        if not exists:
-            fh.write(header)
-        fh.writelines(lines)
 
 
 if __name__ == "__main__":

@@ -88,6 +88,18 @@ class CheckpointedWriter:
         one full pass per group. Per-group row counts are observed on
         that same write, so the job count does not grow with
         ``n_groups``.
+
+        Layout: an AQE ``rebalance`` on ``_commit_group`` sits between
+        the observed frame and the write, so each group is written by
+        the few post-shuffle tasks that hold it (split at the advisory
+        size, small groups merged) and its file count follows its
+        bytes. Without it, each task of the N-task upstream stage
+        writes one file into every group it holds rows of (16 x 8 =
+        128 files for 4,000 rows), and ``read_all`` scans each file as
+        one task under the session's 16 MB open cost. A
+        ``repartition("_commit_group")`` would write each group from a
+        single task however large it grows. Only the slim decision rows
+        cross this shuffle.
         """
         done = self.committed_groups()
         todo = [g for g in range(self.n_groups) if g not in done]
@@ -105,6 +117,7 @@ class CheckpointedWriter:
             )
             .where(grp.isin(todo))
             .observe(obs, *[F.count_if(grp == g).alias(str(g)) for g in todo])
+            .hint("rebalance", "_commit_group")
             .write.mode("overwrite")
             .partitionBy("_commit_group")
             .parquet(tmp_root)

@@ -9,7 +9,9 @@ import shutil
 
 import pandas as pd
 
+from stop_sync_osm_atlas_spark.fixtures.generator import write_fixture
 from stop_sync_osm_atlas_spark.operators.cascade import run_cascade
+from stop_sync_osm_atlas_spark.plans.pipeline import run_pipeline
 from stop_sync_osm_atlas_spark.schemas import PAIRS_SCHEMA
 from stop_sync_osm_atlas_spark.sources.checkpoint import CheckpointedWriter
 
@@ -20,8 +22,10 @@ def _decisions(spark, fixture_paths, nd_kwargs):
 
 
 def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Rows sorted by image_id; the ``reasons`` arrays as tuples, which
+    compare by value (the arrays themselves do not)."""
     return (
-        pdf.drop(columns=["reasons"])
+        pdf.assign(reasons=pdf["reasons"].map(lambda r: None if r is None else tuple(r)))
         .sort_values("image_id")
         .reset_index(drop=True)
     )
@@ -150,3 +154,42 @@ def test_run_executes_plan_once(spark, tmp_path):
     counts8, jobs8 = run(8)
     assert set(counts8) == set(range(8)) and sum(counts8.values()) == 400
     assert jobs8 == jobs4, f"{jobs4} jobs at n_groups=4 but {jobs8} at 8"
+
+
+def test_run_pipeline_resume_and_layout(
+    spark, fixture_1k, nd_kwargs, check_rollup, tmp_path
+):
+    """run_pipeline end to end over an 8-shard input: a clean run, then
+    a resume after half the markers are lost, give the same decisions
+    (reasons included) and a metrics table equal to a pandas rollup of
+    them. Each group is written as one file at this size: written
+    straight off the 8-task scan stage it was one file per task."""
+    paths = write_fixture(fixture_1k, str(tmp_path / "fx"), n_shards=8)
+    root = str(tmp_path / "out")
+
+    def run() -> dict[int, int]:
+        return run_pipeline(
+            spark, paths["pairs"], root, overrides_path=paths["overrides"],
+            neardup_kwargs=nd_kwargs, run_id="r", n_groups=4,
+        )["group_counts"]
+
+    def tables() -> tuple[pd.DataFrame, pd.DataFrame]:
+        dec = _canon(CheckpointedWriter(root, n_groups=4).read_all(spark).toPandas())
+        return dec, spark.read.parquet(os.path.join(root, "metrics")).toPandas()
+
+    counts = run()
+    assert set(counts) == {0, 1, 2, 3} and sum(counts.values()) == len(fixture_1k.pairs)
+    w = CheckpointedWriter(root, n_groups=4)
+    for g in range(4):
+        files = [f for f in os.listdir(w._group_dir(g)) if f.endswith(".parquet")]
+        assert len(files) == 1, f"group {g}: {sorted(files)}"
+    clean, clean_metrics = tables()
+    assert clean["reasons"].map(bool).any()
+    check_rollup(clean_metrics, clean, "r")
+
+    for g in (1, 3):
+        os.remove(w._marker(g))
+    assert set(run()) == {1, 3}
+    resumed, resumed_metrics = tables()
+    pd.testing.assert_frame_equal(resumed, clean)
+    check_rollup(resumed_metrics, resumed, "r")

@@ -4,6 +4,7 @@ tool still starts. No Spark: the children here are tiny fake scripts."""
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 import subprocess
 import sys
@@ -105,3 +106,42 @@ def test_tool_help_exits_zero(tool):
         capture_output=True, text=True,
     )
     assert out.returncode == 0, out.stderr
+
+
+@pytest.mark.parametrize(
+    "pair,cpus,flagged", [("8,32", 16, True), ("2,8", 16, False)], ids=["8v32", "2v8"]
+)
+def test_bench_scaling_section_is_flagged_against_its_width_pair(
+    tmp_path, monkeypatch, pair, cpus, flagged
+):
+    """bench.py --scaling writes its section through append_baseline, so
+    it stamps the host's CPUs and flags oversubscription against the
+    pair it ran (SPARK_GRAFT_SCALING_CPUS), not the tools' WIDTHS."""
+    spec = importlib.util.spec_from_file_location(
+        "bench", os.path.join(os.path.dirname(TOOLS), "bench.py")
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    md = tmp_path / "BASELINE.md"
+    monkeypatch.setattr(bench.scaling, "BASELINE", str(md))
+    monkeypatch.setattr(bench.scaling.os, "cpu_count", lambda: cpus)
+    monkeypatch.setattr(bench, "ensure_pairs", lambda n, dims: str(tmp_path / "pairs"))
+
+    def fake_child(cmd, **kwargs):
+        c = int(cmd[cmd.index("--cpus") + 1])
+        line = json.dumps({"rows": 1000, "pipeline_sec": 80.0 / c, "cpus": c})
+        return subprocess.CompletedProcess(cmd, 0, stdout=f"warm\n{line}\n", stderr="")
+
+    monkeypatch.setattr(bench.subprocess, "run", fake_child)
+    monkeypatch.setenv("SPARK_GRAFT_SCALING_CPUS", pair)
+    monkeypatch.setattr(sys, "argv", ["bench.py", "--scaling"])
+    bench.main()
+    lo, hi = pair.split(",")
+    flag = " (oversubscribed)" if flagged else ""
+    lines = md.read_text().splitlines()
+    assert lines[1].startswith("## Scaling run 20")
+    assert lines[1].endswith(" (oversubscribed)") == flagged
+    assert lines[2] == f"- host: {cpus} CPUs, width pair local[{lo}]/local[{hi}]{flag}"
+    assert lines[3] == "- input rows: 1000 (deterministic pairs fixture, seed 42)"
+    assert lines[4].startswith(f"- local[{lo}]: ") and lines[5].startswith(f"- local[{hi}]: ")
+    assert lines[6] == "- scaling efficiency (N vs 4N cores): **1.0** (target >= 0.8)"

@@ -43,18 +43,20 @@ def efficiency(rate_lo: float, rate_hi: float) -> float:
     return round((rate_hi / rate_lo) / (WIDTHS[1] / WIDTHS[0]), 4)
 
 
-def append_baseline(title: str, lines: list[str]) -> None:
+def append_baseline(title: str, lines: list[str], widths: tuple[int, int] = WIDTHS) -> None:
     """Append ``## <title> <timestamp>``, a host line and ``lines``
     (each ending in a newline) to BENCH/BASELINE.md. The host line
-    stamps ``os.cpu_count()``; a host with fewer CPUs than ``WIDTHS[1]``
-    flags the section oversubscribed, as its local[WIDTHS[1]] figures
-    measure the host's CPU count rather than the code's scaling."""
+    stamps ``os.cpu_count()`` and the width pair the section ran; a host
+    with fewer CPUs than ``widths[1]`` flags the section oversubscribed,
+    as its local[widths[1]] figures measure the host's CPU count rather
+    than the code's scaling."""
     stamp = time.strftime("%Y-%m-%d %H:%M:%S")
     cpus = os.cpu_count()
-    flag = " (oversubscribed)" if WIDTHS[1] > (cpus or 0) else ""
+    lo, hi = widths
+    flag = " (oversubscribed)" if hi > (cpus or 0) else ""
     with open(BASELINE, "a") as fh:
         fh.write(f"\n## {title} {stamp}{flag}\n")
-        fh.write(f"- host: {cpus} CPUs, width pair local[{WIDTHS[0]}]/local[{WIDTHS[1]}]{flag}\n")
+        fh.write(f"- host: {cpus} CPUs, width pair local[{lo}]/local[{hi}]{flag}\n")
         fh.writelines(lines)
 
 
