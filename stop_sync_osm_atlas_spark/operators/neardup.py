@@ -65,26 +65,30 @@ the component's min image_id = min over member hashes of per-hash
 min(image_id) — the observable output is row-identical while a viral
 image with 10^6 exact copies costs ONE node, never a 10^6-row O(n^2)
 task. Hot detection and the salting decision still use ROW counts (sum
-of cnt). The whole build runs as exactly TWO eager jobs: (1) a bounded
-collect of the DISTINCT bucket-pair graph (at most ~bits * 2^bits / 2
-pairs under multiprobe), which populates the `pc` cache as a side
-effect and is contracted by a driver union-find (distributed min-label
-fallback above SG_DRIVER_CC_MAX); (2) a localCheckpoint of the phash ->
-(cluster_id, cluster_size) map, shrunk to hashes in non-singleton
-clusters (the only rows whose attach differs from the defaults) — after
-which every internal cache is unpersisted. Attaching clusters to the
-full table is ONE left join against that materialized map (broadcast
-below ATTACH_BROADCAST_MAX_ROWS — the dup-cluster map of even a web
-corpus is a vanishing fraction of rows; above it, a plain join AQE can
-re-plan). Net full-data work: zero extra scans, zero full-row shuffles
-inside the operator.
+of cnt).
+
+Plan-time decisions: ONE bounded collect over the localCheckpoint-ed
+node table returns the DISTINCT bucket-pair graph (at most ~bits *
+2^bits / 2 pairs under multiprobe) plus <= 2^bits per-bucket facts, from
+which the driver builds the supergroups, marks the hot ones and writes
+the one-hash supergroups' map rows; the pass-2 merge (applyInPandas,
+join, window) is planned only when a supergroup is hot. The map, only
+hashes of non-singleton clusters, is then localCheckpoint-ed and counted
+by an Observation on that job. AQE runs each exchange as its own job: on
+perfbench's images_full input (4,000 rows, 3,784 nodes, 4 vCPUs,
+2026-10-19) a call runs 9 jobs / 28 tasks, 16 with a hot supergroup; 21
+/ 72 when the merge was planned unconditionally.
+Attaching clusters is ONE left join against that map (broadcast below
+ATTACH_BROADCAST_MAX_ROWS; above it, a plain join AQE can re-plan): no
+extra scan and no full-row shuffle inside the operator.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
@@ -293,7 +297,9 @@ def _cluster_partition(radius: int):
     Arrow/pandas overhead per group; with millions of tiny groups that
     overhead dominates, so we batch all groups of a partition into one
     call, find edges for tiny groups with offset-vectorized compares,
-    and slice per group only above _TINY_GROUP.
+    and slice per group only above _TINY_GROUP. Rows of a hot (salted)
+    group all come out, for the pass-2 merge; the rest only when their
+    cluster holds >= 2 rows (a final map row).
     """
 
     def _fn(it):
@@ -356,6 +362,8 @@ def _cluster_partition(radius: int):
                 ri, rj = find(s + k), find(s + int(r))
                 if ri != rj:
                     parent[max(ri, rj)] = min(ri, rj)
+        cnt = pdf["cnt"].to_numpy()
+        size = cnt  # cluster ROW size: sum of the members' counts
         if merged_any:
             mins: dict[int, object] = {}
             roots_all = np.array([find(i) for i in range(n)])
@@ -369,14 +377,20 @@ def _cluster_partition(radius: int):
                     mins[r] = v
             for i in comp:
                 out[i] = mins[roots_all[i]]
+            tot = np.zeros(n, dtype=np.int64)
+            np.add.at(tot, roots_all, cnt)
+            size = tot[roots_all]
+        hot = pdf["is_hot"].to_numpy()
+        keep = hot | (size >= 2)
         yield pd.DataFrame(
             {
-                "phash": ph,
-                "cnt": pdf["cnt"].to_numpy(),
-                "rep": reps,
-                "sg": sg,
-                "is_hot": pdf["is_hot"].to_numpy(),
-                "local_cluster": out,
+                "phash": ph[keep],
+                "cnt": cnt[keep],
+                "rep": reps[keep],
+                "sg": sg[keep],
+                "is_hot": hot[keep],
+                "cluster_id": out[keep],
+                "cluster_size": size[keep],
             }
         )
 
@@ -396,173 +410,150 @@ def neardup_phash_map(
 
     The map holds ``(_nd_phash, _nd_cluster_id, _nd_cluster_size)`` for
     exactly the hashes belonging to clusters of >= 2 rows; every other
-    row's cluster is itself (the attach default). The map is
-    localCheckpoint-ed (materialized, lineage cut) and all caches built
-    along the way are released before returning — repeated calls in a
-    long-lived session leak no executor storage.
+    row's cluster is itself (the attach default). The node table and the
+    map are localCheckpoint-ed (materialized, lineage cut; the
+    ContextCleaner frees their blocks with the frames), and the hot pass's
+    cache is released before returning — repeated calls in a long-lived
+    session leak no executor storage.
     """
     sub_mask = (1 << sub_bits) - 1
     spark = pairs.sparkSession
 
     slim0 = pairs.select("image_id", "phash").where(F.col("phash").isNotNull())
     # The node table: one row per distinct phash. The ONLY scan of the
-    # input this operator makes (2 pruned columns), aggregated once.
+    # input this operator makes (2 pruned columns), aggregated once, and
+    # materialized before any join over it is planned: both sides of the
+    # bucket self-join read it, and a lazy cache let AQE broadcast
+    # whichever side's cache stage finished first.
     pc = (
         slim0.groupBy("phash")
         .agg(F.count("*").alias("cnt"), F.min("image_id").alias("rep"))
         .withColumn("bucket", phash_bucket(F.col("phash"), bits))
-        .persist()
+        .localCheckpoint(eager=True)
     )
 
     # --- supergroup construction (contract step 2) ----------------------
     # Distinct bucket pairs spanned by a discoverable within-radius phash
-    # pair. Lazy; the bounded collect below is eager job 1 and populates
-    # pc's cache as a side effect.
+    # pair.
     if bridge == "bands":
         bpairs = _band_bucket_pairs(pc, bits, radius, band_bits=band_bits)
     else:
-        probes = (
-            pc.select(
-                F.col("phash").alias("ph_a"),
-                F.explode(phash_bucket_probes(F.col("phash"), bits)).alias(
-                    "probe"
-                ),
-                F.col("bucket").alias("bucket_a"),
-                # each unordered pair surfaces once: the partner with the
-                # SMALLER bucket owns it, halving probe volume pre-join
-            )
-            .where(F.col("probe") > F.col("bucket_a"))
-        )
-        base = pc.select(
-            F.col("phash").alias("ph_b"), F.col("bucket").alias("bucket_b")
-        )
+        # each unordered pair surfaces once: the partner with the SMALLER
+        # bucket owns it, halving probe volume pre-join
+        probes = pc.select(
+            F.col("phash").alias("ph_a"),
+            F.explode(phash_bucket_probes(F.col("phash"), bits)).alias("probe"),
+            F.col("bucket").alias("bucket_a"),
+        ).where(F.col("probe") > F.col("bucket_a"))
+        base = pc.select(F.col("phash").alias("ph_b"), F.col("bucket").alias("bucket_b"))
         bpairs = (
             probes.join(base, F.col("probe") == F.col("bucket_b"))
             .where(hamming(F.col("ph_a"), F.col("ph_b")) <= F.lit(radius))
-            .select(
-                F.col("bucket_a").alias("a"), F.col("bucket_b").alias("b")
-            )
+            .select(F.col("bucket_a").alias("a"), F.col("bucket_b").alias("b"))
             .distinct()
         )
-    bp_rows = bpairs.limit(SG_DRIVER_CC_MAX + 1).collect()  # eager job 1
-    if not bp_rows:
-        sg_map = None
-    elif len(bp_rows) <= SG_DRIVER_CC_MAX:
-        sg_map = _driver_cc(bp_rows, spark)
+    # The build's one bounded collect: the bucket pairs plus per-bucket
+    # facts (rows, distinct hashes, and the min hash and rep, which for a
+    # one-hash bucket ARE its node), <= 2^bits rows marked by a null `b`.
+    # Every data-dependent choice below (supergroups, hot salting, the
+    # pass-2 merge) is made from it on the driver.
+    facts = pc.groupBy("bucket").agg(
+        F.sum("cnt").alias("n"), F.count("*").alias("dn"),
+        F.min("phash").alias("phash"), F.min("rep").alias("rep"),
+    )
+    q = bpairs.unionByName(facts, allowMissingColumns=True)
+    if bridge == "bands" or bits << (bits - 1) > SG_DRIVER_CC_MAX:
+        # only a pair count with no bound below the cap needs the limit
+        # (AQE drops a limit it proves slack, so it also varies the plan)
+        q = q.limit(SG_DRIVER_CC_MAX + (1 << bits) + 1)
+    got = q.collect()
+    edges = [(r["a"], r["b"]) for r in got if r["b"] is not None]
+    if len(edges) <= SG_DRIVER_CC_MAX:
+        labels = _min_labels(edges)
+        got = [r for r in got if r["b"] is None]
     else:
         # pathological bucket graph (possible only with bands + extreme
-        # corpora): distributed min-label over <= 2^bits nodes
-        bpairs = bpairs.persist()
-        sg_map = _cc_min_label(bpairs)
-    if sg_map is None:
-        nodes = pc.withColumn("sg", F.col("bucket"))
-    else:
-        nodes = pc.join(
-            F.broadcast(sg_map), pc["bucket"] == sg_map["node"], "left"
-        ).select(
-            "phash",
-            "cnt",
-            "rep",
-            F.coalesce(sg_map["label"], pc["bucket"]).cast("int").alias("sg"),
-        )
-
-    # Per-supergroup ROW count (hot/salting contract) and distinct-hash
-    # count (the Python-pass group bound).
-    sizes = nodes.groupBy("sg").agg(
-        F.sum("cnt").alias("sg_n"), F.count("*").alias("dn")
-    )
-    nd = nodes.join(F.broadcast(sizes), "sg").withColumn(
-        "is_hot", F.col("sg_n") > F.lit(hot_threshold)
-    )
-    # Supergroups with ONE distinct hash never enter the Python path:
-    # all their rows share the hash, so the cluster is rep. This is the
-    # blocking no-op case the reference also short-circuits
-    # (exact_matching.py: groups with one candidate) — and it covers the
-    # viral-image case (10^6 copies = 1 node) too.
-    singles = nd.where(F.col("dn") == 1).select(
-        "phash",
-        "cnt",
-        "rep",
-        "sg",
-        F.lit(False).alias("is_hot"),
-        F.col("rep").alias("local_cluster"),
-    )
-    multi = nd.where(F.col("dn") >= 2)
-    shr = F.shiftrightunsigned(F.col("phash"), bits)
-    multi = multi.withColumn(
-        "sub",
-        F.when(
-            F.col("is_hot"), shr.bitwiseAND(F.lit(sub_mask)).cast("int")
-        ).otherwise(F.lit(0)),
-    )
+        # corpora): distributed min-label over <= 2^bits nodes, whose
+        # labels (and the facts the limit may have cut) are collected
+        labels = dict(_cc_min_label(bpairs.persist()).collect())
+        bpairs.unpersist()
+        got = facts.collect()
+    multi, singles, hot = _supergroups(spark, got, labels, hot_threshold)
+    # Only the nodes of supergroups with >= 2 distinct hashes enter the
+    # Python pass: their buckets join as a driver-side LocalRelation.
+    # A one-hash supergroup's rows all share the hash, so the cluster is
+    # rep — the blocking no-op case the reference also short-circuits
+    # (exact_matching.py: groups with one candidate), and the viral-image
+    # case (10^6 copies = 1 node): its map row comes from the facts.
+    nodes = pc.join(F.broadcast(multi), "bucket")
     pass1_schema = (
         "phash long, cnt long, rep string, sg int, is_hot boolean,"
-        " local_cluster string"
+        " cluster_id string, cluster_size long"
     )
+    # Pass 1: non-hot supergroups come out final (rows of >= 2-row
+    # clusters only); hot ones come out whole, as salted sub-clusters.
+    shr = F.shiftrightunsigned(F.col("phash"), bits)
+    sub = F.when(F.col("is_hot"), shr.bitwiseAND(F.lit(sub_mask)).cast("int"))
     local = (
-        multi.select("phash", "cnt", "rep", "sg", "is_hot", "sub")
+        nodes.select("phash", "cnt", "rep", "sg", "is_hot", sub.otherwise(0).alias("sub"))
         .repartition("sg", "sub")
         .sortWithinPartitions("sg", "sub")
         .mapInPandas(_cluster_partition(radius), schema=pass1_schema)
     )
-    # Pass 2 (salted supergroups only): merge sub-clusters via reps.
-    # Built unconditionally — with no hot supergroup `reps` is empty and
-    # the merge join is a broadcast-of-empty no-op, cheaper than the
-    # eager probe job a conditional branch would need. Diamond plan:
-    # `local` feeds both the rep extraction and the final join — persist
-    # so the Python pass runs once, not twice (Spark reuses exchanges,
-    # not post-shuffle Python stages).
-    local = local.unionByName(singles).persist()
-    # the member holding the component's min image_id is the one node
-    # whose per-hash min equals the local cluster id
-    reps = local.where(
-        F.col("is_hot") & (F.col("rep") == F.col("local_cluster"))
-    ).select("sg", F.col("local_cluster").alias("orig_local"), "phash")
-    merged = reps.groupBy("sg").applyInPandas(
-        lambda pdf: _merge_reps(pdf, 2 * radius),
-        schema="sg int, orig_local string, global_cluster string",
-    )
-    # NO broadcast hint on `merged`: it holds one row per sub-cluster rep
-    # of every hot supergroup, which is unbounded at corpus scale (a hot
-    # supergroup of mostly-singleton components yields ~one rep per
-    # distinct hash). AQE demotes this join to broadcast at runtime when
-    # `merged` actually fits (the common case: empty or tiny), without
-    # the hint's OOM risk when it doesn't.
-    resolved = local.join(
-        merged,
-        (local["sg"] == merged["sg"])
-        & (local["local_cluster"] == merged["orig_local"]),
-        "left",
-    ).select(
-        local["phash"],
-        local["cnt"],
-        F.coalesce(merged["global_cluster"], local["local_cluster"]).alias(
-            "cluster_id"
-        ),
-    )
-
-    # cluster ROW size at the node level (sum of per-hash counts), then
-    # shrink to the hashes whose attach differs from the defaults:
-    # everything in a 1-row cluster maps to itself.
-    win = W.partitionBy("cluster_id")
+    cols = ["phash", "cluster_id", "cluster_size"]
+    if hot:
+        # diamond: `local` feeds the non-hot rows, the rep extraction and
+        # the merge join — persist so the Python pass runs once (Spark
+        # reuses exchanges, not post-shuffle Python stages)
+        local = local.persist()
+    ph_map = singles.unionByName(local.where(~F.col("is_hot")).select(*cols))
+    if hot:
+        # Pass 2 (salted supergroups only): merge sub-clusters via reps.
+        # The member holding the component's min image_id is the one
+        # node whose per-hash min equals the local cluster id.
+        reps = local.where(
+            F.col("is_hot") & (F.col("rep") == F.col("cluster_id"))
+        ).select("sg", F.col("cluster_id").alias("orig_local"), "phash")
+        merged = reps.groupBy("sg").applyInPandas(
+            lambda pdf: _merge_reps(pdf, 2 * radius),
+            schema="sg int, orig_local string, global_cluster string",
+        )
+        # `merged` holds one row per sub-cluster rep of every hot
+        # supergroup, unbounded at corpus scale: never broadcast it. The
+        # hint also fixes the plan, which AQE otherwise picked by which
+        # side's stage finished first.
+        hot_nodes = local.where(F.col("is_hot"))
+        resolved = hot_nodes.join(
+            merged.hint("shuffle_hash"),
+            (hot_nodes["sg"] == merged["sg"])
+            & (hot_nodes["cluster_id"] == merged["orig_local"]),
+            "left",
+        ).select(
+            hot_nodes["phash"], hot_nodes["cnt"],
+            F.coalesce(merged["global_cluster"], hot_nodes["cluster_id"]).alias("cluster_id"),
+        )
+        # cluster ROW size at the node level (sum of per-hash counts)
+        size = F.sum("cnt").over(W.partitionBy("cluster_id"))
+        ph_map = ph_map.unionByName(
+            resolved.withColumn("cluster_size", size)
+            .where(F.col("cluster_size") >= 2)
+            .select(*cols)
+        )
+    # The map's one eager job: materialize it (node-level work only),
+    # count it on the way, cut the lineage, then release every cache the
+    # build held.
+    obs = Observation()
     ph_map = (
-        resolved.withColumn("cluster_size", F.sum("cnt").over(win).cast("int"))
-        .where(F.col("cluster_size") >= 2)
-        .select(
+        ph_map.select(
             F.col("phash").alias("_nd_phash"),
             F.col("cluster_id").alias("_nd_cluster_id"),
-            F.col("cluster_size").alias("_nd_cluster_size"),
+            F.col("cluster_size").cast("int").alias("_nd_cluster_size"),
         )
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
     )
-    # eager job 2: materialize the map (node-level work only), cut the
-    # lineage, then release every cache the build held.
-    ph_map = ph_map.localCheckpoint(eager=True)
-    pc.unpersist()
-    local.unpersist()
-    if sg_map is not None and len(bp_rows) > SG_DRIVER_CC_MAX:
-        bpairs.unpersist()
-    n_map = ph_map.count()  # metadata-cheap on the checkpointed frame
-    return ph_map, n_map
+    local.unpersist()  # a no-op unless a hot supergroup persisted it
+    return ph_map, obs.get["n"]
 
 
 def attach_clusters(
@@ -610,13 +601,7 @@ def neardup_clusters(
     row-level contract.
     """
     ph_map, n_map = neardup_phash_map(
-        pairs,
-        bits=bits,
-        radius=radius,
-        sub_bits=sub_bits,
-        hot_threshold=hot_threshold,
-        bridge=bridge,
-        band_bits=band_bits,
+        pairs, bits, radius, sub_bits, hot_threshold, bridge, band_bits
     )
     slim0 = pairs.select("image_id", "phash").where(F.col("phash").isNotNull())
     return attach_clusters(slim0, ph_map, n_map).select(
@@ -712,43 +697,58 @@ def _band_bucket_pairs(
     )
 
 
-def _driver_cc(rows: list, spark) -> DataFrame:
-    """Union-find on a small collected edge list -> (node, label) frame.
+def _min_labels(edges: list) -> dict:
+    """Connected components of a collected edge list, on the driver:
+    node -> min node id of its component (the `_cc_min_label` contract).
 
-    Same contract as _cc_min_label (label = min node id of the
-    component); used below SG_DRIVER_CC_MAX where a Python loop beats
-    several distributed join jobs. Takes the already-collected rows so
-    the edge-discovery job is never run twice.
+    Vectorized hook-and-compress: each round hooks the root of every
+    edge's larger end under the smaller one (np.minimum.at), then
+    pointer-jumps every label to its root. At the fixpoint both ends of
+    every edge share one root, and a component's min node is always a
+    root, so that root is the minimum.
     """
-    idx: dict[object, int] = {}
-    for r in rows:
-        idx.setdefault(r["a"], len(idx))
-        idx.setdefault(r["b"], len(idx))
-    parent = list(range(len(idx)))
+    if not edges:
+        return {}
+    nodes, idx = np.unique(np.asarray(edges).ravel(), return_inverse=True)
+    ia, ib = idx[0::2], idx[1::2]
+    lab = np.arange(len(nodes))
+    while True:
+        la, lb = lab[ia], lab[ib]
+        if (la == lb).all():
+            return dict(zip(nodes.tolist(), nodes[lab].tolist()))
+        np.minimum.at(lab, la, lb)
+        np.minimum.at(lab, lb, la)
+        while (lab[lab] != lab).any():
+            lab = lab[lab]
 
-    def find(i: int) -> int:
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
 
-    for r in rows:
-        ri, rj = find(idx[r["a"]]), find(idx[r["b"]])
-        if ri != rj:
-            parent[max(ri, rj)] = min(ri, rj)
-    comp_min: dict[int, object] = {}
-    for node, i in idx.items():
-        root = find(i)
-        cur = comp_min.get(root)
-        if cur is None or node < cur:
-            comp_min[root] = node
-    out = pd.DataFrame(
-        {
-            "node": list(idx.keys()),
-            "label": [comp_min[find(i)] for i in idx.values()],
-        }
+def _supergroups(
+    spark, facts: list, labels: dict, hot_threshold: int
+) -> tuple[DataFrame, DataFrame, bool]:
+    """Per-bucket facts and bucket -> supergroup labels (unlabeled
+    buckets are their own) -> ``(bucket, sg, is_hot)`` for supergroups of
+    >= 2 distinct hashes (hot by ROWS, contract step 3), the map rows of
+    one-hash supergroups of >= 2 rows, and whether any is hot. The frames
+    come from Arrow: a pandas frame with no rows would become a Python
+    RDD, i.e. a worker per slice."""
+
+    def rel(pdf: pd.DataFrame, schema: str) -> DataFrame:
+        return spark.createDataFrame(pa.Table.from_pandas(pdf, preserve_index=False), schema)
+
+    cols = ["bucket", "n", "dn", "phash", "rep"]
+    f = pd.DataFrame([r.asDict() for r in facts], columns=cols)
+    f["sg"] = [labels.get(b, b) for b in f["bucket"]]
+    tot = f.groupby("sg")[["n", "dn"]].transform("sum")
+    f["is_hot"] = tot["n"] > hot_threshold
+    one = f.loc[(tot["dn"] == 1) & (f["n"] >= 2), ["phash", "rep", "n"]].set_axis(
+        ["phash", "cluster_id", "cluster_size"], axis=1
     )
-    return spark.createDataFrame(out)
+    multi = f.loc[tot["dn"] >= 2, ["bucket", "sg", "is_hot"]]
+    return (
+        rel(multi, "bucket int, sg int, is_hot boolean"),
+        rel(one, "phash long, cluster_id string, cluster_size long"),
+        bool(multi["is_hot"].any()),
+    )
 
 
 def _cc_min_label(edges: DataFrame) -> DataFrame:

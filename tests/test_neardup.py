@@ -73,9 +73,9 @@ def test_bridge_chains_through_base(spark):
 
 
 def test_distributed_cc_equals_driver_cc(spark):
-    # the >BRIDGE_DRIVER_CC_MAX fallback must produce identical labels:
-    # chain 0-1-2-3, triangle 10-11-12, isolated edge 20-21
-    from stop_sync_osm_atlas_spark.operators.neardup import _cc_min_label, _driver_cc
+    # the >SG_DRIVER_CC_MAX fallback must produce identical labels to the
+    # driver labeler: chain 0-1-2-3, triangle 10-11-12, isolated edge 20-21
+    from stop_sync_osm_atlas_spark.operators.neardup import _cc_min_label, _min_labels
 
     edges = spark.createDataFrame(
         [("n0", "n1"), ("n1", "n2"), ("n2", "n3"),
@@ -84,10 +84,7 @@ def test_distributed_cc_equals_driver_cc(spark):
         "a string, b string",
     ).persist()
     dist = {r["node"]: r["label"] for r in _cc_min_label(edges).collect()}
-    drv = {
-        r["node"]: r["label"]
-        for r in _driver_cc(edges.collect(), spark).collect()
-    }
+    drv = _min_labels(edges.collect())
     assert dist == drv
     assert dist["n3"] == "n0" and dist["n12"] == "n10" and dist["n21"] == "n20"
 
@@ -450,3 +447,23 @@ def test_components_banded_radius_at_or_above_64():
     assert merged_direct and len(set(int(r) for r in roots_direct)) == 1
     one, m1 = _components_banded(np.array([7], dtype=np.uint64), radius=64)
     assert not m1 and list(one) == [0]
+
+
+def test_distributed_label_fallback_matches_oracle(spark, monkeypatch):
+    """Above SG_DRIVER_CC_MAX bucket pairs the map labels supergroups
+    with the distributed `_cc_min_label` and re-collects the per-bucket
+    facts the collect's limit may have cut: the clusters must not
+    change (patched to 0 so every pair graph takes that path)."""
+    from stop_sync_osm_atlas_spark.operators import neardup as ND
+
+    base = 0xFACE0000
+    rows = [("m", base), ("a", base ^ 0x1), ("b", base ^ 0x2),
+            ("c", base ^ (1 << 40)), ("d", 77), ("e", 77), ("f", 0x5EADBEEF00000000)]
+    default = _run(spark, rows)
+    monkeypatch.setattr(ND, "SG_DRIVER_CC_MAX", 0)
+    pd.testing.assert_frame_equal(_run(spark, rows), default)
+    orc = neardup_oracle(pd.DataFrame(rows, columns=["image_id", "phash"]))
+    orc = orc.set_index("image_id").sort_index()
+    for col in ["cluster_id", "cluster_size", "is_cluster_rep"]:
+        assert (default[col] == orc[col]).all(), col
+    assert default.loc["e", "cluster_id"] == "d" and default.loc["b", "cluster_id"] == "a"

@@ -351,14 +351,46 @@ def test_repeated_runs_compile_no_new_class(spark, fixture_paths, nd_kwargs):
         return compiles.getCount() - before
 
     assert second_run_compiles(corpus) == 0
-    # The near-dup bucket self-join reads one cached table on both
-    # sides, and AQE broadcasts whichever side's cache stage finishes
-    # first: a race that yields one of two plans (a few classes each)
-    # per run. Auto-broadcast off keeps the plan fixed, so the count
-    # measures the class cache and not that race.
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    assert second_run_compiles(cascade) == 0
+
+
+@pytest.mark.parametrize("hot", [False, True], ids=["no_hot", "hot"])
+def test_neardup_map_plans_merge_only_when_hot(
+    spark, fixture_paths, nd_kwargs, monkeypatch, hot
+):
+    """neardup_phash_map decides its plan from its one bounded collect:
+    without a hot supergroup the map runs at most 9 jobs (21 when the
+    pass-2 merge was always planned) and its plan holds no grouped-map
+    Python pass and no window; the planted hot bucket (nd_kwargs) brings
+    the merge in. Either way n_map is the map's row count."""
+    import pyspark.sql.classic.dataframe as cdf
+
+    from stop_sync_osm_atlas_spark.operators.neardup import neardup_phash_map
+    from stop_sync_osm_atlas_spark.schemas import PAIRS_SCHEMA
+
+    pairs = spark.read.schema(PAIRS_SCHEMA).parquet(fixture_paths["pairs"])
+    plans = []
+    orig = cdf.DataFrame.localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        if "_nd_phash" in self.columns:
+            plans.append(_plan(self))
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(cdf.DataFrame, "localCheckpoint", capture)
+    sc = spark.sparkContext
+    group = f"neardup_map_jobs_{hot}"
+    sc.setJobGroup(group, "neardup_phash_map job count")
     try:
-        assert second_run_compiles(cascade) == 0
+        ph_map, n_map = neardup_phash_map(pairs, **(nd_kwargs if hot else {}))
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        sc.setJobGroup(None, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_map == ph_map.count() > 0
+    (plan,) = plans
+    assert "MapInPandas" in plan, plan
+    if hot:
+        assert "FlatMapGroupsInPandas" in plan and ") Window" in plan, plan
+    else:
+        assert jobs <= 9, jobs
+        assert "FlatMapGroupsInPandas" not in plan and "Window" not in plan, plan
