@@ -69,18 +69,29 @@ of cnt).
 
 Plan-time decisions: ONE bounded collect over the localCheckpoint-ed
 node table returns the DISTINCT bucket-pair graph (at most ~bits *
-2^bits / 2 pairs under multiprobe) plus <= 2^bits per-bucket facts, from
-which the driver builds the supergroups, marks the hot ones and writes
-the one-hash supergroups' map rows; the pass-2 merge (applyInPandas,
-join, window) is planned only when a supergroup is hot. The map, only
+2^bits / 2 pairs under multiprobe) plus <= 2^bits per-bucket (rows,
+distinct hashes) facts, from which the driver builds the supergroups and
+marks the hot ones; the pass-2 merge (applyInPandas, join, window) is
+planned only when a supergroup is hot, and then pass 1 is
+localCheckpoint-ed before its three readers are planned. The map, only
 hashes of non-singleton clusters, is then localCheckpoint-ed and counted
 by an Observation on that job. AQE runs each exchange as its own job: on
-perfbench's images_full input (4,000 rows, 3,784 nodes, 4 vCPUs,
-2026-10-19) a call runs 9 jobs / 28 tasks, 16 with a hot supergroup; 21
-/ 72 when the merge was planned unconditionally.
+perfbench's images_full input (4,000 rows, 3,784 nodes, 4 vCPUs) a call
+runs 9 jobs, 14 with a hot supergroup; 21 when the merge was planned
+unconditionally.
+
 Attaching clusters is ONE left join against that map (broadcast below
 ATTACH_BROADCAST_MAX_ROWS; above it, a plain join AQE can re-plan): no
 extra scan and no full-row shuffle inside the operator.
+
+One components kernel: every finder returns within-radius edges as
+``(i, j)`` index arrays (`_block_edges`, the offset-compare loop over
+contiguous blocks; `_banded_edges` on top of it), and `_labels` turns
+them into min-index component labels with vectorized hook-and-compress
+rounds — no per-edge Python loop. Pass 1 labels all of a partition's
+edges at once over nodes sorted by (sg, sub, rep), so a component's min
+index is its min rep; pass 2 and the driver's bucket graph label through
+the same function.
 """
 
 from __future__ import annotations
@@ -131,48 +142,74 @@ def _popcount64(a: np.ndarray) -> np.ndarray:
     return ((x * _H01) >> np.uint64(56)).astype(np.int64)
 
 
-def _components(phashes: np.ndarray, radius: int) -> tuple[np.ndarray, bool]:
-    """Union-find connected components, O(n^2) Hamming within a group.
+def _block_edges(x: np.ndarray, block_id, radius: int, max_d: int):
+    """Within-radius pairs ``(i, j)``, ``i < j``, among rows of one block.
 
-    Groups are bounded by hot_threshold DISTINCT hashes (pass 1) / rep
-    count (pass 2), so the quadratic stays in-cache per task. Returns
-    (roots, merged): merged=False means every row is its own component
-    (the common case, letting callers skip the min-per-component pass).
+    Rows must be sorted so every block is a contiguous run (``block_id``
+    nondecreasing; None means one block) no longer than ``max_d``. The
+    d-th iteration compares every row i with row i+d at once, so offsets
+    1..max_d-1 cover every pair of every block with one vectorized
+    compare per offset, not one Python call per block; the loop stops at
+    the first offset that no block spans. One block skips the mask.
     """
-    n = len(phashes)
-    parent = np.arange(n)
-    merged = False
+    one = block_id is None or len(x) < 2 or block_id[0] == block_id[-1]
+    ii, dd = [], []
+    for d in range(1, max_d):
+        hit = _popcount64(np.bitwise_xor(x[:-d], x[d:])) <= radius
+        if not one:
+            same = block_id[:-d] == block_id[d:]
+            if not same.any():
+                break
+            hit &= same
+        k = np.flatnonzero(hit)
+        ii.append(k)
+        dd.append(np.full(len(k), d))
+    if not ii:
+        return np.zeros(0, np.int64), np.zeros(0, np.int64)
+    i = np.concatenate(ii)
+    return i, i + np.concatenate(dd)
 
-    def find(i: int) -> int:
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
 
+def _labels(n: int, i: np.ndarray, j: np.ndarray) -> np.ndarray:
+    """Connected components of nodes 0..n-1 over edges ``(i, j)``: each
+    node -> the min node index of its component.
+
+    Vectorized hook-and-compress: each round hooks the root of every
+    edge's larger end under the smaller one (np.minimum.at), then
+    pointer-jumps every label to its root. At the fixpoint both ends of
+    every edge share one root, and a component's min node is always a
+    root, so that root is the minimum. Every caller labels through here:
+    sorting a group's nodes by rep first makes the min index the min rep.
+    """
+    lab = np.arange(n)
+    while True:
+        li, lj = lab[i], lab[j]
+        if (li == lj).all():
+            return lab
+        np.minimum.at(lab, li, lj)
+        np.minimum.at(lab, lj, li)
+        while (lab[lab] != lab).any():
+            lab = lab[lab]
+
+
+def _components(phashes: np.ndarray, radius: int) -> np.ndarray:
+    """Direct O(n^2) Hamming components: node -> min index of its
+    component. Groups are bounded by hot_threshold DISTINCT hashes (pass
+    1) / rep count (pass 2), so the quadratic stays in-cache per task."""
     x = phashes.astype(np.uint64)
-    for i in range(n - 1):
-        d = _popcount64(np.bitwise_xor(x[i + 1 :], x[i]))
-        for j in np.nonzero(d <= radius)[0]:
-            ri, rj = find(i), find(int(j) + i + 1)
-            if ri != rj:
-                parent[rj] = ri
-                merged = True
-    if not merged:
-        return parent, False
-    return np.array([find(i) for i in range(n)]), True
+    return _labels(len(x), *_block_edges(x, None, radius, len(x)))
 
 
-# Above this size the direct O(n^2) `_components` switches to the
-# banded finder: the r5 linearity probe measured ONE hot supergroup of
-# 227k reps costing 291 s (5.2e10 Hamming compares) in a single pass-2
+# Above this size the direct O(n^2) compare switches to the banded
+# finder: the r5 linearity probe measured ONE hot supergroup of 227k
+# reps costing 291 s (5.2e10 Hamming compares) in a single pass-2
 # Python task — 95% of the whole 6.4M-row neardup build.
 _BANDED_COMPONENTS_MIN = 2048
 
 
-def _components_banded(
-    phashes: np.ndarray, radius: int
-) -> tuple[np.ndarray, bool]:
-    """Exact within-radius connected components via pigeonhole banding.
+def _banded_edges(x: np.ndarray, radius: int):
+    """Every within-radius pair of ``x`` (uint64), found by pigeonhole
+    banding: ``(i, j)`` arrays whose components equal the direct ones.
 
     Partitions the 64 bit POSITIONS into n_bands > radius bands: two
     hashes within ``radius`` differ in <= radius bands, so they AGREE
@@ -187,20 +224,18 @@ def _components_banded(
     interleaving mixes the diverse upper bits into every band, keeping
     block sizes near n / 2^band_width for real hash data.
 
-    Work drops from n^2 to sum over (band, value) blocks of m^2,
-    vectorized with one offset-compare loop over the block-sorted
-    array (the `_cluster_partition` tiny-group trick, uncapped): d-th
-    iteration compares row i with row i+d under a same-block mask, so
-    the Python-level loop runs max_block_size times total, not once per
-    block. Residual: an adversarial input can degenerate MANY composite
-    keys at once (hashes differing only inside the bits of <= radius
-    bands make every combo avoiding those bands one full-array block),
-    costing up to ~C(n_bands, c) * n^2 — a bounded multiple of the
-    direct cost, not strictly below it. On real hash data the
-    interleaved bands keep blocks near n / 2^band_width and the
-    measured win is ~30-50x (see BENCH/BASELINE.md); the dispatch
-    threshold _BANDED_COMPONENTS_MIN trades that worst case for the
-    227k-rep serial collapse it prevents.
+    Work drops from n^2 to sum over (band, value) blocks of m^2: each
+    key's block-sorted array goes through `_block_edges` and the hits map
+    back through the sort order. Residual: an adversarial input can
+    degenerate MANY composite keys at once (hashes differing only inside
+    the bits of <= radius bands make every combo avoiding those bands one
+    full-array block), costing up to ~C(n_bands, c) * n^2 — a bounded
+    multiple of the direct cost, not strictly below it. On real hash
+    data the measured win is ~30-50x (see BENCH/BASELINE.md); the
+    dispatch threshold _BANDED_COMPONENTS_MIN trades that worst case for
+    the 227k-rep serial collapse it prevents. Edges found so far fold
+    into one star per component once they outnumber twice the nodes, so
+    the same pair found under many keys holds no memory.
 
     Candidate sharpening: agreeing on >= 1 band is the loosest complete
     blocking — a pair within ``radius`` over n_bands bands actually
@@ -212,79 +247,62 @@ def _components_banded(
     200k bucket-concentrated rep set). c is lowered if the combination
     count would exceed 64 (agreeing on >= c bands implies some smaller
     subset agrees, so any c' <= c stays complete).
-
-    Returns the same (roots, merged) contract as `_components`; only
-    the partition matters to callers (labels feed groupby/union-find),
-    and the edge set is identical, so the two are interchangeable —
-    asserted by randomized equivalence tests (incl. the
-    bucket-concentrated shape).
     """
     from itertools import combinations
     from math import comb
 
-    n = len(phashes)
+    n = len(x)
     if radius >= 64:
-        # every pair of 64-bit hashes is within radius: one component.
-        # (Without this the band search below has no b > radius and
-        # raised StopIteration from inside the applyInPandas worker.)
-        parent_all = np.zeros(n, dtype=np.int64)
-        return parent_all, n > 1
+        # every pair of 64-bit hashes is within radius: one component
+        # (and no band count exceeds the radius)
+        return np.zeros(max(n - 1, 0), np.int64), np.arange(1, max(n, 1))
     n_bands = next(b for b in (4, 8, 16, 32, 64) if b > radius)
     band_width = 64 // n_bands
     c = n_bands - radius
     while c > 1 and comb(n_bands, c) > 64:
         c -= 1
-    x = phashes.astype(np.uint64)
-    parent = np.arange(n)
-    merged = False
-
-    def find(i: int) -> int:
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
-
     one = np.uint64(1)
     band_keys = []
     for k in range(n_bands):
         # gather the strided bit set {k, k+n_bands, ...} into a compact key
         keys = np.zeros(n, dtype=np.uint64)
-        for i in range(band_width):
-            keys |= ((x >> np.uint64(k + i * n_bands)) & one) << np.uint64(i)
+        for b in range(band_width):
+            keys |= ((x >> np.uint64(k + b * n_bands)) & one) << np.uint64(b)
         band_keys.append(keys)
+    ii, jj, held = [], [], 0
     for combo in combinations(range(n_bands), c):
         keys = np.zeros(n, dtype=np.uint64)
         for pos, k in enumerate(combo):
             keys |= band_keys[k] << np.uint64(pos * band_width)
         order = np.argsort(keys, kind="stable")
         sk = keys[order]
-        xs = x[order]
-        # block id per sorted row; offset-compare within equal-key runs
-        bid = np.cumsum(np.r_[0, (sk[1:] != sk[:-1]).astype(np.int64)])
-        counts = np.bincount(bid)
-        max_m = int(counts.max()) if len(counts) else 0
-        for d in range(1, max_m):
-            same = bid[:-d] == bid[d:]
-            if not same.any():
-                break
-            hit = same & (_popcount64(np.bitwise_xor(xs[:-d], xs[d:])) <= radius)
-            for i in np.nonzero(hit)[0]:
-                ri, rj = find(int(order[i])), find(int(order[i + d]))
-                if ri != rj:
-                    parent[max(ri, rj)] = min(ri, rj)
-                    merged = True
-    if not merged:
-        return parent, False
-    return np.array([find(i) for i in range(n)]), True
+        bid = np.cumsum(np.r_[0, sk[1:] != sk[:-1]])
+        i, j = _block_edges(x[order], bid, radius, int(np.bincount(bid).max()))
+        ii.append(order[i])
+        jj.append(order[j])
+        held += len(i)
+        if held > 2 * n:
+            lab = _labels(n, np.concatenate(ii), np.concatenate(jj))
+            k = np.flatnonzero(lab != np.arange(n))
+            ii, jj, held = [lab[k]], [k], len(k)
+    if not ii:
+        return np.zeros(0, np.int64), np.zeros(0, np.int64)
+    return np.concatenate(ii), np.concatenate(jj)
 
 
-# Groups at or below this size are compared by the vectorized offset
-# pass (all pairs inside a group of size s are covered by row offsets
-# 1..s-1, so TINY-1 full-array shifted compares handle every tiny group
-# at once); only larger groups pay a per-group Python call. Web-corpus
-# buckets are overwhelmingly tiny, and the per-group call costs ~50 µs
-# of numpy dispatch — at ~65k groups/partition that loop was the
-# dominant cost of pass 1 before this split.
+def _components_banded(phashes: np.ndarray, radius: int) -> np.ndarray:
+    """`_components` through `_banded_edges`: the same partition, at
+    ~n / 2^band_width compares per node instead of n."""
+    x = phashes.astype(np.uint64)
+    return _labels(len(x), *_banded_edges(x, radius))
+
+
+# Groups at or below this size are compared by one `_block_edges` pass
+# over the whole partition (TINY-1 full-array shifted compares handle
+# every tiny group at once); only larger groups pay a per-group call.
+# Web-corpus buckets are overwhelmingly tiny, and the per-group call
+# costs ~50 µs of numpy dispatch — at ~65k groups/partition that loop
+# was the dominant cost of pass 1 before this split.
 _TINY_GROUP = 16
 
 
@@ -292,18 +310,19 @@ def _cluster_partition(radius: int):
     """mapInPandas partition function over phash NODES, one Python call
     per PARTITION.
 
-    Input must be hash-partitioned AND sorted by (sg, sub) so every
-    group is a contiguous slice. Grouped-map applyInPandas costs ~ms of
-    Arrow/pandas overhead per group; with millions of tiny groups that
-    overhead dominates, so we batch all groups of a partition into one
-    call, find edges for tiny groups with offset-vectorized compares,
-    and slice per group only above _TINY_GROUP. Rows of a hot (salted)
-    group all come out, for the pass-2 merge; the rest only when their
-    cluster holds >= 2 rows (a final map row).
+    Input must be hash-partitioned AND sorted by (sg, sub, rep) so every
+    group is a contiguous slice, ordered by rep. Grouped-map
+    applyInPandas costs ~ms of Arrow/pandas overhead per group; with
+    millions of tiny groups that overhead dominates, so we batch all
+    groups of a partition into one call: the edges of every group (tiny
+    ones in one pass, larger ones per group, direct or banded) are
+    labeled ONCE, and a component's min index is its min rep. Rows of a
+    hot (salted) group all come out, for the pass-2 merge; the rest only
+    when their cluster holds >= 2 rows (a final map row).
     """
 
     def _fn(it):
-        pdfs = list(it)
+        pdfs = [p for p in it if len(p)]
         if not pdfs:
             return
         pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
@@ -311,75 +330,30 @@ def _cluster_partition(radius: int):
         sub = pdf["sub"].to_numpy()
         ph = pdf["phash"].to_numpy()
         reps = pdf["rep"].to_numpy(dtype=object)
-        n = len(pdf)
-        out = reps.copy()  # default: own cluster (singleton components)
-        change = np.flatnonzero((sg[1:] != sg[:-1]) | (sub[1:] != sub[:-1]))
-        starts = np.concatenate(([0], change + 1))
-        ends = np.concatenate((change + 1, [n]))
-        gsize = ends - starts
-        # group id and size per ROW
-        gid = np.zeros(n, dtype=np.int64)
-        gid[starts[1:]] = 1
-        gid = np.cumsum(gid)
-        rsize = gsize[gid]
-
-        x = ph.astype(np.uint64)
-        parent = np.arange(n)
-
-        def find(i: int) -> int:
-            while parent[i] != i:
-                parent[i] = parent[parent[i]]
-                i = parent[i]
-            return i
-
-        merged_any = False
-        # tiny groups: offset-vectorized all-pairs (row i vs i+d is a
-        # within-group pair iff gid matches; offsets 1..s-1 cover every
-        # pair of a size-s group)
-        max_tiny = int(min(_TINY_GROUP, gsize.max() if len(gsize) else 1))
-        for d in range(1, max_tiny):
-            same = (gid[:-d] == gid[d:]) & (rsize[:-d] <= _TINY_GROUP)
-            if not same.any():
-                continue
-            dist_ok = _popcount64(np.bitwise_xor(x[:-d], x[d:])) <= radius
-            for i in np.nonzero(same & dist_ok)[0]:
-                ri, rj = find(int(i)), find(int(i) + d)
-                if ri != rj:
-                    parent[max(ri, rj)] = min(ri, rj)
-                    merged_any = True
-        # large groups: per-group quadratic (bounded by the salting;
-        # the banded finder guards the unbounded-caller case)
-        for g in np.nonzero(gsize > _TINY_GROUP)[0]:
-            s, e = int(starts[g]), int(ends[g])
-            if gsize[g] > _BANDED_COMPONENTS_MIN:
-                roots, any_merge = _components_banded(ph[s:e], radius)
-            else:
-                roots, any_merge = _components(ph[s:e], radius)
-            if not any_merge:
-                continue
-            merged_any = True
-            for k, r in enumerate(roots):
-                ri, rj = find(s + k), find(s + int(r))
-                if ri != rj:
-                    parent[max(ri, rj)] = min(ri, rj)
         cnt = pdf["cnt"].to_numpy()
-        size = cnt  # cluster ROW size: sum of the members' counts
-        if merged_any:
-            mins: dict[int, object] = {}
-            roots_all = np.array([find(i) for i in range(n)])
-            touched = np.nonzero(roots_all != np.arange(n))[0]
-            comp = set(roots_all[touched].tolist()) | set(touched.tolist())
-            for i in comp:
-                r = roots_all[i]
-                v = reps[i]
-                cur = mins.get(r)
-                if cur is None or v < cur:
-                    mins[r] = v
-            for i in comp:
-                out[i] = mins[roots_all[i]]
-            tot = np.zeros(n, dtype=np.int64)
-            np.add.at(tot, roots_all, cnt)
-            size = tot[roots_all]
+        n = len(pdf)
+        new = np.ones(n, dtype=bool)  # row starts a group
+        new[1:] = (sg[1:] != sg[:-1]) | (sub[1:] != sub[:-1])
+        starts = np.flatnonzero(new)
+        gsize = np.diff(np.r_[starts, n])
+        big = gsize > _TINY_GROUP
+        x = ph.astype(np.uint64)
+        # tiny groups: one block each; a large group's rows are blocks
+        # of one here, so only the per-group pass below compares them
+        tiny = np.cumsum(new | np.repeat(big, gsize))
+        max_d = int(min(_TINY_GROUP, gsize.max()))
+        i, j = _block_edges(x, tiny, radius, max_d)
+        ii, jj = [i], [j]
+        for s, m in zip(starts[big], gsize[big]):
+            edges = (
+                _banded_edges(x[s : s + m], radius)
+                if m > _BANDED_COMPONENTS_MIN
+                else _block_edges(x[s : s + m], None, radius, m)
+            )
+            ii.append(edges[0] + s)
+            jj.append(edges[1] + s)
+        lab = _labels(n, np.concatenate(ii), np.concatenate(jj))
+        size = np.bincount(lab, weights=cnt)[lab].astype(np.int64)  # cluster ROWS
         hot = pdf["is_hot"].to_numpy()
         keep = hot | (size >= 2)
         yield pd.DataFrame(
@@ -389,7 +363,7 @@ def _cluster_partition(radius: int):
                 "rep": reps[keep],
                 "sg": sg[keep],
                 "is_hot": hot[keep],
-                "cluster_id": out[keep],
+                "cluster_id": reps[lab][keep],
                 "cluster_size": size[keep],
             }
         )
@@ -453,14 +427,12 @@ def neardup_phash_map(
             .distinct()
         )
     # The build's one bounded collect: the bucket pairs plus per-bucket
-    # facts (rows, distinct hashes, and the min hash and rep, which for a
-    # one-hash bucket ARE its node), <= 2^bits rows marked by a null `b`.
-    # Every data-dependent choice below (supergroups, hot salting, the
-    # pass-2 merge) is made from it on the driver.
-    facts = pc.groupBy("bucket").agg(
-        F.sum("cnt").alias("n"), F.count("*").alias("dn"),
-        F.min("phash").alias("phash"), F.min("rep").alias("rep"),
-    )
+    # facts (rows, distinct hashes), <= 2^bits rows marked by a null `b`.
+    # Sums and counts only, so the aggregate hashes (a string min would
+    # force a sort of every node row). Every data-dependent choice below
+    # (supergroups, hot salting, the pass-2 merge) is made from it on
+    # the driver.
+    facts = pc.groupBy("bucket").agg(F.sum("cnt").alias("n"), F.count("*").alias("dn"))
     q = bpairs.unionByName(facts, allowMissingColumns=True)
     if bridge == "bands" or bits << (bits - 1) > SG_DRIVER_CC_MAX:
         # only a pair count with no bound below the cap needs the limit
@@ -478,35 +450,39 @@ def neardup_phash_map(
         labels = dict(_cc_min_label(bpairs.persist()).collect())
         bpairs.unpersist()
         got = facts.collect()
-    multi, singles, hot = _supergroups(spark, got, labels, hot_threshold)
-    # Only the nodes of supergroups with >= 2 distinct hashes enter the
-    # Python pass: their buckets join as a driver-side LocalRelation.
-    # A one-hash supergroup's rows all share the hash, so the cluster is
-    # rep — the blocking no-op case the reference also short-circuits
-    # (exact_matching.py: groups with one candidate), and the viral-image
-    # case (10^6 copies = 1 node): its map row comes from the facts.
-    nodes = pc.join(F.broadcast(multi), "bucket")
+    sgs, hot = _supergroups(spark, got, labels, hot_threshold)
+    # Only the nodes of supergroups with >= 2 distinct hashes or >= 2 rows
+    # enter the map: their buckets join as a driver-side LocalRelation. A
+    # one-hash supergroup's rows all share the hash, so its node passes
+    # pass 1 as a one-node group whose cluster is its rep (the viral-image
+    # case: 10^6 copies = 1 node). Splitting those nodes off instead
+    # would push the split's filter into the LocalRelation and broadcast
+    # a second one, and broadcasting a LocalRelation runs a job.
+    nodes = pc.join(F.broadcast(sgs), "bucket")
     pass1_schema = (
         "phash long, cnt long, rep string, sg int, is_hot boolean,"
         " cluster_id string, cluster_size long"
     )
     # Pass 1: non-hot supergroups come out final (rows of >= 2-row
     # clusters only); hot ones come out whole, as salted sub-clusters.
+    # Sorted by rep within each group, so a component's min index is its
+    # min rep (`_cluster_partition`).
     shr = F.shiftrightunsigned(F.col("phash"), bits)
     sub = F.when(F.col("is_hot"), shr.bitwiseAND(F.lit(sub_mask)).cast("int"))
     local = (
         nodes.select("phash", "cnt", "rep", "sg", "is_hot", sub.otherwise(0).alias("sub"))
         .repartition("sg", "sub")
-        .sortWithinPartitions("sg", "sub")
+        .sortWithinPartitions("sg", "sub", "rep")
         .mapInPandas(_cluster_partition(radius), schema=pass1_schema)
     )
     cols = ["phash", "cluster_id", "cluster_size"]
     if hot:
         # diamond: `local` feeds the non-hot rows, the rep extraction and
-        # the merge join — persist so the Python pass runs once (Spark
-        # reuses exchanges, not post-shuffle Python stages)
-        local = local.persist()
-    ph_map = singles.unionByName(local.where(~F.col("is_hot")).select(*cols))
+        # the merge join — materialize it before they are planned, so the
+        # Python pass runs once (Spark reuses exchanges, not post-shuffle
+        # Python stages; a lazy cache was built by three racing stages)
+        local = local.localCheckpoint(eager=True)
+    ph_map = local.where(~F.col("is_hot")).select(*cols)
     if hot:
         # Pass 2 (salted supergroups only): merge sub-clusters via reps.
         # The member holding the component's min image_id is the one
@@ -540,8 +516,7 @@ def neardup_phash_map(
             .select(*cols)
         )
     # The map's one eager job: materialize it (node-level work only),
-    # count it on the way, cut the lineage, then release every cache the
-    # build held.
+    # count it on the way, and cut the lineage.
     obs = Observation()
     ph_map = (
         ph_map.select(
@@ -552,7 +527,6 @@ def neardup_phash_map(
         .observe(obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    local.unpersist()  # a no-op unless a hot supergroup persisted it
     return ph_map, obs.get["n"]
 
 
@@ -700,54 +674,35 @@ def _band_bucket_pairs(
 def _min_labels(edges: list) -> dict:
     """Connected components of a collected edge list, on the driver:
     node -> min node id of its component (the `_cc_min_label` contract).
-
-    Vectorized hook-and-compress: each round hooks the root of every
-    edge's larger end under the smaller one (np.minimum.at), then
-    pointer-jumps every label to its root. At the fixpoint both ends of
-    every edge share one root, and a component's min node is always a
-    root, so that root is the minimum.
-    """
+    np.unique numbers the nodes in sorted order, so `_labels`' min index
+    is the min node."""
     if not edges:
         return {}
     nodes, idx = np.unique(np.asarray(edges).ravel(), return_inverse=True)
-    ia, ib = idx[0::2], idx[1::2]
-    lab = np.arange(len(nodes))
-    while True:
-        la, lb = lab[ia], lab[ib]
-        if (la == lb).all():
-            return dict(zip(nodes.tolist(), nodes[lab].tolist()))
-        np.minimum.at(lab, la, lb)
-        np.minimum.at(lab, lb, la)
-        while (lab[lab] != lab).any():
-            lab = lab[lab]
+    lab = _labels(len(nodes), idx[0::2], idx[1::2])
+    return dict(zip(nodes.tolist(), nodes[lab].tolist()))
 
 
 def _supergroups(
     spark, facts: list, labels: dict, hot_threshold: int
-) -> tuple[DataFrame, DataFrame, bool]:
+) -> tuple[DataFrame, bool]:
     """Per-bucket facts and bucket -> supergroup labels (unlabeled
-    buckets are their own) -> ``(bucket, sg, is_hot)`` for supergroups of
-    >= 2 distinct hashes (hot by ROWS, contract step 3), the map rows of
-    one-hash supergroups of >= 2 rows, and whether any is hot. The frames
-    come from Arrow: a pandas frame with no rows would become a Python
-    RDD, i.e. a worker per slice."""
-
-    def rel(pdf: pd.DataFrame, schema: str) -> DataFrame:
-        return spark.createDataFrame(pa.Table.from_pandas(pdf, preserve_index=False), schema)
-
-    cols = ["bucket", "n", "dn", "phash", "rep"]
-    f = pd.DataFrame([r.asDict() for r in facts], columns=cols)
+    buckets are their own) -> one ``(bucket, sg, is_hot)`` LocalRelation
+    of the buckets of supergroups with >= 2 distinct hashes or >= 2 rows
+    (the others hold one single-row node, a cluster of itself), and
+    whether any supergroup is hot (by ROWS, contract step 3; a one-hash
+    supergroup never is, having nothing to compare). It comes from Arrow:
+    a pandas frame with no rows would become a Python RDD, i.e. a worker
+    per slice."""
+    f = pd.DataFrame([r.asDict() for r in facts], columns=["bucket", "n", "dn"])
     f["sg"] = [labels.get(b, b) for b in f["bucket"]]
     tot = f.groupby("sg")[["n", "dn"]].transform("sum")
-    f["is_hot"] = tot["n"] > hot_threshold
-    one = f.loc[(tot["dn"] == 1) & (f["n"] >= 2), ["phash", "rep", "n"]].set_axis(
-        ["phash", "cluster_id", "cluster_size"], axis=1
-    )
-    multi = f.loc[tot["dn"] >= 2, ["bucket", "sg", "is_hot"]]
+    f["is_hot"] = (tot["n"] > hot_threshold) & (tot["dn"] >= 2)
+    f = f.loc[(tot["dn"] >= 2) | (f["n"] >= 2), ["bucket", "sg", "is_hot"]]
+    table = pa.Table.from_pandas(f, preserve_index=False)
     return (
-        rel(multi, "bucket int, sg int, is_hot boolean"),
-        rel(one, "phash long, cluster_id string, cluster_size long"),
-        bool(multi["is_hot"].any()),
+        spark.createDataFrame(table, "bucket int, sg int, is_hot boolean"),
+        bool(f["is_hot"].any()),
     )
 
 
@@ -755,8 +710,8 @@ def _cc_min_label(edges: DataFrame) -> DataFrame:
     """Connected components over a small undirected edge list.
 
     Min-label propagation to fixpoint: every node ends with the minimum
-    node id of its component — the same rep-election contract as the
-    per-group union-find. Caller persists `edges`; each iteration
+    node id of its component — the same contract as `_labels` (via
+    `_min_labels`), distributed. Caller persists `edges`; each iteration
     localCheckpoints the <=|V|-row label frame so lineage stays flat.
     Iteration count = graph diameter (bucket-pair graphs are tiny).
     """
@@ -789,27 +744,22 @@ def _cc_min_label(edges: DataFrame) -> DataFrame:
 
 
 def _merge_reps(pdf: pd.DataFrame, radius2: int) -> pd.DataFrame:
+    """One hot supergroup's sub-cluster reps -> the merged cluster of
+    each: the min local cluster id of its within-``radius2`` component
+    (== min image_id of the members, since local ids are themselves min
+    image_ids; sorted first, so that is the component's min index)."""
+    pdf = pdf.sort_values("orig_local", kind="stable")
     ph = pdf["phash"].to_numpy()
     # large rep sets (a hot supergroup of mostly-singleton components
     # yields ~one rep per distinct hash) take the banded finder — the
     # r5 fix for the 6.4M serial-task collapse; small sets keep the
     # direct compare (less per-call overhead, same exact result)
-    if len(ph) > _BANDED_COMPONENTS_MIN:
-        roots, _ = _components_banded(ph, radius2)
-    else:
-        roots, _ = _components(ph, radius2)
-    # global cluster = min local_cluster id (== min image_id of members,
-    # since local ids are themselves min image_ids)
-    glob = (
-        pd.Series(pdf["orig_local"].to_numpy(dtype=object))
-        .groupby(roots)
-        .transform("min")
-        .to_numpy(dtype=object)
-    )
+    comp = _components_banded if len(ph) > _BANDED_COMPONENTS_MIN else _components
+    orig = pdf["orig_local"].to_numpy(dtype=object)
     return pd.DataFrame(
         {
             "sg": pdf["sg"].to_numpy(),
-            "orig_local": pdf["orig_local"].to_numpy(dtype=object),
-            "global_cluster": glob,
+            "orig_local": orig,
+            "global_cluster": orig[comp(ph, radius2)],
         }
     )

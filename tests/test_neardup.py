@@ -217,19 +217,32 @@ def test_bands_narrow_bands_extend_radius(spark):
     assert (out["cluster_size"] == 2).all()
 
 
+def _partition(labels) -> list[tuple[int, ...]]:
+    import collections
+
+    groups = collections.defaultdict(list)
+    for i, r in enumerate(labels):
+        groups[int(r)].append(i)
+    return sorted(map(tuple, groups.values()))
+
+
 @pytest.mark.parametrize("radius", [1, 3, 6, 7])
 @pytest.mark.parametrize("seed", [0, 7])
 def test_components_banded_equals_direct(radius, seed):
     """The banded component finder (the r5 pass-2 fix) must partition
-    IDENTICALLY to the direct O(n^2) compare on random hash sets dense
-    with planted within-radius pairs — including chains that only
-    connect transitively across different bands."""
+    IDENTICALLY to the direct O(n^2) compare and to the oracle's
+    independent pure-Python union-find. Inputs: a random hash set dense
+    with planted within-radius pairs, including chains that only connect
+    transitively across different bands; and one long chain (a one-bit
+    random walk) stored in shuffled order, so labeling it takes several
+    hook rounds (stored in walk or reverse order, one round would do)."""
     import numpy as np
 
     from stop_sync_osm_atlas_spark.operators.neardup import (
         _components,
         _components_banded,
     )
+    from stop_sync_osm_atlas_spark.oracle import oracle
 
     rng = np.random.default_rng(seed)
     base = rng.integers(0, 1 << 63, size=150, dtype=np.uint64)
@@ -251,20 +264,18 @@ def test_components_banded_equals_direct(radius, seed):
                 flip |= 1 << int(b)
             cur ^= flip
             hashes.append(cur)
-    arr = np.array(hashes, dtype=np.uint64).astype(np.int64)
+    walk = [int(rng.integers(0, 1 << 63))]
+    for b in rng.integers(0, 64, size=1199):
+        walk.append(walk[-1] ^ (1 << int(b)))
+    chain = np.array(walk, dtype=np.uint64)[rng.permutation(len(walk))]
 
-    ra, _ = _components(arr, radius)
-    rb, _ = _components_banded(arr, radius)
-    # compare PARTITIONS, not labels
-    import collections
-
-    pa = collections.defaultdict(list)
-    pb = collections.defaultdict(list)
-    for i, r in enumerate(ra):
-        pa[int(r)].append(i)
-    for i, r in enumerate(rb):
-        pb[int(r)].append(i)
-    assert sorted(map(tuple, pa.values())) == sorted(map(tuple, pb.values()))
+    for arr in (np.array(hashes, dtype=np.uint64), chain):
+        # compare PARTITIONS, not labels
+        truth = _partition(oracle._components([int(h) for h in arr], radius))
+        arr = arr.astype(np.int64)
+        assert _partition(_components(arr, radius)) == truth
+        assert _partition(_components_banded(arr, radius)) == truth
+    assert truth == [tuple(range(len(chain)))]  # the walk is one component
 
 
 @pytest.mark.parametrize(
@@ -365,6 +376,23 @@ def test_random_corpus_matches_oracle(spark, seed, bridge):
     """Randomized engine-vs-pandas-oracle agreement for BOTH bridge
     modes: random base hashes + planted near-dups at random bit
     positions (window and upper), exact dups, and nulls."""
+    _check_random_corpus(spark, seed, bridge)
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+@pytest.mark.parametrize("bridge", ["multiprobe", "bands"])
+def test_random_corpus_banded_groups_match_oracle(spark, monkeypatch, seed, bridge):
+    """The same corpora with pass 1's size thresholds lowered, so every
+    group of >= 2 nodes takes `_cluster_partition`'s per-group banded
+    finder instead of the shared tiny-group pass."""
+    from stop_sync_osm_atlas_spark.operators import neardup as ND
+
+    monkeypatch.setattr(ND, "_TINY_GROUP", 1)
+    monkeypatch.setattr(ND, "_BANDED_COMPONENTS_MIN", 1)
+    _check_random_corpus(spark, seed, bridge)
+
+
+def _check_random_corpus(spark, seed, bridge):
     import numpy as np
 
     rng = np.random.default_rng(seed)
@@ -441,12 +469,9 @@ def test_components_banded_radius_at_or_above_64():
     )
 
     hashes = np.array([0, (1 << 64) - 1, 12345, 1 << 63], dtype=np.uint64)
-    roots, merged = _components_banded(hashes, radius=64)
-    assert merged and len(set(roots.tolist())) == 1
-    roots_direct, merged_direct = _components(hashes, 64)
-    assert merged_direct and len(set(int(r) for r in roots_direct)) == 1
-    one, m1 = _components_banded(np.array([7], dtype=np.uint64), radius=64)
-    assert not m1 and list(one) == [0]
+    assert list(_components_banded(hashes, radius=64)) == [0, 0, 0, 0]
+    assert list(_components(hashes, 64)) == [0, 0, 0, 0]
+    assert list(_components_banded(np.array([7], dtype=np.uint64), radius=64)) == [0]
 
 
 def test_distributed_label_fallback_matches_oracle(spark, monkeypatch):

@@ -362,22 +362,34 @@ def test_neardup_map_plans_merge_only_when_hot(
     without a hot supergroup the map runs at most 9 jobs (21 when the
     pass-2 merge was always planned) and its plan holds no grouped-map
     Python pass and no window; the planted hot bucket (nd_kwargs) brings
-    the merge in. Either way n_map is the map's row count."""
+    the merge in, on a pass 1 materialized before its three readers are
+    planned (at most 14 jobs; 16 when a lazy cache fed them). Either
+    way n_map is the map's row count, and the collect's per-bucket facts
+    aggregate hashes (no string min, so no SortAggregate)."""
     import pyspark.sql.classic.dataframe as cdf
 
     from stop_sync_osm_atlas_spark.operators.neardup import neardup_phash_map
     from stop_sync_osm_atlas_spark.schemas import PAIRS_SCHEMA
 
     pairs = spark.read.schema(PAIRS_SCHEMA).parquet(fixture_paths["pairs"])
-    plans = []
+    plans, pass1, collects = [], [], []
     orig = cdf.DataFrame.localCheckpoint
+    orig_collect = cdf.DataFrame.collect
 
     def capture(self, *args, **kwargs):
         if "_nd_phash" in self.columns:
             plans.append(_plan(self))
+        elif "cluster_id" in self.columns:
+            pass1.append(_plan(self))
         return orig(self, *args, **kwargs)
 
+    def capture_collect(self):
+        if "dn" in self.columns:
+            collects.append(_plan(self))
+        return orig_collect(self)
+
     monkeypatch.setattr(cdf.DataFrame, "localCheckpoint", capture)
+    monkeypatch.setattr(cdf.DataFrame, "collect", capture_collect)
     sc = spark.sparkContext
     group = f"neardup_map_jobs_{hot}"
     sc.setJobGroup(group, "neardup_phash_map job count")
@@ -388,9 +400,14 @@ def test_neardup_map_plans_merge_only_when_hot(
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert n_map == ph_map.count() > 0
     (plan,) = plans
-    assert "MapInPandas" in plan, plan
+    (facts_plan,) = collects
+    assert "HashAggregate" in facts_plan and "SortAggregate" not in facts_plan, facts_plan
     if hot:
+        (local,) = pass1
+        assert "MapInPandas" in local and "MapInPandas" not in plan, local
+        assert jobs <= 14, jobs
         assert "FlatMapGroupsInPandas" in plan and ") Window" in plan, plan
     else:
+        assert not pass1 and "MapInPandas" in plan, plan
         assert jobs <= 9, jobs
         assert "FlatMapGroupsInPandas" not in plan and "Window" not in plan, plan
