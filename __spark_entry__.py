@@ -851,10 +851,9 @@ def q23_quality_cascade(spark, sf):
     hits["langid_undetermined"] = F.col("lang") == "und"
     hits["high_perplexity"] = F.lit(False)
     hits["near_duplicate"] = F.lit(False)
-    resolved = with_rule_resolution(
-        scored, hits, SC.scrub_hit(F.col("caption")), SC.pii_only_hit(F.col("caption"))
-    )
-    resolved = SC.with_scrub(resolved)
+    hits["scrub"] = SC.scrub_hit(F.col("caption"))
+    hits["pii_only_after_scrub"] = SC.pii_only_hit(F.col("caption"))
+    resolved = SC.with_scrub(with_rule_resolution(scored, hits))
     return resolved.select(
         "doc_id",
         "decision",

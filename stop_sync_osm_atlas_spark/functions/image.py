@@ -49,6 +49,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from .jpeg import decode_jpeg_ex, encode_jpeg, jpeg_seed
 
@@ -301,12 +302,6 @@ def _decode_png_ex(
     return px.reshape(h, w, 3), w, h, seed, None
 
 
-def decode_png(b: bytes) -> tuple[np.ndarray | None, int, int, str | None]:
-    """Real-PNG decode: -> (pixels|None, w, h, err|None)."""
-    px, w, h, _seed, e = _decode_png_ex(b)
-    return px, w, h, e
-
-
 def png_seed(b: bytes) -> int | None:
     """Ground-truth seed from the tEXt ancillary chunk, if present."""
     try:
@@ -528,12 +523,38 @@ def _text_signals(cap) -> tuple:
     return nw, rep, sym, swd, lang, conf, scrubbed, pii_only
 
 
-PREPARED_SCHEMA = (
-    "image_id string, w int, h int, fmt string, caption string, phash long, "
-    "dec_ok boolean, n_words_py int, rep_ratio double, symbol_ratio_py double, "
+# the _text_signals tuple as columns, in tuple order
+TEXT_SIGNALS_SCHEMA = (
+    "n_words_py int, rep_ratio double, symbol_ratio_py double, "
     "stop_density_py double, lang_py string, lang_conf_py double, "
     "caption_scrubbed_pre string, pii_only_py boolean"
 )
+_TEXT_SIGNAL_COLS = [f.split()[0] for f in TEXT_SIGNALS_SCHEMA.split(", ")]
+
+PREPARED_SCHEMA = (
+    "image_id string, w int, h int, fmt string, caption string, phash long, "
+    "dec_ok boolean, " + TEXT_SIGNALS_SCHEMA
+)
+
+
+def _with_text_signals(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Add the TEXT_SIGNALS_SCHEMA columns to one Arrow batch, in place."""
+    sig = [_text_signals(cap) for cap in pdf["caption"]]
+    cols = map(list, zip(*sig)) if sig else ([],) * len(_TEXT_SIGNAL_COLS)
+    for name, col in zip(_TEXT_SIGNAL_COLS, cols):
+        pdf[name] = col
+    return pdf
+
+
+def text_signals(df: DataFrame) -> DataFrame:
+    """``df`` plus the TEXT_SIGNALS_SCHEMA columns of its ``caption``, in
+    one stateless Arrow pass — for frames with no bytes to decode (the
+    streaming arms); ``decode_validate_inline`` runs the same per-batch
+    helper inside its decode pass."""
+    schema = T.StructType(
+        df.schema.fields + T.StructType.fromDDL(TEXT_SIGNALS_SCHEMA).fields
+    )
+    return df.mapInPandas(lambda it: map(_with_text_signals, it), schema=schema)
 
 
 def decode_validate_inline(pairs: DataFrame) -> DataFrame:
@@ -564,20 +585,9 @@ def decode_validate_inline(pairs: DataFrame) -> DataFrame:
                     ok[i] = True
                     continue
                 ok[i] = psnr(px, synth_pixels(seed, w, h)) >= 40.0
-            sig = [_text_signals(cap) for cap in pdf["caption"]]
-            out = pdf.drop(columns=["bytes"]).copy()
+            out = pdf.drop(columns=["bytes"])
             out["dec_ok"] = ok
-            (
-                out["n_words_py"],
-                out["rep_ratio"],
-                out["symbol_ratio_py"],
-                out["stop_density_py"],
-                out["lang_py"],
-                out["lang_conf_py"],
-                out["caption_scrubbed_pre"],
-                out["pii_only_py"],
-            ) = map(list, zip(*sig)) if sig else ([],) * 8
-            yield out
+            yield _with_text_signals(out)
 
     return pairs.select(
         "image_id", "bytes", "w", "h", "fmt", "caption", "phash"

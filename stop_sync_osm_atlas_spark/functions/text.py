@@ -84,13 +84,11 @@ def distinct_word_ratio(c: Column) -> Column:
 
     KNOWN CodegenFallback: array_distinct de-codegens any projection
     containing it (CLAUDE.md rule) and no codegen'd built-in computes a
-    distinct count over a split array. The batch cascade bounds the
-    cost by packing it into the one hits-mask projection
-    (cascade.py); the fused Arrow pass avoids it entirely (set() in
-    _text_signals); streaming and the standalone q-paths pay one
-    interpreted projection per row — measured small at their row
-    rates, revisit only if a repetition signal lands on a new hot
-    path."""
+    distinct count over a split array. The batch cascade and the stream
+    arms avoid it entirely (set() in the Arrow pass's _text_signals);
+    the standalone q-paths pay one interpreted projection per row —
+    measured small at their row rates, revisit only if a repetition
+    signal lands on a new hot path."""
     w = words(c)
     return F.when(F.size(w) > 0, F.size(F.array_distinct(w)) / F.size(w)).otherwise(
         F.lit(1.0)

@@ -13,9 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.langid import langid_marker_cols
 from .neardup import attach_clusters, neardup_phash_map
-from .rules import RuleConfig, metadata_rule_hits, signal_rule_hits, with_rule_resolution
+from .rules import RuleConfig, rule_hits, with_rule_resolution
 
 
 def score_signals(
@@ -25,7 +24,8 @@ def score_signals(
 ) -> DataFrame:
     """Attach lang/lang_conf/perplexity columns.
 
-    Defaults to the pure-Catalyst marker scorer; pass the NB/bigram UDFs
+    Defaults to the marker scorer of the Arrow text pass (the ``lang_py``
+    columns of ``functions.image``); pass the NB/bigram UDFs
     (functions.langid / functions.perplexity) for the model-based path —
     same column contract either way.
     """
@@ -35,19 +35,28 @@ def score_signals(
         out = scored.withColumn("lang", F.col("_lid.lang")).withColumn(
             "lang_conf", F.col("_lid.conf")
         ).drop("_lid")
-    elif "lang_py" in pairs.columns:
-        # fused-Python marker scorer output (functions/image.py)
+    else:
         out = pairs.withColumn("lang", F.col("lang_py")).withColumn(
             "lang_conf", F.col("lang_conf_py")
         )
-    else:
-        lang, conf = langid_marker_cols(cap)
-        out = pairs.withColumn("lang", lang).withColumn("lang_conf", conf)
     if perplexity_udf is not None:
         out = out.withColumn("perplexity", perplexity_udf(cap))
     else:
         out = out.withColumn("perplexity", F.lit(None).cast("double"))
     return out
+
+
+def resolve_decisions(scored: DataFrame, hits: dict) -> DataFrame:
+    """``with_rule_resolution`` plus ``caption_scrubbed``: the scrubbed
+    caption where the decision is scrub, the raw caption otherwise —
+    the resolution tail shared by ``run_cascade`` and the stream arms."""
+    resolved = with_rule_resolution(scored, hits)
+    return resolved.withColumn(
+        "caption_scrubbed",
+        F.when(F.col("decision") == "scrub", F.col("caption_scrubbed_pre")).otherwise(
+            F.col("caption")
+        ),
+    )
 
 
 def run_cascade(
@@ -94,22 +103,11 @@ def run_cascade(
     # them). Packing all pre-join hits into ONE integer column that the
     # cluster-join shuffle then materializes makes every downstream
     # reference a cheap bit test.
-    pre_hits = metadata_rule_hits(scored, cfg)
-    pre_hits["corrupt_image"] = pre_hits["corrupt_image"] | ~F.coalesce(
-        F.col("dec_ok"), F.lit(False)
-    )
-    pre_hits.update(signal_rule_hits(cfg))
-    del pre_hits["near_duplicate"]  # post-join signal
-    pre_hits["scrub"] = F.col("caption").isNotNull() & (
-        F.col("caption_scrubbed_pre") != F.col("caption")
-    )
-    pre_hits["pii_only_after_scrub"] = F.coalesce(F.col("pii_only_py"), F.lit(False))
-    # Per-rule enable switches (reference problem_detection.py:20-23
-    # ENABLE_* analog): a disabled rule's hit is constant-folded false —
-    # Catalyst then prunes its entire predicate subtree from the plan.
-    for name in list(pre_hits):
-        if not cfg.rule_enabled(name):
-            pre_hits[name] = F.lit(False)
+    pre_hits = rule_hits(scored, cfg)
+    if cfg.rule_enabled("corrupt_image"):
+        pre_hits["corrupt_image"] = pre_hits["corrupt_image"] | ~F.coalesce(
+            F.col("dec_ok"), F.lit(False)
+        )
 
     bit_of = {name: i for i, name in enumerate(sorted(pre_hits))}
     mask = None
@@ -125,25 +123,13 @@ def run_cascade(
     hits = {
         name: F.col("_hits_mask").bitwiseAND(F.lit(1 << bit_of[name])) != 0
         for name in pre_hits
-        if name not in ("scrub", "pii_only_after_scrub")
     }
     hits["near_duplicate"] = (
         F.coalesce(~F.col("is_cluster_rep"), F.lit(False))
         if cfg.rule_enabled("near_duplicate")
         else F.lit(False)
     )
-    s_hit = F.col("_hits_mask").bitwiseAND(F.lit(1 << bit_of["scrub"])) != 0
-    p_hit = (
-        F.col("_hits_mask").bitwiseAND(F.lit(1 << bit_of["pii_only_after_scrub"])) != 0
-    )
-    resolved = with_rule_resolution(scored, hits, s_hit, p_hit)
-    resolved = resolved.withColumn(
-        "caption_scrubbed",
-        F.when(F.col("decision") == "scrub", F.col("caption_scrubbed_pre")).otherwise(
-            F.col("caption")
-        ),
-    )
-    resolved = apply_overrides(resolved, overrides)
+    resolved = apply_overrides(resolve_decisions(scored, hits), overrides)
     # lineage partition: one of 64 stable hash buckets of image_id
     # (cross-run stable, NOT Spark's task partition — survives
     # repartitioning)

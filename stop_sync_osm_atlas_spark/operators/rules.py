@@ -16,7 +16,7 @@ columns so this module stays JVM-side.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -42,10 +42,10 @@ class RuleConfig:
     min_stopword_density: float = 0.05
     stopword_rule_min_words: int = 20
     max_perplexity: float = 97.0  # ~uniform-over-alphabet ppl for gibberish
-    stopwords: tuple[str, ...] = field(default_factory=lambda: tuple(ALL_STOPWORDS))
     # ENABLE_* analog (reference problem_detection.py:20-23). Honored by
-    # the Spark cascade (disabled hits constant-fold to FALSE, pruning
-    # the predicate subtree) AND the pandas oracle. NOTE on the 3-way
+    # the Spark cascade, batch and stream (``rule_hits`` folds disabled
+    # hits to FALSE, pruning the predicate subtree) AND the pandas
+    # oracle (stream: tests/test_scorers.py). NOTE on the 3-way
     # mirror contract (CLAUDE.md): the DuckDB q23 oracle SQL covers only
     # the DEFAULT config (nothing disabled) — it is generated once per
     # gate run from RuleConfig() and does not parameterize on
@@ -93,12 +93,14 @@ def metadata_rule_hits(df: DataFrame, cfg: RuleConfig) -> dict[str, Column]:
     (reference import_data_db.py:60-100).
     """
     cap = F.col("caption")
-    # Prefer the fused-Python signal columns when the prepare pass
+    # Prefer the fused-Python signal columns when the Arrow text pass
     # supplied them (see functions/image.py for why); fall back to the
-    # pure-Catalyst expressions otherwise (streaming, SQL-checkable
-    # queries, metadata-only frames).
+    # pure-Catalyst expressions otherwise (SQL-checkable queries,
+    # metadata-only frames).
     has = set(df.columns)
     nw = F.col("n_words_py") if "n_words_py" in has else TX.n_words(cap)
+    # blank <=> zero words (functions.text.is_blank)
+    blank = nw == 0 if "n_words_py" in has else TX.is_blank(cap)
     rep = F.col("rep_ratio") if "rep_ratio" in has else TX.repetition_ratio(cap)
     sym = (
         F.col("symbol_ratio_py")
@@ -108,7 +110,7 @@ def metadata_rule_hits(df: DataFrame, cfg: RuleConfig) -> dict[str, Column]:
     swd = (
         F.col("stop_density_py")
         if "stop_density_py" in has
-        else TX.stopword_density(cap, list(cfg.stopwords))
+        else TX.stopword_density(cap, list(ALL_STOPWORDS))
     )
     return {
         "corrupt_image": (
@@ -119,7 +121,7 @@ def metadata_rule_hits(df: DataFrame, cfg: RuleConfig) -> dict[str, Column]:
             | F.col("fmt").isNull()
             | ~F.col("fmt").isin("png", "jpeg")
         ),
-        "empty_caption": TX.is_blank(cap),
+        "empty_caption": blank,
         "caption_too_short": nw < cfg.min_words,
         "caption_too_long": nw > cfg.max_words,
         "repetition": rep >= cfg.max_repetition,
@@ -129,18 +131,28 @@ def metadata_rule_hits(df: DataFrame, cfg: RuleConfig) -> dict[str, Column]:
     }
 
 
-def signal_rule_hits(cfg: RuleConfig) -> dict[str, Column]:
-    """Rules over pre-computed scored columns (lang, perplexity, near-dup)."""
+def rule_hits(df: DataFrame, cfg: RuleConfig) -> dict[str, Column]:
+    """Every hit that needs no near-dup cluster, disabled rules folded.
+
+    Expects the ``functions.image`` text-signal columns
+    (``caption_scrubbed_pre``, ``pii_only_py``) and ``score_signals``'
+    ``lang``/``perplexity``. A disabled rule's hit is the constant
+    FALSE (the ENABLE_* analog, reference problem_detection.py:20-23),
+    so Catalyst prunes its whole predicate subtree from the plan.
+    """
+    cap = F.col("caption")
+    hits = metadata_rule_hits(df, cfg)
+    hits["langid_undetermined"] = F.col("lang") == "und"
+    hits["high_perplexity"] = F.col("perplexity") > cfg.max_perplexity
+    hits["scrub"] = cap.isNotNull() & (F.col("caption_scrubbed_pre") != cap)
+    hits["pii_only_after_scrub"] = F.coalesce(F.col("pii_only_py"), F.lit(False))
     return {
-        "langid_undetermined": F.col("lang") == "und",
-        "high_perplexity": F.col("perplexity") > cfg.max_perplexity,
-        "near_duplicate": F.coalesce(~F.col("is_cluster_rep"), F.lit(False)),
+        name: hit if cfg.rule_enabled(name) else F.lit(False)
+        for name, hit in hits.items()
     }
 
 
-def with_rule_resolution(
-    df: DataFrame, hits: dict[str, Column], scrub_hit: Column, pii_only_hit: Column
-) -> DataFrame:
+def with_rule_resolution(df: DataFrame, hits: dict[str, Column]) -> DataFrame:
     """Resolve the cascade declaratively.
 
     Adds: rule, severity, decision, reasons (every rule that fired, in
@@ -149,9 +161,7 @@ def with_rule_resolution(
     reference matching_process/problem_detection.py:417-472).
     """
     ordered: list[tuple[str, Column]] = sorted(
-        [(name, c) for name, c in hits.items()]
-        + [("pii_only_after_scrub", pii_only_hit), ("scrub", scrub_hit)],
-        key=lambda kv: RULE_PRIORITY[kv[0]],
+        hits.items(), key=lambda kv: RULE_PRIORITY[kv[0]]
     )
     rule_col = F.lit("keep")
     for name, cond in reversed(ordered):

@@ -53,12 +53,6 @@ def pii_only_hit(cap: Column) -> Column:
     return cap.isNotNull() & (trim_ws(cap) != "") & (trim_ws(residue) == "")
 
 
-def pii_only_from_scrubbed(cap: Column, scrubbed: Column) -> Column:
-    """pii_only_hit over a pre-computed scrubbed column (no re-scrub)."""
-    residue = F.regexp_replace(scrubbed, r"<EMAIL>|<URL>|<PHONE>|<ID>|<TOX>", "")
-    return cap.isNotNull() & (trim_ws(cap) != "") & (trim_ws(residue) == "")
-
-
 def with_scrub(df: DataFrame, caption_col: str = "caption") -> DataFrame:
     cap = F.col(caption_col)
     return df.withColumn("caption_scrubbed", scrubbed_caption(cap))

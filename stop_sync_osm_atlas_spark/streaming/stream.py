@@ -4,7 +4,9 @@ The reference is batch-only (SURVEY.md §2.10) — its only incremental
 notion is persistent-override replay, which we implement as snapshot
 checkpoints. This module exists because a 100 TB ingestion pipeline
 usually *arrives* as a stream: the same stateless rule cascade applied
-via readStream, with a windowed per-minute metrics aggregation
+via readStream — the batch code's Arrow text pass (``text_signals``)
+and hit builder (``rules.rule_hits``), so batch and stream decide
+through one rule path — with a windowed per-minute metrics aggregation
 (watermarked) as the streaming metrics sink.
 
 Near-dup clustering is deliberately NOT in the streaming path — it is a
@@ -18,39 +20,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import scrub as SCRUB
-from ..operators.cascade import score_signals
-from ..operators.rules import RuleConfig, metadata_rule_hits, signal_rule_hits, with_rule_resolution
+from ..functions.image import text_signals
+from ..operators.cascade import resolve_decisions, score_signals
+from ..operators.rules import RuleConfig, rule_hits
 from ..schemas import PAIRS_SCHEMA
 from ..session import widen_if_narrow
 
 
-def _resolve_stream(scored: DataFrame, cfg: RuleConfig) -> DataFrame:
-    """Shared rule resolution for both streaming transforms, mirroring
-    run_cascade's scrub derivation: ONE caption_scrubbed_pre column
-    feeds the scrub hit, the pii-residue hit and the final scrubbed
-    caption, instead of three independent full regexp_replace ladders
-    (scrub_hit + pii_only_hit + with_scrub each re-ran the ~1 ms/row
-    PII+toxicity alternation; CollapseProject still re-expands per
-    REFERENCE, but the reference count is bounded at three and the
-    derivation is now the same code shape the batch cascade uses)."""
-    scored = scored.withColumn("is_cluster_rep", F.lit(True)).withColumn(
-        "caption_scrubbed_pre", SCRUB.scrubbed_caption(F.col("caption"))
-    )
-    hits = metadata_rule_hits(scored, cfg)
-    hits.update(signal_rule_hits(cfg))
-    s_hit = F.col("caption").isNotNull() & (
-        F.col("caption_scrubbed_pre") != F.col("caption")
-    )
-    p_hit = SCRUB.pii_only_from_scrubbed(
-        F.col("caption"), F.col("caption_scrubbed_pre")
-    )
-    resolved = with_rule_resolution(scored, hits, s_hit, p_hit)
-    return resolved.withColumn(
-        "caption_scrubbed",
-        F.when(
-            F.col("decision") == "scrub", F.col("caption_scrubbed_pre")
-        ).otherwise(F.col("caption")),
+def _scored_stream(spark: SparkSession, input_dir: str) -> DataFrame:
+    """readStream over a pairs parquet directory -> the batch cascade's
+    scored columns: the Arrow text pass (``functions.image.text_signals``,
+    the half of ``decode_validate_inline`` that needs no bytes) and
+    ``score_signals``. ``corrupt_image`` is judged from metadata only —
+    the stream decodes no bytes — and no near-dup hit is built."""
+    pairs = spark.readStream.schema(PAIRS_SCHEMA).parquet(input_dir)
+    return score_signals(
+        text_signals(pairs.select("image_id", "w", "h", "fmt", "caption"))
     )
 
 
@@ -58,9 +43,8 @@ def stream_decisions(
     spark: SparkSession, input_dir: str, cfg: RuleConfig | None = None
 ) -> DataFrame:
     """readStream over a parquet directory -> streaming decisions frame."""
-    cfg = cfg or RuleConfig()
-    pairs = spark.readStream.schema(PAIRS_SCHEMA).parquet(input_dir)
-    resolved = _resolve_stream(score_signals(pairs), cfg)
+    scored = _scored_stream(spark, input_dir)
+    resolved = resolve_decisions(scored, rule_hits(scored, cfg or RuleConfig()))
     return resolved.select(
         "image_id", "decision", "rule", "severity", "caption_scrubbed", "lang"
     )
@@ -78,15 +62,15 @@ def stream_metrics(
     The streaming edition of the per-run summary rollup (reference
     matching_script.py:614-653): each micro-batch's decisions aggregate
     into event-time windows; the watermark bounds state for late rows.
-    Event time is PROCESSING time stamped at source (PAIRS_SCHEMA
-    carries no event-time column — ingest_ts = current_timestamp());
-    a deployment whose rows arrive with a real event-time column would
-    watermark that column instead.
+    Event time is PROCESSING time stamped after the Arrow text pass
+    (PAIRS_SCHEMA carries no event-time column — ingest_ts =
+    current_timestamp()); a deployment whose rows arrive with a real
+    event-time column would watermark that column instead.
     """
-    cfg = cfg or RuleConfig()
-    pairs = spark.readStream.schema(PAIRS_SCHEMA).parquet(input_dir)
-    pairs = pairs.withColumn("ingest_ts", F.current_timestamp())
-    resolved = _resolve_stream(score_signals(pairs), cfg)
+    scored = _scored_stream(spark, input_dir).withColumn(
+        "ingest_ts", F.current_timestamp()
+    )
+    resolved = resolve_decisions(scored, rule_hits(scored, cfg or RuleConfig()))
     return (
         resolved.withWatermark("ingest_ts", watermark)
         .groupBy(F.window("ingest_ts", window), "decision")

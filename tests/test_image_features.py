@@ -80,7 +80,6 @@ def test_real_png_roundtrip_and_formats():
     from stop_sync_osm_atlas_spark.functions.image import (
         PNG_SIG,
         decode_image,
-        decode_png,
         encode_image,
         encode_png,
         ground_truth_seed,
@@ -99,7 +98,7 @@ def test_real_png_roundtrip_and_formats():
     truth = synth_pixels(7, 17, 11)  # non-square, odd dims
     for ftype in range(5):
         enc = encode_png(truth, filter_type=ftype)
-        got, w2, h2, e2 = decode_png(enc)
+        got, w2, h2, _fmt, e2 = decode_image(enc)
         assert e2 is None and (w2, h2) == (17, 11), ftype
         assert (got == truth).all(), ftype
 

@@ -79,9 +79,9 @@ def test_cascade_rules_stay_codegen(spark, fixture_paths):
     hits["langid_undetermined"] = F.lit(False)
     hits["high_perplexity"] = F.lit(False)
     hits["near_duplicate"] = F.lit(False)
-    out = with_rule_resolution(
-        scored, hits, SC.scrub_hit(F.col("caption")), SC.pii_only_hit(F.col("caption"))
-    )
+    hits["scrub"] = SC.scrub_hit(F.col("caption"))
+    hits["pii_only_after_scrub"] = SC.pii_only_hit(F.col("caption"))
+    out = with_rule_resolution(scored, hits)
     plan = _plan(out.select("image_id", "rule", "decision"))
     # '*' node prefix in formatted output marks whole-stage-codegen spans
     assert "* Project" in plan or "WholeStageCodegen" in plan, plan

@@ -157,18 +157,75 @@ def test_decode_stats_operator(spark, fixture_paths):
     assert (good["psnr"] >= 40).all()
 
 
-def test_streaming_rule_cascade(spark, fixture_paths, fixture_1k):
+def _stream_oracle(fixture_1k, cfg):
+    """The pandas oracle under the stream's semantics: no near-dup hit,
+    no byte decode."""
+    from stop_sync_osm_atlas_spark.oracle.oracle import run_oracle
+    from stop_sync_osm_atlas_spark.operators.rules import RuleConfig
+
+    off = tuple(sorted(set(cfg.disabled_rules) | {"near_duplicate"}))
+    return run_oracle(
+        fixture_1k.pairs, cfg=RuleConfig(disabled_rules=off), use_decode=False
+    )
+
+
+@pytest.mark.parametrize(
+    "disabled", [(), ("near_duplicate", "scrub")], ids=["default", "no_scrub"]
+)
+def test_streaming_rule_cascade(spark, fixture_paths, fixture_1k, disabled):
+    """Per-image decision and rule of the stream equal the pandas
+    oracle's, including under disabled rules."""
+    from stop_sync_osm_atlas_spark.operators.rules import RuleConfig
     from stop_sync_osm_atlas_spark.streaming.stream import (
         stage_and_drain,
         stream_decisions,
     )
 
+    cfg = RuleConfig(disabled_rules=disabled)
     pairs = spark.read.schema(PAIRS_SCHEMA).parquet(fixture_paths["pairs"])
     out = stage_and_drain(
-        spark, pairs, stream_decisions, "stream_decisions", tag="rule_cascade"
+        spark,
+        pairs,
+        lambda s, d: stream_decisions(s, d, cfg),
+        "stream_decisions",
+        tag=f"rule_cascade_{'_'.join(disabled)}",
     ).toPandas()
-    assert len(out) == len(fixture_1k.pairs)
-    assert set(out["decision"].unique()) <= {"keep", "drop", "scrub"}
+    got = out.set_index("image_id")[["decision", "rule"]].sort_index()
+    want = (
+        _stream_oracle(fixture_1k, cfg)
+        .set_index("image_id")[["decision", "rule"]]
+        .sort_index()
+    )
+    assert len(got) == len(fixture_1k.pairs)
+    pd.testing.assert_frame_equal(got, want)
+
+
+def test_stream_decisions_plan_has_one_arrow_pass(spark, fixture_paths, tmp_path, capsys):
+    """A drained stream_decisions query runs one MapInPandas (the Arrow
+    text pass) and no Catalyst regexp_replace scrub ladder."""
+    import shutil
+
+    from stop_sync_osm_atlas_spark.streaming.stream import stream_decisions
+
+    d = tmp_path / "stream_plan_in"
+    d.mkdir()
+    shutil.copy(fixture_paths["pairs"], d / "part-000.parquet")
+    q = (
+        stream_decisions(spark, str(d))
+        .writeStream.format("memory")
+        .queryName("stream_plan_out")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        capsys.readouterr()
+        q.explain()
+        plan = capsys.readouterr().out
+    finally:
+        q.stop()
+    assert "Physical Plan" in plan, plan
+    assert plan.count("MapInPandas") == 1, plan
+    assert "regexp_replace" not in plan, plan
 
 
 def test_stage_and_drain_staging_dir_cleanup(spark, tmp_path, monkeypatch):
@@ -250,7 +307,8 @@ def test_streaming_windowed_metrics(spark, fixture_paths, fixture_1k, tmp_path):
     """Watermarked tumbling-window metrics over the decision stream."""
     import shutil
 
-    from stop_sync_osm_atlas_spark.streaming.stream import stream_metrics
+    from stop_sync_osm_atlas_spark.operators.rules import RuleConfig
+    from stop_sync_osm_atlas_spark.streaming.stream import stage_and_drain, stream_metrics
 
     d = tmp_path / "stream_in2"
     d.mkdir()
@@ -264,13 +322,24 @@ def test_streaming_windowed_metrics(spark, fixture_paths, fixture_1k, tmp_path):
     )
     q.processAllAvailable()
     q.stop()
-    out = spark.sql("SELECT * FROM stream_metrics_out").toPandas()
     # append mode only emits windows the watermark has closed; a single
     # micro-batch leaves them open, so assert on the query's progress
     # instead: all input rows were processed into state.
-    assert q.lastProgress is None or True
     total = sum(p["numInputRows"] for p in q.recentProgress)
     assert total == len(fixture_1k.pairs)
+
+    # complete mode emits the open windows: summed over windows, the
+    # per-decision counts are the oracle's
+    pairs = spark.read.schema(PAIRS_SCHEMA).parquet(fixture_paths["pairs"])
+    sink = stage_and_drain(
+        spark, pairs, stream_metrics, "stream_metrics_complete", "metrics",
+        output_mode="complete",
+    )
+    got = sink.groupBy("decision").agg(F.sum("n").alias("n")).toPandas()
+    want = _stream_oracle(fixture_1k, RuleConfig())["decision"].value_counts()
+    assert dict(zip(got["decision"], got["n"].astype(int))) == {
+        k: int(v) for k, v in want.items()
+    }
 
 
 def test_streaming_sessionize_matches_batch(spark, tmp_path):
