@@ -6,9 +6,10 @@ Three byte layouts, one decode contract (bytes -> HxWx3 uint8 or error):
   a genuine dependency-free PNG implementation — 8-bit RGB IHDR,
   deflate-compressed IDAT, CRC-verified chunks, all five scanline
   filter types on decode (type 0 vectorized as the encode default),
-  the ground-truth seed carried in an ancillary ``tEXt`` chunk. The
-  PSNR invariant is therefore a genuine format-roundtrip check for
-  this path.
+  the ground-truth seed carried in an ancillary ``tEXt`` chunk, which
+  the codec tests roundtrip against. The row verdict is decode
+  success: the format is lossless and CRC-checked, and a real-world
+  PNG may carry an unrelated ``seed`` text chunk.
 * **Real baseline JFIF** (``fmt='jpeg'``, up to
   ``REAL_JPEG_MAX_PIXELS`` pixels on the deterministic 1-in-
   ``REAL_JPEG_SAMPLE_MOD`` seed stride — r6, ``functions/jpeg.py``): a
@@ -92,11 +93,6 @@ REAL_JPEG_SAMPLE_MOD = 8
 # The PNG path enforces it BEFORE inflating (bounded decompressobj), so
 # a deflate bomb in IDAT can never expand past the claimed-dims budget.
 MAX_DECODE_PIXELS = 1 << 24
-
-DECODE_STATS_SCHEMA = (
-    "image_id string, ok boolean, dec_w int, dec_h int, psnr double, err string"
-)
-
 
 def synth_pixels(seed: int, w: int, h: int) -> np.ndarray:
     """Ground-truth pixels: seeded noise + gradient + ALU mixing rounds.
@@ -242,7 +238,7 @@ def _decode_png_ex(
     """Real-PNG decode: -> (pixels|None, w, h, seed|None, err|None).
 
     The tEXt ground-truth seed is captured during the SAME chunk walk
-    that parses IHDR/IDAT, so hot-path callers (decode_stats) never
+    that parses IHDR/IDAT, so ``decode_image_full`` callers never
     re-parse and re-CRC the stream a second time for the seed.
     """
     seed: int | None = None
@@ -391,78 +387,6 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
     return 10.0 * np.log10(255.0**2 / mse)
 
 
-def decode_stats(pairs: DataFrame) -> DataFrame:
-    """mapInPandas operator: validate/decode every image, emit stats.
-
-    Projects to (image_id, bytes, w, h) *before* the Python stage so the
-    parquet scan prunes caption/phash (ReadSchema check in tests).
-    PSNR is decoded-vs-ground-truth (re-synthesized from the embedded
-    seed), i.e. the lossy-roundtrip invariant.
-    """
-
-    def _op(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = len(pdf)
-            ok = np.zeros(n, dtype=bool)
-            dec_w = np.zeros(n, dtype=np.int32)
-            dec_h = np.zeros(n, dtype=np.int32)
-            ps = np.full(n, np.nan)
-            err = np.full(n, None, dtype=object)
-            for i, (b, w_meta, h_meta) in enumerate(
-                zip(pdf["bytes"], pdf["w"], pdf["h"])
-            ):
-                px, w, h, fmt, truth_seed, e = decode_image_full(b)
-                dec_w[i], dec_h[i] = w, h
-                if e is not None:
-                    err[i] = e
-                    continue
-                if w != w_meta or h != h_meta:
-                    err[i] = "dims_mismatch_metadata"
-                    continue
-                if fmt == "png" and (
-                    truth_seed is None or b[: len(PNG_SIG)] != PNG_SIG
-                ):
-                    # synthetic-stream png (or a real PNG without the
-                    # tEXt seed channel): lossless by construction/
-                    # format, nothing to compare against
-                    ps[i] = float("inf")
-                    ok[i] = True
-                    continue
-                if truth_seed is None:
-                    # a real lossy stream without the COM seed channel:
-                    # decoded fine, but there is no ground truth to
-                    # PSNR against (production pipelines never have
-                    # one) — decode success is the verdict
-                    ps[i] = float("nan")
-                    ok[i] = True
-                    continue
-                # real-PNG rows run the GENUINE roundtrip check here:
-                # decoded stream pixels vs the seed-resynthesized truth
-                # (inf unless the codec miscarries); jpeg rows check the
-                # lossy >=40 dB invariant as before
-                truth = synth_pixels(truth_seed, w, h)
-                p = psnr(px, truth)
-                ps[i] = p
-                if p < 40.0:
-                    err[i] = "psnr_below_40"
-                    continue
-                ok[i] = True
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"],
-                    "ok": ok,
-                    "dec_w": dec_w,
-                    "dec_h": dec_h,
-                    "psnr": ps,
-                    "err": err,
-                }
-            )
-
-    return pairs.select("image_id", "bytes", "w", "h").mapInPandas(
-        _op, schema=DECODE_STATS_SCHEMA
-    )
-
-
 # ---------------------------------------------------------------------------
 # Fused prepare pass: decode validation + all per-caption text signals
 # ---------------------------------------------------------------------------
@@ -579,9 +503,8 @@ def decode_validate_inline(pairs: DataFrame) -> DataFrame:
                     # real-PNG decode already verified CRC + structure +
                     # inflate (lossless: no PSNR re-synthesis on the hot
                     # path); a seedless lossy stream has no ground truth
-                    # — decode success is the verdict either way
-                    # (decode_stats runs the full check where a seed
-                    # channel exists)
+                    # — decode success is the verdict either way (the
+                    # pandas oracle's _decode_ok mirrors this verdict)
                     ok[i] = True
                     continue
                 ok[i] = psnr(px, synth_pixels(seed, w, h)) >= 40.0
@@ -592,60 +515,3 @@ def decode_validate_inline(pairs: DataFrame) -> DataFrame:
     return pairs.select(
         "image_id", "bytes", "w", "h", "fmt", "caption", "phash"
     ).mapInPandas(_op, schema=PREPARED_SCHEMA)
-
-
-FEATURES_SCHEMA = (
-    "image_id string, ok boolean, mean_r double, mean_g double, mean_b double, "
-    "std_gray double, embedding array<float>"
-)
-
-
-def image_features(pairs: DataFrame, grid: int = 8) -> DataFrame:
-    """Decode -> resize -> feature-extract, Arrow-batched (mapInPandas).
-
-    The multimodal plumbing of a training-data pipeline: per image,
-    channel means, grayscale std, and a grid x grid average-pooled
-    grayscale thumbnail flattened to a float32 embedding (usable by
-    operators/similarity for embedding-cosine near-dup). Resize is
-    numpy average pooling on the decoded pixels — swap ``decode_image``
-    for a real codec without touching this operator's contract.
-    """
-
-    def _op(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = len(pdf)
-            ok = np.zeros(n, dtype=bool)
-            means = np.zeros((n, 3))
-            stds = np.zeros(n)
-            embs: list[list[float] | None] = [None] * n
-            for i, b in enumerate(pdf["bytes"]):
-                px, w, h, fmt, e = decode_image(b)
-                if e is not None:
-                    continue
-                ok[i] = True
-                fpx = px.astype(np.float64)
-                means[i] = fpx.mean(axis=(0, 1))
-                gray = fpx.mean(axis=2)
-                stds[i] = gray.std()
-                # average-pool to grid x grid (trim to a divisible size)
-                gh, gw = (h // grid) * grid, (w // grid) * grid
-                if gh == 0 or gw == 0:
-                    embs[i] = [0.0] * (grid * grid)
-                    continue
-                g = gray[:gh, :gw].reshape(grid, gh // grid, grid, gw // grid)
-                embs[i] = (
-                    g.mean(axis=(1, 3)).astype(np.float32).ravel().tolist()
-                )
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"],
-                    "ok": ok,
-                    "mean_r": means[:, 0],
-                    "mean_g": means[:, 1],
-                    "mean_b": means[:, 2],
-                    "std_gray": stds,
-                    "embedding": embs,
-                }
-            )
-
-    return pairs.select("image_id", "bytes").mapInPandas(_op, schema=FEATURES_SCHEMA)

@@ -67,7 +67,13 @@ def run_cascade(
     perplexity_udf=None,
     neardup_kwargs: dict | None = None,
 ) -> DataFrame:
-    """Full decision engine: pairs -> DECISIONS_SCHEMA rows.
+    """Full decision engine: pairs -> one decision record per image.
+
+    The record (the final select) is the analog of the reference's match
+    record (reference matching_process/exact_matching.py:74-101:
+    identity + attrs + match_type + notes + candidate_pool_size) plus the
+    problems ladder (reference matching_process/problem_detection.py:
+    36-213); ``tests/test_cascade_golden.py`` pins its columns and types.
 
     The byte streams are validated by the Arrow-batched decoder
     (functions.image.decode_validate_inline) — it catches truncated/

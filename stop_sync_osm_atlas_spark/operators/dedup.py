@@ -39,32 +39,6 @@ def md5_int(c: Column, hex_chars: int = 7) -> Column:
     return F.conv(F.substring(F.md5(c), 1, hex_chars), 16, 10).cast("long")
 
 
-def word_shingles(c: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of normalized text (array<string>).
-
-    Documents with fewer than ``n`` words yield an EMPTY array (same
-    contract as ``shingle_rows``, which yields no rows). The short-doc
-    gate must be an explicit ``when``: ``sequence(1, 0)`` is NOT empty
-    (Spark infers step -1 and returns [1, 0]), and ``element_at`` past
-    the array end throws under ANSI mode (the Spark 4 default) — so the
-    old greatest(..., 0) clamp let one sub-n-word document kill the
-    whole job with INVALID_ARRAY_INDEX_IN_ELEMENT_AT.
-
-    Tokenization is ``functions.text.words`` (lower + full-ASCII trim +
-    explicit-charset split) — the repo-wide convention the SQL oracle's
-    ``_sql_words`` mirrors. The old ``split(norm_text, \\s+)`` kept
-    phantom '' boundary tokens on tab/CRLF-padded text, yielding
-    shingles like 'bar baz ' only on the Spark side.
-    """
-    w = words(c)
-    idx = F.when(
-        F.size(w) >= n, F.sequence(F.lit(1), F.size(w) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", *[F.element_at(w, i + k) for k in range(n)]))
-    )
-
-
 def shingle_rows(
     docs: DataFrame,
     n: int = 3,
@@ -200,21 +174,6 @@ def ngram_jaccard_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("a_id", "b_id", F.round("jaccard", 6).alias("jaccard"))
     )
-
-
-def minhash_signature(c: Column, n: int = 3) -> Column:
-    """array<bigint> of 16 minhash values over word-n-gram shingles.
-
-    NOTE: inlining this Column 16x lets Catalyst's CollapseProject
-    re-expand the md5 transform per use — prefer ``minhash_signatures``
-    (the DataFrame variant below) which forces materialization barriers.
-    """
-    hashes = F.transform(word_shingles(c, n), lambda s: md5_int(s))
-    sig = [
-        F.array_min(F.transform(hashes, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_PRIME)))
-        for a, b in MINHASH_COEFFS
-    ]
-    return F.array(*sig)
 
 
 def minhash_signatures(
@@ -503,38 +462,6 @@ def simhash_table(
             F.coalesce(F.col("simhash"), F.lit(0).cast("long")).alias("simhash"),
         )
     )
-
-
-def simhash64(c: Column, n: int = 1) -> Column:
-    """64-bit SimHash over word (n=1) hashes — the COLUMN-EXPRESSION
-    reference variant, NOT the hot path.
-
-    bit_b(simhash) = 1 iff sum over tokens of sign(bit_b(h(token))) > 0.
-    The 60 F.aggregate lambdas are CodegenFallback (CLAUDE.md rule):
-    every one is interpreted per row, so a corpus-scale projection
-    should use ``simhash_table`` (explode + codegen'd votes — the
-    graded q27 path) instead; this expression exists as the SQL-shaped
-    contract reference and ANSI test surface, like
-    ``minhash_signature``'s NOTE. Uses 60-bit md5-derived hashes
-    (15 hex chars).
-    """
-    hashes = F.transform(
-        F.array_distinct(words(c)),
-        lambda w: md5_int(w, hex_chars=15),
-    )
-    bits = []
-    for bpos in range(60):
-        vote = F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc
-            + F.when(F.shiftrightunsigned(h, bpos).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-        bits.append(F.when(vote > 0, F.lit(1 << bpos).cast("long")).otherwise(F.lit(0).cast("long")))
-    out = bits[0]
-    for bcol in bits[1:]:
-        out = out.bitwiseOR(bcol)
-    return out
 
 
 def _covered_token_frame(

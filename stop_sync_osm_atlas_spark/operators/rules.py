@@ -88,8 +88,8 @@ def metadata_rule_hits(df: DataFrame, cfg: RuleConfig) -> dict[str, Column]:
     """Boolean hit column per metadata/caption rule.
 
     Expects the mandated pairs columns; does NOT decode bytes (that is
-    ``functions.image.decode_stats``) — the metadata variant mirrors the
-    reference's pre-import coordinate validation
+    ``functions.image.decode_validate_inline``) — the metadata variant
+    mirrors the reference's pre-import coordinate validation
     (reference import_data_db.py:60-100).
     """
     cap = F.col("caption")

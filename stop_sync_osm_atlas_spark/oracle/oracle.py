@@ -171,7 +171,7 @@ def neardup_oracle(
 
 
 def _decode_ok(r) -> bool:
-    """Mirror of functions/image.decode_stats per-row verdict."""
+    """Mirror of functions/image.decode_validate_inline's ``dec_ok``."""
     from ..functions.image import (
         decode_image,
         ground_truth_seed,
@@ -184,20 +184,14 @@ def _decode_ok(r) -> bool:
         return False
     if w != r.w or h != r.h:
         return False
+    if fmt == "png":
+        # lossless and CRC-checked, and a real-world PNG may carry an
+        # unrelated tEXt seed: decode success is the verdict
+        return True
+    # a lossy stream without a seed channel has no ground truth; seeded
+    # ones (real JFIF, synthetic jpeg) must reach 40 dB
     seed = ground_truth_seed(r.bytes)
-    if seed is None:
-        # real PNG without the tEXt seed channel (lossless by format)
-        # or a real lossy stream without the COM seed channel (no
-        # ground truth exists): decode success is the verdict — the
-        # engine's decode_stats/decode_validate_inline mirror
-        return fmt in ("png", "jpeg")
-    # same acceptance threshold as decode_stats for BOTH formats (the
-    # engine errs only when p < 40, functions/image.py): a real-PNG
-    # roundtrip lands at inf in practice, but the mirrored CONTRACT is
-    # >= 40 — an oracle-only == inf check would diverge on a stream
-    # whose pixels drifted within [40, inf)
-    p = psnr(px, synth_pixels(seed, w, h))
-    return p >= 40.0
+    return seed is None or psnr(px, synth_pixels(seed, w, h)) >= 40.0
 
 
 def run_oracle(

@@ -62,15 +62,12 @@ from ..operators.packing import pack_bins
 # already carries ~0.22 of its chars — verified by the r6 control
 # fixture). The FULL published set is one config away and measured at
 # +8% (13.5 -> 14.5 s on sf0.1 prepare_corpus — one per-doc window
-# supplies every lead_k; BENCH/BASELINE.md); pair it with a Gopher-like
-# min_words when using it.
+# supplies every lead_k; BENCH/BASELINE.md): top {2: 0.20, 3: 0.18,
+# 4: 0.16} as max_top_ngram_char_frac and dup {5: 0.15, 6: 0.14,
+# 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10} as max_dup_ngram_char_frac,
+# paired with a Gopher-like min_words.
 GOPHER_TOP_NGRAM: dict[int, float] = {2: 0.20}
 GOPHER_DUP_NGRAM: dict[int, float] = {5: 0.15}
-# the full published Gopher dials, for callers with a >= 50-word floor
-GOPHER_TOP_NGRAM_FULL: dict[int, float] = {2: 0.20, 3: 0.18, 4: 0.16}
-GOPHER_DUP_NGRAM_FULL: dict[int, float] = {
-    5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10
-}
 
 
 @dataclass(frozen=True)

@@ -1,4 +1,4 @@
-"""Table IO: parquet reads and writes.
+"""Table IO: parquet writes.
 
 ``write_table`` always writes parquet, directory-partitioned when
 ``partition_by`` is given; there is no Iceberg path. The resume
@@ -10,17 +10,7 @@ instead: one atomic commit-marker file per partition group.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-
-def read_table(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+from pyspark.sql import DataFrame
 
 
 def write_table(

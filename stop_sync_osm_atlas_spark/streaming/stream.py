@@ -186,12 +186,6 @@ def stage_and_drain_many(
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-EVENTS_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
-
-
 def stream_exact_dedup(
     spark: SparkSession, input_dir: str, watermark: str = "10 minutes"
 ) -> DataFrame:
@@ -254,7 +248,7 @@ def stream_sessionize(
             last_ts, n_sess, n_ev = None, 0, 0
         chunks = [pdf[["ts", "event_id"]] for pdf in pdfs]
         allof = _pd.concat(chunks).sort_values(["ts", "event_id"])
-        # EVENTS_SCHEMA's ts is nullable and NaT.value is INT64_MIN —
+        # the events table's ts is nullable and NaT.value is INT64_MIN —
         # one null-ts event would poison last_ts so the next event
         # always opens a spurious session (and pandas sorts NaT LAST
         # while the batch arm's orderBy puts nulls FIRST, so the two

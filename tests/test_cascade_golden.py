@@ -10,7 +10,7 @@ import pytest
 
 from stop_sync_osm_atlas_spark.operators.cascade import metrics_rollup, run_cascade
 from stop_sync_osm_atlas_spark.oracle.oracle import run_oracle
-from stop_sync_osm_atlas_spark.schemas import DECISIONS_SCHEMA, PAIRS_SCHEMA
+from stop_sync_osm_atlas_spark.schemas import PAIRS_SCHEMA
 
 
 @pytest.fixture(scope="module")
@@ -24,9 +24,24 @@ def engine_and_oracle(spark, fixture_1k, fixture_paths, nd_kwargs):
 
 
 def test_schema_matches_contract(engine_and_oracle):
+    """The per-image decision record: identity, verdict, every hit, the
+    scrubbed caption, near-dup cluster, model scores, lineage bucket."""
     eng, _, _ = engine_and_oracle
-    expected = {f.name for f in DECISIONS_SCHEMA.fields}
-    assert expected.issubset(set(eng.columns))
+    assert [(f.name, f.dataType.simpleString()) for f in eng.schema.fields] == [
+        ("image_id", "string"),
+        ("decision", "string"),
+        ("rule", "string"),
+        ("severity", "int"),
+        ("reasons", "array<string>"),
+        ("caption_scrubbed", "string"),
+        ("cluster_id", "string"),
+        ("cluster_size", "int"),
+        ("is_cluster_rep", "boolean"),
+        ("lang", "string"),
+        ("lang_conf", "double"),
+        ("perplexity", "double"),
+        ("part_bucket", "int"),
+    ]
 
 
 def test_engine_equals_oracle_exactly(engine_and_oracle):

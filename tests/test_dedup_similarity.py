@@ -24,31 +24,19 @@ def docs(spark):
 
 
 def test_word_shingles_short_docs_survive_ansi(spark):
-    """Docs with < n words must yield an EMPTY shingle array, not an
-    ANSI INVALID_ARRAY_INDEX_IN_ELEMENT_AT job kill: sequence(1, 0)
-    returns [1, 0] (negative-step inference), which used to drive
-    element_at past the array end for every sub-n-word document."""
+    """Docs with < n words must yield NO shingle rows, not an ANSI
+    INVALID_ARRAY_INDEX_IN_ELEMENT_AT job kill: sequence(1, 0) returns
+    [1, 0] (negative-step inference), which once drove element_at past
+    the array end for every sub-n-word document."""
+    texts = ["", "one", "one two", "one two three four"]
     df = spark.createDataFrame(
-        [("",), ("one",), ("one two",), ("one two three four",)], ["text"]
+        pd.DataFrame({"doc_id": range(4), "text": texts})
     )
-    out = {
-        r.text: r.sh
-        for r in df.select(
-            "text", DD.word_shingles(F.col("text")).alias("sh")
-        ).collect()
-    }
-    assert out[""] == []
-    assert out["one"] == []
-    assert out["one two"] == []
-    assert sorted(out["one two three four"]) == ["one two three", "two three four"]
-    # the Column-variant minhash over an empty shingle set must also not
-    # throw (array_min over empty -> null signature entries)
-    sig = (
-        df.select(DD.minhash_signature(F.col("text")).alias("sig"))
-        .where(F.col("sig").isNotNull())
-        .collect()
-    )
-    assert len(sig) == 4
+    sh = DD.shingle_rows(df).toPandas()
+    assert sorted(sh.shingle) == ["one two three", "two three four"]
+    assert set(sh.id) == {3}
+    # the signatures over them must not throw either; only doc 3 has one
+    assert DD.minhash_signatures(df).toPandas().id.tolist() == [3]
 
 
 def test_exact_dedup(docs):
@@ -159,8 +147,8 @@ def test_lsh_pairs_pass_the_lsh_salt_constants(spark, docs, monkeypatch):
 
 
 def test_simhash_neardups_close(docs):
-    out = docs.select("doc_id", DD.simhash64(F.col("text")).alias("sh")).toPandas()
-    sh = dict(zip(out["doc_id"], out["simhash" if "simhash" in out else "sh"]))
+    out = DD.simhash_table(docs).toPandas()
+    sh = dict(zip(out["doc_id"], out["simhash"]))
     def ham(a, b):
         return bin((a ^ b) & ((1 << 60) - 1)).count("1")
     assert ham(sh[1], sh[2]) == 0                # identical text
@@ -1188,8 +1176,8 @@ def test_padded_text_words_three_mirrors_agree(spark):
 
 def test_padded_text_shingles_and_hashes_match_clean_twin(spark):
     """A doc differing from its twin only by tab/CRLF/formfeed padding
-    must produce IDENTICAL shingles, minhash signatures, simhash and
-    word_shingles — the regression the old split(norm_text, \\s+)
+    must produce IDENTICAL shingles, minhash signatures and simhash —
+    the regression the old split(norm_text, \\s+)
     tokenization failed (phantom boundary tokens -> phantom shingles
     like 'bar baz ' on the Spark side only)."""
     rows = [
@@ -1203,12 +1191,6 @@ def test_padded_text_shingles_and_hashes_match_clean_twin(spark):
     s2 = set(sh[sh.id == 2].shingle)
     assert s1 == s2 and len(s1) == 7  # 9 tokens -> 7 trigrams (distinct)
 
-    ws = docs.select(
-        "doc_id", DD.word_shingles(F.col("text")).alias("sh")
-    ).toPandas()
-    w1, w2 = (set(ws[ws.doc_id == i].iloc[0]["sh"]) for i in (1, 2))
-    assert w1 == w2 == s1
-
     sig = DD.minhash_signatures(docs).toPandas()
     assert list(sig[sig.id == 1].iloc[0]["sig"]) == list(
         sig[sig.id == 2].iloc[0]["sig"]
@@ -1216,10 +1198,6 @@ def test_padded_text_shingles_and_hashes_match_clean_twin(spark):
 
     sim = DD.simhash_table(docs).toPandas().set_index("doc_id")
     assert sim.loc[1, "simhash"] == sim.loc[2, "simhash"]
-    col = docs.select(
-        "doc_id", DD.simhash64(F.col("text")).alias("sh")
-    ).toPandas().set_index("doc_id")
-    assert col.loc[1, "sh"] == col.loc[2, "sh"]
 
     # contamination tokenizes through the same words() path: the padded
     # doc against its clean twin as the eval set overlaps 100%

@@ -1,5 +1,6 @@
 """Driver-contract invariants for __spark_entry__.py, plus the package's
-module reachability (AST only; only the q02 cache check starts Spark).
+reachability from its entry points, per module and per top-level name
+(AST only; only the q02 cache check starts Spark).
 
 The driver records ONLY the first 50 ``queries()`` entries and compares
 each against its ``oracle_sql()`` row — round 2 silently lost two graded
@@ -56,10 +57,23 @@ def test_q02_bounds_cached_frames(spark):
 
 
 PKG = "stop_sync_osm_atlas_spark"
-# Package modules that no entry point imports, each kept for its reason.
-UNREACHED_BY_DESIGN = {
-    f"{PKG}.sources.text_formats": "documented reference-ingest path "
-    "(COVERAGE.md S1, S4-S6); its callers are tests/test_sources.py",
+ROOTS = [os.path.join(ROOT, "__spark_entry__.py"), os.path.join(ROOT, "bench.py")]
+ROOTS += sorted(glob.glob(os.path.join(ROOT, "perfbench", "*.py")))
+# Top-level package names that only tests call, each kept because a test
+# compares the engine against it as a reference implementation.
+TEST_REFERENCES = {
+    f"{PKG}.functions.langid.train_langid_model":
+        "test_model_pipeline::test_distributed_trainers_match_local",
+    f"{PKG}.functions.langid._char_ngrams":
+        "test_scorers::test_featurize_matches_scalar_reference",
+    f"{PKG}.functions.langid._hash_ngram":
+        "test_scorers::test_featurize_matches_scalar_reference",
+    f"{PKG}.functions.perplexity.train_char_bigram":
+        "test_model_pipeline::test_distributed_trainers_match_local",
+    f"{PKG}.operators.similarity.cosine":
+        "test_dedup_similarity::test_arrow_cosine_equals_expression_cosine",
+    f"{PKG}.operators.similarity.signbit_sketch":
+        "test_dedup_similarity::test_arrow_sketch_equals_expression_sketch",
 }
 
 
@@ -71,6 +85,11 @@ def _module_file(name: str) -> str | None:
     return None
 
 
+def _parse(path: str) -> ast.Module:
+    with open(path) as fh:
+        return ast.parse(fh.read())
+
+
 def _imported_names(path: str, name: str) -> set[str]:
     """Dotted names ``path`` (module ``name``) may import, with every
     parent package: ``from a.b import c`` yields a, a.b and a.b.c
@@ -78,9 +97,7 @@ def _imported_names(path: str, name: str) -> set[str]:
     module's own package; function-local imports count too."""
     package = name if path.endswith("__init__.py") else name.rpartition(".")[0]
     found = []
-    with open(path) as fh:
-        tree = ast.parse(fh.read())
-    for node in ast.walk(tree):
+    for node in ast.walk(_parse(path)):
         if isinstance(node, ast.Import):
             found += [a.name for a in node.names]
         elif isinstance(node, ast.ImportFrom):
@@ -93,28 +110,79 @@ def _imported_names(path: str, name: str) -> set[str]:
     return {n.rsplit(".", k)[0] for n in found for k in range(n.count(".") + 1)}
 
 
-def test_every_package_module_is_reachable_from_an_entry_point():
-    """Every module under the package is imported, directly or through
-    other modules, by the driver entry, bench.py or perfbench. A module
-    only tests import is dead weight that drifts unnoticed."""
-    roots = [os.path.join(ROOT, "__spark_entry__.py"), os.path.join(ROOT, "bench.py")]
-    roots += sorted(glob.glob(os.path.join(ROOT, "perfbench", "*.py")))
-    todo = [(path, "") for path in roots]  # scripts: no package, no relative imports
-    reached: set[str] = set()
+def _reached() -> dict[str, str]:
+    """Package module name -> file, for every module the driver entry,
+    bench.py or perfbench imports, directly or through other modules."""
+    todo = [(path, "") for path in ROOTS]  # scripts: no package, no relative imports
+    reached: dict[str, str] = {}
     while todo:
         path, name = todo.pop()
         for dep in _imported_names(path, name):
             dep_path = _module_file(dep) if dep.split(".")[0] == PKG else None
             if dep_path and dep not in reached:
-                reached.add(dep)
+                reached[dep] = dep_path
                 todo.append((dep_path, dep))
+    return reached
 
+
+def test_every_package_module_is_reachable_from_an_entry_point():
+    """Every module under the package is imported, directly or through
+    other modules, by the driver entry, bench.py or perfbench. A module
+    only tests import is dead weight that drifts unnoticed."""
     modules = set()
     for path in glob.glob(os.path.join(ROOT, PKG, "**", "*.py"), recursive=True):
         rel = os.path.relpath(path, ROOT)[: -len(".py")].split(os.sep)
         modules.add(".".join(rel[:-1] if rel[-1] == "__init__" else rel))
-    orphans = sorted(modules - reached - set(UNREACHED_BY_DESIGN))
+    orphans = sorted(modules - set(_reached()))
     assert not orphans, f"modules no entry point imports: {orphans}"
-    # the exemption list stays exact: a module that gains a caller or
+
+
+def _defined(stmt: ast.stmt) -> list[str]:
+    """Names a top-level statement defines: a def, a class or the plain
+    names an assignment binds."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    targets = stmt.targets if isinstance(stmt, ast.Assign) else []
+    if isinstance(stmt, ast.AnnAssign):
+        targets = [stmt.target]
+    return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+
+
+def _references(node: ast.AST) -> set[str]:
+    """Identifiers ``node`` mentions: names, attributes, import aliases
+    and identifier-shaped string constants (perfbench names the
+    functions it patches by string)."""
+    found = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            found.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            found.add(n.attr)
+        elif isinstance(n, ast.alias):
+            found.update(n.name.split("."))
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if n.value.isidentifier():
+                found.add(n.value)
+    return found
+
+
+def test_every_top_level_name_is_used_outside_tests():
+    """Every top-level def, class and constant of a reached module is
+    referenced by a reached module or a root script outside its own
+    definition; a name only tests call is dead weight. Names are matched
+    by identifier, not resolved per module, so a shared name counts as
+    used wherever one of its namesakes is."""
+    used: set[str] = set()
+    defined: set[str] = set()
+    for name, path in [("", p) for p in ROOTS] + sorted(_reached().items()):
+        for stmt in _parse(path).body:
+            own = _defined(stmt)
+            used |= _references(stmt) - set(own)
+            if name:
+                defined |= {f"{name}.{n}" for n in own if not n.startswith("__")}
+    unused = {q for q in defined if q.rpartition(".")[2] not in used}
+    orphans = sorted(unused - set(TEST_REFERENCES))
+    assert not orphans, f"top-level names only tests reach: {orphans}"
+    # the exemption map stays exact: a reference that gains a caller or
     # disappears leaves it
-    assert sorted(set(UNREACHED_BY_DESIGN) - (modules - reached)) == []
+    assert sorted(set(TEST_REFERENCES) - unused) == []

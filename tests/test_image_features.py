@@ -1,75 +1,33 @@
-"""Multimodal feature-extraction plumbing: decode -> resize -> embed
-(mapInPandas), and embedding-cosine near-dup over the result."""
+"""Image codecs (real PNG, real baseline JFIF, synthetic stream): roundtrip,
+corrupt-stream and fuzz behaviour, and the decode verdict the Spark
+prepare pass derives from them."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
-from stop_sync_osm_atlas_spark.functions.image import image_features, synth_pixels
-from stop_sync_osm_atlas_spark.operators.similarity import cosine_pairs
+from stop_sync_osm_atlas_spark.functions.image import (
+    decode_image_full,
+    decode_validate_inline,
+    encode_image,
+    psnr,
+    synth_pixels,
+)
 from stop_sync_osm_atlas_spark.schemas import PAIRS_SCHEMA
 
 
-@pytest.fixture(scope="module")
-def feats(spark, fixture_paths):
-    pairs = spark.read.schema(PAIRS_SCHEMA).parquet(fixture_paths["pairs"])
-    return image_features(pairs).toPandas(), pairs.count()
-
-
-def test_feature_shapes(feats):
-    pdf, n = feats
-    assert len(pdf) == n
-    good = pdf[pdf["ok"]]
-    assert len(good) > 0
-    assert good["embedding"].map(len).eq(64).all()
-    bad = pdf[~pdf["ok"]]
-    assert len(bad) > 0  # planted corrupt rows
-    assert bad["embedding"].isna().all()
-
-
-def test_feature_values_match_numpy(feats, fixture_1k):
-    """Spot-check one decodable row against a direct numpy computation."""
-    pdf, _ = feats
-    row = pdf[pdf["ok"]].iloc[0]
-    src = fixture_1k.pairs.set_index("image_id").loc[row["image_id"]]
-    import struct as st
-
-    from stop_sync_osm_atlas_spark.functions.image import MAGIC, decode_image
-
-    px, w, h, fmt, err = decode_image(src["bytes"])
-    assert err is None
-    assert abs(px.astype(float).mean(axis=(0, 1))[0] - row["mean_r"]) < 1e-9
-    gray = px.astype(float).mean(axis=2)
-    assert abs(gray.std() - row["std_gray"]) < 1e-9
-
-
-def test_pixel_embedding_neardup(spark):
-    """Near-identical images (same seed, jpeg vs png) land at cosine ~1;
-    unrelated seeds do not."""
-    from stop_sync_osm_atlas_spark.functions.image import encode_image
-
-    rows = [
-        ("a", encode_image(1, 64, 64, "png")),
-        ("b", encode_image(1, 64, 64, "jpeg")),  # lossy twin of a
-        ("c", encode_image(2**40 + 5, 64, 64, "png")),
-    ]
+def _dec_ok(spark, rows) -> dict[str, bool]:
+    """image_id -> dec_ok of the Spark prepare pass over (id, bytes, w,
+    h, fmt) rows."""
     pdf = pd.DataFrame(
         [
-            dict(image_id=i, bytes=b, w=64, h=64, fmt="png", caption="x", phash=0)
-            for i, b in rows
+            dict(image_id=i, bytes=b, w=w, h=h, fmt=f, caption="x", phash=0)
+            for i, b, w, h, f in rows
         ]
     )
     pairs = spark.createDataFrame(pdf, PAIRS_SCHEMA)
-    emb = image_features(pairs).where(F.col("ok")).select(
-        F.col("image_id").alias("vec_id"), "embedding"
-    )
-    out = cosine_pairs(emb, threshold=0.999).toPandas()
-    got = set(zip(out["a_id"], out["b_id"]))
-    assert ("a", "b") in got
-    assert ("a", "c") not in got and ("b", "c") not in got
+    return dict(decode_validate_inline(pairs).select("image_id", "dec_ok").collect())
 
 
 def test_real_png_roundtrip_and_formats():
@@ -272,38 +230,30 @@ def test_png_decoder_fuzz_never_raises():
 
 
 def test_real_png_through_spark_operators(spark):
-    """The Spark-side operators decode REAL PNG bytes end-to-end:
-    decode_stats runs the genuine roundtrip PSNR (inf) and flags a
-    CRC-corrupted sibling; image_features extracts from the real
-    stream."""
-    from stop_sync_osm_atlas_spark.functions.image import (
-        decode_stats,
-        encode_image,
-    )
-
+    """The Spark prepare pass decodes REAL PNG bytes end-to-end: the
+    real stream and a lossy sibling pass, a CRC-corrupted copy fails.
+    At codec level the PNG roundtrip is exact (PSNR inf) and the lossy
+    one lands in [40, inf)."""
     ok_png = encode_image(11, 32, 32, "png")
     corrupt = bytearray(ok_png)
     corrupt[bytes(ok_png).index(b"IDAT") + 9] ^= 0x55
-    rows = [
-        ("real", ok_png, 32, 32, "png"),
-        ("crc", bytes(corrupt), 32, 32, "png"),
-        ("lossy", encode_image(11, 32, 32, "jpeg"), 32, 32, "jpeg"),
-    ]
-    pdf = pd.DataFrame(
+    lossy = encode_image(11, 32, 32, "jpeg")
+    ok = _dec_ok(
+        spark,
         [
-            dict(image_id=i, bytes=b, w=w, h=h, fmt=f, caption="x", phash=0)
-            for i, b, w, h, f in rows
-        ]
+            ("real", ok_png, 32, 32, "png"),
+            ("crc", bytes(corrupt), 32, 32, "png"),
+            ("lossy", lossy, 32, 32, "jpeg"),
+        ],
     )
-    pairs = spark.createDataFrame(pdf, PAIRS_SCHEMA)
-    st = decode_stats(pairs).toPandas().set_index("image_id")
-    assert st.loc["real", "ok"] and st.loc["real", "psnr"] == float("inf")
-    assert not st.loc["crc", "ok"] and st.loc["crc", "err"] == "png_crc_mismatch"
-    assert st.loc["lossy", "ok"] and 40 <= st.loc["lossy", "psnr"] < float("inf")
+    assert ok == {"real": True, "crc": False, "lossy": True}
 
-    feats = image_features(pairs).toPandas().set_index("image_id")
-    assert feats.loc["real", "ok"] and len(feats.loc["real", "embedding"]) == 64
-    assert not feats.loc["crc", "ok"]
+    truth = synth_pixels(11, 32, 32)
+    px, _, _, _, seed, err = decode_image_full(ok_png)
+    assert err is None and seed == 11 and psnr(px, truth) == float("inf")
+    assert decode_image_full(bytes(corrupt))[-1] == "png_crc_mismatch"
+    px, _, _, _, _, err = decode_image_full(lossy)
+    assert err is None and 40 <= psnr(px, truth) < float("inf")
 
 
 def test_png_multi_idat_chunks_decode():
@@ -408,7 +358,7 @@ def test_real_jpeg_corrupt_streams_and_bomb_guard():
     # ENTROPY-region truncation: T.81 pads past the end with zero bits,
     # so a salvage decode (correct shape) OR a clean error are both
     # conforming — never an exception; the garbage tail then fails the
-    # decode_stats PSNR invariant instead
+    # prepare pass's >= 40 dB PSNR invariant instead
     for cut in (len(good) // 2, len(good) - 3):
         px, w, h, fmt, seed, err = decode_image_full(good[:cut])
         if err is None:
@@ -510,33 +460,19 @@ def test_jpeg_decoder_fuzz_never_raises():
 
 
 def test_real_jpeg_through_spark_operators(spark):
-    """decode_stats over real JFIF rows: the lossy roundtrip PSNR is
-    finite and >= 40; a stream whose SOF dims disagree with the
-    metadata errors per-row; image_features extracts from the real
-    stream."""
-    from stop_sync_osm_atlas_spark.functions.image import (
-        decode_stats,
-        encode_image,
-        image_features,
-    )
-
+    """The Spark prepare pass over real JFIF rows: the real stream
+    passes, a stream whose SOF dims disagree with the metadata fails.
+    At codec level the lossy roundtrip PSNR is finite and >= 40."""
     ok_jpg = encode_image(80, 32, 32, "jpeg")
-    rows = [
-        ("real", ok_jpg, 32, 32, "jpeg"),
-        ("dims", ok_jpg, 16, 32, "jpeg"),  # metadata lies about w
-    ]
-    pdf = pd.DataFrame(
+    ok = _dec_ok(
+        spark,
         [
-            dict(image_id=i, bytes=b, w=w, h=h, fmt=f, caption="x", phash=0)
-            for i, b, w, h, f in rows
-        ]
+            ("real", ok_jpg, 32, 32, "jpeg"),
+            ("dims", ok_jpg, 16, 32, "jpeg"),  # metadata lies about w
+        ],
     )
-    pairs = spark.createDataFrame(pdf, PAIRS_SCHEMA)
-    st = decode_stats(pairs).toPandas().set_index("image_id")
-    assert st.loc["real", "ok"]
-    assert 40.0 <= st.loc["real", "psnr"] < float("inf")
-    assert not st.loc["dims", "ok"]
-    assert st.loc["dims", "err"] == "dims_mismatch_metadata"
+    assert ok == {"real": True, "dims": False}
 
-    ft = image_features(pairs).toPandas().set_index("image_id")
-    assert ft.loc["real", "ok"] and len(ft.loc["real", "embedding"]) == 64
+    px, w, h, fmt, seed, err = decode_image_full(ok_jpg)
+    assert err is None and (w, h, fmt, seed) == (32, 32, "jpeg", 80)
+    assert 40.0 <= psnr(px, synth_pixels(80, 32, 32)) < float("inf")

@@ -18,17 +18,6 @@ def _plan(df) -> str:
     )
 
 
-def test_decode_stats_prunes_columns(spark, fixture_paths):
-    """decode_stats must not scan caption/phash (bytes are heavy enough)."""
-    from stop_sync_osm_atlas_spark.functions.image import decode_stats
-    from stop_sync_osm_atlas_spark.schemas import PAIRS_SCHEMA
-
-    pairs = spark.read.schema(PAIRS_SCHEMA).parquet(fixture_paths["pairs"])
-    plan = _plan(decode_stats(pairs))
-    scan = [seg for seg in plan.split("\n\n") if "Scan parquet" in seg][0]
-    assert "caption" not in scan and "phash" not in scan, scan
-
-
 def test_neardup_shuffles_slim_projection(spark, fixture_paths):
     """The near-dup shuffle must carry only (image_id, phash, keys) —
     never bytes/caption."""
@@ -223,7 +212,7 @@ def test_decisions_sink_partition_pruning(spark, tmp_path):
     a PartitionFilter on the scan (directory pruning — the parquet
     stand-in for Iceberg partition/zone-map skipping, sources/io.py),
     and the pruned scan must actually touch only that bucket's files."""
-    from stop_sync_osm_atlas_spark.sources.io import read_table, write_table
+    from stop_sync_osm_atlas_spark.sources.io import write_table
 
     dec = spark.range(0, 256).select(
         F.concat(F.lit("img:"), F.col("id")).alias("image_id"),
@@ -240,7 +229,7 @@ def test_decisions_sink_partition_pruning(spark, tmp_path):
         scan = df._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
         return scan.metrics().apply("numFiles").value()
 
-    rd = read_table(spark, path).filter(F.col("part_bucket") == 3).select("image_id")
+    rd = spark.read.parquet(path).filter(F.col("part_bucket") == 3).select("image_id")
     plan = _plan(rd)
     scan = [
         seg for seg in plan.split("\n\n")
@@ -252,7 +241,7 @@ def test_decisions_sink_partition_pruning(spark, tmp_path):
     # pruning is physical, not cosmetic: the filtered scan's numFiles
     # metric must be a strict fraction of the full relation's
     n_pruned = scan_num_files(rd)
-    n_all = scan_num_files(read_table(spark, path).select("image_id"))
+    n_all = scan_num_files(spark.read.parquet(path).select("image_id"))
     assert 0 < n_pruned < n_all, (n_pruned, n_all)
 
 
